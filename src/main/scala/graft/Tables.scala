@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.operators.MemoCache
 
 /** Parquet table loaders for the driver-generated star schema.
   *
@@ -14,7 +17,63 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    ntzToLtz(spark.read.parquet(s"$sfDir/$name.parquet"))
+    ntzToLtz(parquet(spark, s"$sfDir/$name.parquet"))
+
+  /** The parquet read of corpus tables and train-once stores. With
+    * `schema` given the read takes it as is; otherwise the inferred
+    * schema is served from [[schemaMemo]]. Spark 4 infers a parquet
+    * schema with a one-task footer job on EVERY `spark.read.parquet`,
+    * even for one file, so a warm call that re-reads a table it read
+    * before would pay one Spark job per table for a schema that
+    * cannot have changed. A hit reads with the cached schema and
+    * starts no job. Only the schema is cached: rows are always read
+    * fresh.
+    */
+  def parquet(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame = {
+    val s = schema.getOrElse(
+      schemaMemo.getOrCompute(SchemaKey(spark, path, fingerprint(spark, path),
+        SchemaConfs.map(spark.conf.get)))(spark.read.parquet(path).schema))
+    spark.read.schema(s).parquet(path)
+  }
+
+  /** The confs that change how a parquet footer converts to a Spark
+    * schema (nanos as long, NTZ inference, binary as string, INT96).
+    */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp")
+
+  /** `files` is the path's corpus fingerprint: a corpus rewritten at
+    * the same path changes some file's name, length or mtime, so it
+    * misses and is inferred again.
+    */
+  private case class SchemaKey(spark: SparkSession, path: String,
+      files: Seq[(String, Long, Long)], confs: Seq[String])
+
+  private val schemaMemo = new MemoCache[SchemaKey, StructType](
+    capacity = 256, _.spark)(_ => ())
+
+  /** One recursive Hadoop listing of `path`: (name, length, mtime) of
+    * every file, sorted. A missing path lists as empty, and the
+    * inference read then raises Spark's own error.
+    */
+  private def fingerprint(spark: SparkSession,
+      path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val files = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
+    files.result().sorted
+  }
 
   /** The driver-generated parquet stores NAIVE (no-tz) µs timestamps.
     * Our own sessions read them as TIMESTAMP directly

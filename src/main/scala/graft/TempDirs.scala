@@ -29,6 +29,16 @@ object TempDirs {
     p
   }
 
+  /** Delete a directory made by [[create]] now, not at JVM exit — the
+    * release hook of memoized TempDir stores, so an evicted store
+    * frees its disk in a long session.
+    */
+  def delete(path: String): Unit = {
+    val p = java.nio.file.Paths.get(path)
+    registered.remove(p)
+    deleteRecursively(p)
+  }
+
   private def deleteRecursively(p: Path): Unit =
     try {
       if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
@@ -36,5 +46,5 @@ object TempDirs {
         try children.forEach(deleteRecursively) finally children.close()
       }
       Files.deleteIfExists(p)
-    } catch { case _: java.io.IOException => () } // best-effort at exit
+    } catch { case _: java.io.IOException => () } // best-effort
 }

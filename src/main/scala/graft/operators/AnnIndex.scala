@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.TempDirs
+import graft.{Tables, TempDirs}
 import graft.functions.CatalystExprs.{dot_product, pq_adc, pq_adc_table}
 
 /** PERSISTED ANN index artifacts (SURVEY §2.D) — the
@@ -130,7 +130,7 @@ object AnnIndex {
     * assignments to one full build — the spec pins query equality.
     */
   def appendIvf(spark: SparkSession, batch: DataFrame, dir: String): Unit = {
-    val cent = spark.read.parquet(s"$dir/centroids")
+    val cent = Tables.parquet(spark, s"$dir/centroids")
     val assign = Similarity.centroidRanks(batch, cent)
       .filter(col("crank") === 1)
       .select(col("vec_id"), col("cid"))
@@ -150,7 +150,7 @@ object AnnIndex {
     */
   def queryIvf(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int = 10, nProbe: Int = Similarity.IvfProbes): DataFrame = {
-    val cent = spark.read.parquet(s"$dir/centroids")
+    val cent = Tables.parquet(spark, s"$dir/centroids")
     val byQ = Window.partitionBy(col("query_id"))
       .orderBy(col("csim").desc, col("cid"))
     val probes = queries.crossJoin(broadcast(cent))
@@ -160,7 +160,7 @@ object AnnIndex {
         row_number().over(byQ).as("crank"))
       .filter(col("crank") <= nProbe)
       .select(col("cid"), col("query_id"), col("qv"), col("qnorm"))
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = Tables.parquet(spark, s"$dir/codes")
     val scored = codes.join(broadcast(probes), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos",
@@ -195,7 +195,7 @@ object AnnIndex {
     * drift from the one-shot operator's.
     */
   def buildNsw(spark: SparkSession, dir: String): Unit = {
-    val cent = spark.read.parquet(s"$dir/centroids")
+    val cent = Tables.parquet(spark, s"$dir/centroids")
     val c2 = cent.select(col("cid").as("nid"), col("cv").as("nv"),
       col("cnorm").as("nnorm"))
     val cpairs = cent.join(broadcast(c2), col("cid") =!= col("nid"))
@@ -222,8 +222,8 @@ object AnnIndex {
     */
   def queryIvfNsw(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int = 10, nProbe: Int = Similarity.IvfProbes): DataFrame = {
-    val cent = spark.read.parquet(s"$dir/centroids")
-    val graph = spark.read.parquet(s"$dir/nsw")
+    val cent = Tables.parquet(spark, s"$dir/centroids")
+    val graph = Tables.parquet(spark, s"$dir/nsw")
     val byQ = Window.partitionBy(col("query_id"))
       .orderBy(col("csim").desc, col("cid"))
     val ranked = queries.crossJoin(broadcast(cent))
@@ -239,7 +239,7 @@ object AnnIndex {
       .unionByName(hop).distinct()
       .join(queries, "query_id")
       .select(col("cid"), col("query_id"), col("qv"), col("qnorm"))
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = Tables.parquet(spark, s"$dir/codes")
     val scored = codes.join(broadcast(probes), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos",
@@ -275,7 +275,7 @@ object AnnIndex {
     */
   def queryIvfRange(spark: SparkSession, dir: String, queries: DataFrame,
       tau: Double = 0.35, nProbe: Int = Similarity.IvfProbes): DataFrame = {
-    val cent = spark.read.parquet(s"$dir/centroids")
+    val cent = Tables.parquet(spark, s"$dir/centroids")
     val byQ = Window.partitionBy(col("query_id"))
       .orderBy(col("csim").desc, col("cid"))
     val probes = queries.crossJoin(broadcast(cent))
@@ -285,7 +285,7 @@ object AnnIndex {
         row_number().over(byQ).as("crank"))
       .filter(col("crank") <= nProbe)
       .select(col("cid"), col("query_id"), col("qv"), col("qnorm"))
-    spark.read.parquet(s"$dir/codes")
+    Tables.parquet(spark, s"$dir/codes")
       .join(broadcast(probes), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos",
@@ -314,7 +314,7 @@ object AnnIndex {
     */
   def indexStats(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ivfArtifacts(spark, sfDir)
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = Tables.parquet(spark, s"$dir/codes")
     val tot = codes.agg(count(lit(1)).as("total"))
     codes.groupBy("cid").agg(count(lit(1)).as("n_vectors"))
       .crossJoin(broadcast(tot))
@@ -359,13 +359,13 @@ object AnnIndex {
     */
   def maintainIvf(spark: SparkSession, dir: String, batch: DataFrame)
       : MaintainReport = {
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = Tables.parquet(spark, s"$dir/codes")
     // ONE bounded occupancy pass: total vectors + hottest cell
     val occ = codes.groupBy("cid").agg(count(lit(1)).as("nv"))
       .agg(sum(col("nv")).as("n"), max(col("nv")).as("hot")).first()
     val n = occ.getLong(0)
     val hot = occ.getLong(1)
-    val cells = spark.read.parquet(s"$dir/centroids").count()
+    val cells = Tables.parquet(spark, s"$dir/centroids").count()
     val m = batch.count()
     val hotShare = hot.toDouble / n.toDouble
     val target = math.floor(math.sqrt((n + m).toDouble)).toLong
@@ -382,8 +382,8 @@ object AnnIndex {
       buildIvf(full, dir, cells = math.max(cells, target).toInt)
     } else appendIvf(spark, batch, dir)
     MaintainReport(decision, n, m, cells, hotShare,
-      spark.read.parquet(s"$dir/centroids").count(),
-      spark.read.parquet(s"$dir/codes").count())
+      Tables.parquet(spark, s"$dir/centroids").count(),
+      Tables.parquet(spark, s"$dir/codes").count())
   }
 
   /** Gated entry: build over the id-lower half at the standard 16
@@ -476,10 +476,10 @@ object AnnIndex {
     */
   private def loadCodebooks(spark: SparkSession, dir: String)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val coarse = spark.read.parquet(s"$dir/centroids")
+    val coarse = Tables.parquet(spark, s"$dir/centroids")
       .orderBy("cid").collect()
       .map(r => r.getSeq[Double](r.fieldIndex("cv")).toArray)
-    val pqRows = spark.read.parquet(s"$dir/pq")
+    val pqRows = Tables.parquet(spark, s"$dir/pq")
       .orderBy("j", "c").collect()
       .map(r => (r.getInt(r.fieldIndex("j")),
         r.getSeq[Double](r.fieldIndex("cv")).toArray))
@@ -505,7 +505,7 @@ object AnnIndex {
       explode(centroid_probes(col("qv"), col("qnorm"), coarse, nProbe))
         .as("cid"),
       pq_adc_table(col("qv"), col("qnorm"), cb).as("tbl"))
-    val codes = spark.read.parquet(s"$dir/codes")
+    val codes = Tables.parquet(spark, s"$dir/codes")
     val approx = codes.join(broadcast(q), Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("acos", pq_adc(col("tbl"), col("code")) / col("xnorm"))

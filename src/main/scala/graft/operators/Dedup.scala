@@ -1373,7 +1373,8 @@ object Dedup {
     * runs exactly once per session.
     */
   private[graft] val posDirMemo = new MemoCache[
-    (SparkSession, String, Int), String](capacity = 4, _._1)(_ => ())
+    (SparkSession, String, Int), String](capacity = 4, _._1)(
+    graft.TempDirs.delete)
 
   private def substrStore(spark: SparkSession, sfDir: String,
       k: Int): (DataFrame, DataFrame) = {
@@ -1381,11 +1382,12 @@ object Dedup {
       val d = graft.TempDirs.create("graft_substr_pos").toString
       posOver(Tables.documents(spark, sfDir), k)
         .write.mode("overwrite").parquet(s"$d/pos")
-      posCountsOver(spark.read.parquet(s"$d/pos"))
+      posCountsOver(Tables.parquet(spark, s"$d/pos"))
         .write.mode("overwrite").parquet(s"$d/counts")
       d
     }
-    (spark.read.parquet(s"$dir/pos"), spark.read.parquet(s"$dir/counts"))
+    (Tables.parquet(spark, s"$dir/pos"),
+      Tables.parquet(spark, s"$dir/counts"))
   }
 
   /** Positions are per-(doc, i) unique, so count-by-hash = total

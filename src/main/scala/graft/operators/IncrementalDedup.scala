@@ -123,7 +123,7 @@ object IncrementalDedup {
       docs.crossJoin(broadcast(thr)).filter(pred(col("t"))).drop("t")
     val dir = TempDirs.create("graft_fp_store").toString
     writeFingerprints(half(col("doc_id") <= _), dir, "r1")
-    val store = spark.read.parquet(s"$dir/fp")
+    val store = Tables.parquet(spark, s"$dir/fp")
     decideWithStore(store, half(col("doc_id") > _))
   }
 }

@@ -69,7 +69,7 @@ object IncrementalMv {
       ev.crossJoin(broadcast(thr)).filter(pred(col("t"))).drop("t")
     val dir = TempDirs.create("graft_mv_store").toString
     writeRollup(half(to_date(col("ts")) <= _), dir, "r1")
-    val store = spark.read.parquet(s"$dir/mv")
+    val store = Tables.parquet(spark, s"$dir/mv")
     mergeWithStore(store, half(to_date(col("ts")) > _))
   }
 }

@@ -986,7 +986,7 @@ object Pipeline {
     // run 2: decide vs artifacts alone, append only the new keepers
     val b2 = half(col("doc_id") > _)
     IncrementalDedup
-      .decideWithStore(spark.read.parquet(s"$fpDir/fp"), b2)
+      .decideWithStore(Tables.parquet(spark, s"$fpDir/fp"), b2)
       .join(b2.select("doc_id"), "doc_id")
       .filter(!col("is_dup"))
       .select(shardOf(col("doc_id")).as("shard"), col("doc_id"),

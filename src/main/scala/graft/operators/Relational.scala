@@ -2857,48 +2857,50 @@ object Relational {
         .agg(sum(col("s").cast(d289)).as("raw"))
         .observe(obs, sum(col("raw")).as("t"))
         .localCheckpoint()
-      val t = obs.get("t").asInstanceOf[java.math.BigDecimal]
+      // an empty edge graph observes a null total over zero rows:
+      // any divisor then yields the same empty vector
+      val t = Option(obs.get("t").asInstanceOf[java.math.BigDecimal])
+        .fold(0.0)(_.doubleValue)
       raw.select(col("node"),
-        round(col("raw").cast("double") / lit(t.doubleValue), 9).as("s"))
+        round(col("raw").cast("double") / lit(t), 9).as("s"))
     }
 
     // hs(k) = hub vector entering round k+1 (hs(0) = all-ones init);
-    // as(k-1) = authority vector after round k; l1s(k-2) = L1 step
-    // between as of rounds k-1 and k (defined from round 2)
+    // as(k-1) = authority vector after round k; l1s(k) = L1 step
+    // between as of rounds k-1 and k (defined from round 2), computed
+    // on first read — a fixed-round caller never pays for it
     private val hs = scala.collection.mutable.ArrayBuffer[DataFrame](
       edges.select(col("u").as("node")).distinct()
         .select(col("node"), lit(1.0).as("s")))
     private val as = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    private val l1s = scala.collection.mutable.ArrayBuffer[Double]()
+    private val l1s = scala.collection.mutable.Map[Int, Double]()
 
-    /** Extend the trajectory to `rounds` full rounds. */
+    /** Extend the trajectory to `rounds` full rounds: two jobs (one
+      * per half-step) per extension round.
+      */
     def ensure(rounds: Int): Unit = synchronized {
       while (as.length < rounds) {
         val a2 = halfStep(hs.last, "u", "p")
-        val h2 = halfStep(a2, "p", "u")
-        if (as.nonEmpty) {
-          // ONE bounded 1-row driver read per extension round: both
-          // vectors are cheap projections over their checkpoints, so
-          // the L1 agg re-runs no edge join. Both vectors live on
-          // the same node set (every part with a sale), so the left
-          // join's null rows — none in practice — contribute exactly
-          // what an inner-join sum did: nothing (null abs-diff is
-          // skipped by sum).
-          val l1 = a2
-            .join(sized(as.last.select(col("node"), col("s").as("prev"))),
-              Seq("node"), "left")
-            .agg(coalesce(sum(abs(col("s") - col("prev"))), lit(0.0)))
-            .first().getDouble(0)
-          l1s += l1
-        }
+        hs += halfStep(a2, "p", "u")
         as += a2
-        hs += h2
       }
     }
     def a(round: Int): DataFrame = synchronized(as(round - 1))
     def h(round: Int): DataFrame = synchronized(hs(round))
-    /** L1 step into `round` (≥ 2). */
-    def l1(round: Int): Double = synchronized(l1s(round - 2))
+    /** L1 step into `round` (≥ 2, already ensured). ONE bounded 1-row
+      * collect on first access: both vectors are cheap
+      * projections over their retained checkpoints, so the L1 agg
+      * re-runs no edge join. Both vectors live on the same node set
+      * (every part with a sale), so the left join's null rows — none
+      * in practice — contribute exactly what an inner-join sum did:
+      * nothing (null abs-diff is skipped by sum).
+      */
+    def l1(round: Int): Double = synchronized(l1s.getOrElseUpdate(round,
+      as(round - 1)
+        .join(sized(as(round - 2).select(col("node"), col("s").as("prev"))),
+          Seq("node"), "left")
+        .agg(coalesce(sum(abs(col("s") - col("prev"))), lit(0.0)))
+        .first().getDouble(0)))
     /** Evict hook: free every checkpointed round. */
     private[graft] def release(): Unit = synchronized(
       (as ++ hs).foreach(MemoCache.freeLocalCheckpoint))

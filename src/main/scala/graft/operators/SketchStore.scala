@@ -70,7 +70,7 @@ object SketchStore {
     * matrices) — one row per event type.
     */
   def mergeArtifacts(spark: SparkSession, dir: String): DataFrame = {
-    val types = spark.read.parquet(s"$dir/types")
+    val types = Tables.parquet(spark, s"$dir/types")
       .groupBy("event_type")
       .agg(
         ThetaSketch.theta_union(col("sk_users"), ThetaK).as("sk_users"),
@@ -80,7 +80,7 @@ object SketchStore {
     // to (cell, count), sum per cell, fold back into ONE matrix row.
     // Matrix size is a constant (depth × width), so this never grows
     // with data volume — only with the number of persisted runs.
-    val cms = spark.read.parquet(s"$dir/global")
+    val cms = Tables.parquet(spark, s"$dir/global")
       .select(posexplode(col("sk_cms")).as(Seq("pos", "c")))
       .groupBy("pos").agg(sum(col("c")).as("c"))
       .groupBy()

@@ -880,7 +880,8 @@ object TextAnalysis {
     * the session.
     */
   private[graft] val lmDirMemo = new MemoCache[
-    (SparkSession, String, Long), String](capacity = 4, _._1)(_ => ())
+    (SparkSession, String, Long), String](capacity = 4, _._1)(
+    graft.TempDirs.delete)
 
   def lmPersisted(spark: SparkSession, sfDir: String,
       minCount: Long = 2): DataFrame = {
@@ -916,9 +917,9 @@ object TextAnalysis {
     }
     // SERVE: held-out half scored from artifacts only
     scoreWithLm(half(col("doc_id") > _),
-      spark.read.parquet(s"$dir/uni"),
-      spark.read.parquet(s"$dir/big"),
-      spark.read.parquet(s"$dir/meta"))
+      Tables.parquet(spark, s"$dir/uni"),
+      Tables.parquet(spark, s"$dir/big"),
+      Tables.parquet(spark, s"$dir/meta"))
   }
 
   /** Score any (doc_id, text) frame against persisted LM count

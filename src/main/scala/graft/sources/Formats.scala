@@ -21,7 +21,7 @@ object Formats {
   }
 
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.Tables.parquet(spark, path)
 
   def writeCsv(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite)
@@ -155,7 +155,7 @@ object Formats {
     */
   def fileMetadataAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    spark.read.parquet(s"$sfDir/events.parquet")
+    graft.Tables.parquet(spark, s"$sfDir/events.parquet")
       .select(
         regexp_extract(col("_metadata.file_path"), "([^/]+)$", 1)
           .as("file"),
@@ -314,7 +314,7 @@ object Formats {
         .partitionBy("event_type").mode(SaveMode.Overwrite).parquet(d)
       d
     })
-    spark.read.parquet(dir)
+    graft.Tables.parquet(spark, dir)
       .filter(col("event_type") === "purchase")
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"),
         col("event_type"))

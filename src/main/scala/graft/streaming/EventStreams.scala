@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** Structured Streaming twins of the batch event operators
@@ -177,7 +178,7 @@ object EventStreams {
   private def eventFeed(spark: SparkSession, sfDir: String,
       prefix: String): (DataFrame, java.nio.file.Path, DataFrame) = {
     val path = s"$sfDir/events.parquet"
-    val raw = spark.read.parquet(path)
+    val raw = graft.Tables.parquet(spark, path)
     val dir = graft.TempDirs.create(prefix)
     java.nio.file.Files.createSymbolicLink(
       dir.resolve("events.parquet"), java.nio.file.Paths.get(path))
@@ -215,6 +216,25 @@ object EventStreams {
     sentinel.write.mode("append").parquet(dir.toString)
   }
 
+  /** Drain `stream` into a per-run parquet FILE sink (append mode):
+    * `drive` runs against the started query, which is stopped after
+    * whatever happens, and the committed output reads back through
+    * the sink's manifest with the query's own schema — so a stream
+    * that commits no file drains to an empty frame instead of failing
+    * schema inference, and the read-back starts no footer job.
+    */
+  private[graft] def drainToFiles(spark: SparkSession, stream: Dataset[_],
+      prefix: String)(drive: StreamingQuery => Unit): DataFrame = {
+    val out = graft.TempDirs.create(s"${prefix}_out").toString
+    val ckpt = graft.TempDirs.create(s"${prefix}_ckpt").toString
+    val q = stream.writeStream
+      .format("parquet").option("path", out)
+      .option("checkpointLocation", ckpt)
+      .outputMode("append").start()
+    try drive(q) finally q.stop()
+    graft.Tables.parquet(spark, out, Some(stream.schema))
+  }
+
   /** The flatMapGroupsWithState session builder behind the driver's
     * batch hash gate: stream the events parquet through the file
     * source, then append a far-future sentinel file so the watermark
@@ -236,20 +256,13 @@ object EventStreams {
       // stream_dedup hit at sf10; guide §5 — the driver should do
       // almost no data work). The file sink streams each batch to
       // disk through its manifest; the read-back is manifest-scoped.
-      val out = graft.TempDirs.create("graft_stream_sess_out")
-      val ckpt = graft.TempDirs.create("graft_stream_sess_ckpt")
       withScaledStateFor(spark, sfDir) {
-        val q = sessionize(events).writeStream
-          .format("parquet").option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        try {
+        drainToFiles(spark, sessionize(events), "graft_stream_sess") { q =>
           q.processAllAvailable()
           appendSentinel(spark, raw, dir)
           q.processAllAvailable()
-        } finally q.stop()
+        }
       }
-      spark.read.parquet(out.toString)
     }
     val byUser = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("session_start"))
@@ -285,20 +298,13 @@ object EventStreams {
         .select(col("user_id"), col("s"), col("e"), col("n_events"))
       // parquet file sink for the corpus-sized session output — the
       // stream_dedup shape (see sessionsFromFiles)
-      val out = graft.TempDirs.create("graft_stream_swin_out")
-      val ckpt = graft.TempDirs.create("graft_stream_swin_ckpt")
       withScaledStateFor(spark, sfDir) {
-        val q = sessions.writeStream
-          .format("parquet").option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        try {
+        drainToFiles(spark, sessions, "graft_stream_swin") { q =>
           q.processAllAvailable()
           appendSentinel(spark, raw, dir)
           q.processAllAvailable()
-        } finally q.stop()
+        }
       }
-      spark.read.parquet(out.toString)
     }
     drained
       .filter(col("user_id") =!= -1L)
@@ -318,7 +324,7 @@ object EventStreams {
   def purchaseClicksFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     val drained = graft.Tables.withNanosAsLong(spark) {
       val path = s"$sfDir/events.parquet"
-      val raw = spark.read.parquet(path)
+      val raw = graft.Tables.parquet(spark, path)
       val dir = graft.TempDirs.create("graft_stream_join")
       java.nio.file.Files.createSymbolicLink(
         dir.resolve("events.parquet"), java.nio.file.Paths.get(path))
@@ -331,16 +337,10 @@ object EventStreams {
       // parquet file sink: the join output is |purchases| ×
       // matching-clicks — corpus-proportional, the exact driver-copy
       // wall stream_dedup hit at sf10 (guide §5)
-      val out = graft.TempDirs.create("graft_stream_join_out")
-      val ckpt = graft.TempDirs.create("graft_stream_join_ckpt")
       withScaledStateFor(spark, sfDir) {
-        val q = purchaseClickJoin(events).writeStream
-          .format("parquet").option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        drainToFiles(spark, purchaseClickJoin(events),
+          "graft_stream_join")(_.processAllAvailable())
       }
-      spark.read.parquet(out.toString)
     }
     drained.select(
       col("purchase_id"), col("p_user").as("user_id"),
@@ -386,20 +386,13 @@ object EventStreams {
       // parquet file sink: the outer-join output is corpus-sized
       // (every purchase emits at least one row) — see
       // purchaseClicksFromFiles / sessionsFromFiles
-      val out = graft.TempDirs.create("graft_stream_ojoin_out")
-      val ckpt = graft.TempDirs.create("graft_stream_ojoin_ckpt")
       withScaledStateFor(spark, sfDir) {
-        val q = joined.writeStream
-          .format("parquet").option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        try {
+        drainToFiles(spark, joined, "graft_stream_ojoin") { q =>
           q.processAllAvailable()
           appendSentinel(spark, raw, dir)
           q.processAllAvailable()
-        } finally q.stop()
+        }
       }
-      spark.read.parquet(out.toString)
     }
     drained
       .filter(col("p_user") =!= -1L)
@@ -421,7 +414,7 @@ object EventStreams {
   def dedupFromFiles(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.withNanosAsLong(spark) {
       val path = s"$sfDir/events.parquet"
-      val raw = spark.read.parquet(path)
+      val raw = graft.Tables.parquet(spark, path)
       val dir = graft.TempDirs.create("graft_stream_dedup")
       java.nio.file.Files.createSymbolicLink(
         dir.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
@@ -442,16 +435,10 @@ object EventStreams {
       // The file sink streams each batch straight to disk through
       // its manifest; rows are identical, the driver never holds
       // them (guide §5: the driver should do almost no data work).
-      val out = graft.TempDirs.create("graft_stream_dedup_out")
-      val ckpt = graft.TempDirs.create("graft_stream_dedup_ckpt")
       withScaledStateFor(spark, sfDir) { withRocksDbState(spark) {
-        val q = dedupStream(events).writeStream
-          .format("parquet").option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+        drainToFiles(spark, dedupStream(events),
+          "graft_stream_dedup")(_.processAllAvailable())
       } }
-      spark.read.parquet(out.toString)
         .select(col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
           col("user_id"), col("event_type"), col("value"))
@@ -638,9 +625,10 @@ object EventStreams {
     */
   private def drainMemorySink(spark: SparkSession, name: String): DataFrame = {
     val dest = graft.TempDirs.create("graft_sink_drain").resolve("rows").toString
-    spark.table(name).write.mode("overwrite").parquet(dest)
+    val rows = spark.table(name)
+    rows.write.mode("overwrite").parquet(dest)
     spark.catalog.dropTempView(name)
-    spark.read.parquet(dest)
+    graft.Tables.parquet(spark, dest, Some(rows.schema))
   }
 
   /** Run a memory-sink stream body, dropping the per-call view if a
@@ -693,7 +681,7 @@ object EventStreams {
   def thetaFromFiles(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.withNanosAsLong(spark) {
       val path = s"$sfDir/events.parquet"
-      val raw = spark.read.parquet(path)
+      val raw = graft.Tables.parquet(spark, path)
       val dir = graft.TempDirs.create("graft_stream_theta_src")
       // symlink where the filesystem allows it (zero-copy doubling);
       // fall back to a real copy where symlink creation is
@@ -1068,7 +1056,7 @@ object EventStreams {
     */
   def lateDropFromFiles(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.withNanosAsLong(spark) {
-      val raw0 = spark.read.parquet(s"$sfDir/events.parquet")
+      val raw0 = graft.Tables.parquet(spark, s"$sfDir/events.parquet")
       def normalize(df: DataFrame): DataFrame =
         raw0.schema("ts").dataType match {
           case LongType => df.withColumn("ts",
@@ -1091,13 +1079,13 @@ object EventStreams {
       // micro-batch finalizes its closed windows); only THEN does the
       // earlier half land, entirely beyond the recovered watermark
       dumpFeedFile(feed, fresh, "a.parquet", 1000000000000L)
+      def counts = spark.readStream.schema(graft.Tables.parquet(spark,
+          feed.resolve("a.parquet").toString).schema)
+        .parquet(feed.toString)
+        .withWatermark("ts", "2 hours")
+        .groupBy(window(col("ts"), "1 hour"))
+        .agg(count(lit(1)).as("n"))
       def runOnce(): Unit = withScaledStateFor(spark, sfDir) {
-        val counts = spark.readStream.schema(
-            spark.read.parquet(feed.resolve("a.parquet").toString).schema)
-          .parquet(feed.toString)
-          .withWatermark("ts", "2 hours")
-          .groupBy(window(col("ts"), "1 hour"))
-          .agg(count(lit(1)).as("n"))
         val q = counts.writeStream
           .format("parquet").option("path", out.toString)
           .option("checkpointLocation", ckpt.toString)
@@ -1107,7 +1095,7 @@ object EventStreams {
       runOnce()
       dumpFeedFile(feed, late, "b.parquet", 1000000060000L)
       runOnce()
-      spark.read.parquet(out.toString)
+      graft.Tables.parquet(spark, out.toString, Some(counts.schema))
         .select(date_format(col("window.start"),
           "yyyy-MM-dd HH:mm:ss").as("window_start"), col("n"))
     }
@@ -1184,15 +1172,15 @@ object EventStreams {
       .parquet(feed.toString)
     val q = stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        val merged = Relational.mergeApply(spark.read.parquet(cur), batch,
-          "o_orderkey", Seq("o_orderstatus", "o_totalprice"))
+        val merged = Relational.mergeApply(graft.Tables.parquet(spark, cur),
+          batch, "o_orderkey", Seq("o_orderstatus", "o_totalprice"))
         val next = s"$tbl/v${id + 1}"
         merged.write.mode("overwrite").parquet(next)
         cur = next
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    spark.read.parquet(cur)
+    graft.Tables.parquet(spark, cur)
   }
 
   /** CHECKPOINT-RECOVERY streaming dedup (`stream_restart`) — the
@@ -1212,7 +1200,7 @@ object EventStreams {
   def dedupRestartFromFiles(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.withNanosAsLong(spark) {
       val path = s"$sfDir/events.parquet"
-      val raw = spark.read.parquet(path)
+      val raw = graft.Tables.parquet(spark, path)
       val feed = graft.TempDirs.create("graft_stream_restart_src")
       val ckpt = graft.TempDirs.create("graft_stream_restart_ckpt")
       val out = graft.TempDirs.create("graft_stream_restart_out")
@@ -1240,7 +1228,8 @@ object EventStreams {
       java.nio.file.Files.createSymbolicLink(
         feed.resolve("events_b.parquet"), java.nio.file.Paths.get(path))
       runOnce()
-      spark.read.parquet(out.toString)
+      graft.Tables.parquet(spark, out.toString,
+          Some(dedupStream(events).schema))
         .select(col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
           col("user_id"), col("event_type"), col("value"))
@@ -1274,11 +1263,11 @@ object EventStreams {
     def put(df: DataFrame): Unit =
       df.write.format("graft.sources.v2.GraftSinkSource")
         .option("path", dir).mode("append").save()
+    def tail = spark.readStream.format("graft.sources.v2.GraftSinkSource")
+      .schema(graft.sources.v2.GraftSink.Schema)
+      .option("path", dir).load()
     def runOnce(): Unit = {
-      val q = spark.readStream.format("graft.sources.v2.GraftSinkSource")
-        .schema(graft.sources.v2.GraftSink.Schema)
-        .option("path", dir).load()
-        .writeStream.format("parquet").option("path", out)
+      val q = tail.writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt).start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -1287,7 +1276,7 @@ object EventStreams {
     // the second generation lands only AFTER the restart boundary
     put(roll.filter(col("user_id") % 2 =!= 0))
     runOnce()
-    spark.read.parquet(out).groupBy("event_type")
+    graft.Tables.parquet(spark, out, Some(tail.schema)).groupBy("event_type")
       .agg(count(lit(1)).as("n_keys"), sum(col("n")).as("n_events"),
         sum(col("sum_value")).cast("double").as("total_value"))
   }
@@ -1323,11 +1312,11 @@ object EventStreams {
     def put(df: DataFrame): Unit =
       df.write.format("graft.sources.v2.GraftSinkSource")
         .option("path", dir).mode("append").save()
+    def changes = spark.readStream.format("graft.sources.v2.GraftSinkSource")
+      .schema(graft.sources.v2.GraftSink.Schema)
+      .option("path", dir).option("mode", "cdc").load()
     def runOnce(): Unit = {
-      val q = spark.readStream.format("graft.sources.v2.GraftSinkSource")
-        .schema(graft.sources.v2.GraftSink.Schema)
-        .option("path", dir).option("mode", "cdc").load()
-        .writeStream.format("parquet").option("path", out)
+      val q = changes.writeStream.format("parquet").option("path", out)
         .option("checkpointLocation", ckpt).start()
       try q.processAllAvailable() finally q.stop()
     }
@@ -1340,7 +1329,7 @@ object EventStreams {
     graft.sources.v2.GraftSink.compact(spark, dir,
       targetRows = Long.MaxValue)
     runOnce() // window 3→4: rewrite — insert/delete pairs must cancel
-    spark.read.parquet(out)
+    graft.Tables.parquet(spark, out, Some(changes.schema))
       .withColumn("sign",
         when(col("action") === "insert", lit(1L)).otherwise(lit(-1L)))
       .groupBy("event_type")
@@ -1369,7 +1358,7 @@ object EventStreams {
   def dedupToGraftSink(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.withNanosAsLong(spark) {
       val path = s"$sfDir/events.parquet"
-      val raw = spark.read.parquet(path)
+      val raw = graft.Tables.parquet(spark, path)
       val feed = graft.TempDirs.create("graft_stream_gsink_src")
       val ckpt = graft.TempDirs.create("graft_stream_gsink_ckpt")
       val out = graft.TempDirs.create("graft_stream_gsink_out").toString

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.MemoCache
+import graft.operators.{Dedup, MemoCache, TextAnalysis}
 
 /** The bounded session-memo contract (MemoCache.scala): capacity-LRU
   * eviction actually RELEASES the evicted localCheckpoint blocks —
@@ -64,5 +64,19 @@ class MemoCacheSpec extends SparkSpec {
     val c: graft.operators.MemoCache[_, _] =
       graft.operators.Relational.hitsEdgeMemo
     assert(a.size >= 0 && b.size >= 0 && c.size >= 0)
+  }
+
+  test("evicting a memoized TempDir store deletes its directory") {
+    def evictsDir[K](memo: MemoCache[K, String], key: Int => K): Unit = {
+      // capacity 4: the first of five inserts is the LRU victim
+      val dirs = (0 to 4).map(i => memo.getOrCompute(key(i))(
+        TempDirs.create("graft_memo_evict").toString))
+      def exists(d: String) = java.nio.file.Files.exists(
+        java.nio.file.Paths.get(d))
+      assert(!exists(dirs.head), "evicted store directory still on disk")
+      assert(dirs.tail.forall(exists))
+    }
+    evictsDir(Dedup.posDirMemo, i => (spark, s"/evict/corpus$i", 32))
+    evictsDir(TextAnalysis.lmDirMemo, i => (spark, s"/evict/corpus$i", 2L))
   }
 }

@@ -906,6 +906,19 @@ class RelationalExtSpec extends SparkSpec {
     out.unpersist()
   }
 
+  test("HITS on an empty edge graph returns an empty frame") {
+    // the sf0.001 schemas with no lineitem row: no (customer, part) edge
+    val dir = TempDirs.create("graft_hits_empty")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/orders.parquet"),
+      dir.resolve("orders.parquet"))
+    spark.read.parquet(s"$sf/lineitem.parquet").limit(0)
+      .write.parquet(dir.resolve("lineitem.parquet").toString)
+    for (key <- Seq("q_hits", "q_hits_converged")) {
+      val out = SparkEntry.queries(key)(spark, dir.toString)
+      assert(out.count() == 0, key)
+    }
+  }
+
   test("HITS: a planted bipartite graph replays the two normalized " +
       "rounds bit-exactly, with degrees recounted") {
     import spark.implicits._

@@ -689,4 +689,18 @@ class StreamingSpec extends SparkSpec {
     }
     assert(spark.conf.get(key) == before, "conf not restored on throw")
   }
+
+  test("a file-sink drain of an empty feed commits no file and reads " +
+      "back as an empty frame with the query's schema") {
+    val feed = TempDirs.create("graft_stream_empty_src").toString
+    val stream = spark.readStream
+      .schema("event_id BIGINT, ts TIMESTAMP, event_type STRING")
+      .parquet(feed)
+      .filter(col("event_type") =!= "x")
+    val out = EventStreams.drainToFiles(spark, stream,
+      "graft_stream_empty")(_.processAllAvailable())
+    assert(out.schema.map(f => f.name -> f.dataType) ==
+      stream.schema.map(f => f.name -> f.dataType))
+    assert(out.count() == 0)
+  }
 }
