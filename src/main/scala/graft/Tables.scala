@@ -58,21 +58,21 @@ object Tables {
 
   /** One recursive Hadoop listing of `path`: (name, length, mtime) of
     * every file, sorted. A missing path lists as empty, and the
-    * inference read then raises Spark's own error.
+    * inference read then raises Spark's own error. `listStatus`, not
+    * `listFiles`: the latter's `LocatedFileStatus` copies each file's
+    * permission, which the local filesystem without native IO reads by
+    * forking `ls -ld` per file.
     */
   private def fingerprint(spark: SparkSession,
       path: String): Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = Seq.newBuilder[(String, Long, Long)]
-    try {
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-    } catch { case _: java.io.FileNotFoundException => () }
-    files.result().sorted
+    def files(s: FileStatus): Seq[(String, Long, Long)] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(files)
+      else Seq((s.getPath.toString, s.getLen, s.getModificationTime))
+    try fs.listStatus(p).toSeq.flatMap(files).sorted
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
   }
 
   /** The driver-generated parquet stores NAIVE (no-tz) µs timestamps.

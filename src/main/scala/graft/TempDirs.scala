@@ -39,7 +39,10 @@ object TempDirs {
     deleteRecursively(p)
   }
 
-  private def deleteRecursively(p: Path): Unit =
+  /** Best-effort: an entry that cannot be deleted (or is already gone)
+    * is skipped.
+    */
+  private[graft] def deleteRecursively(p: Path): Unit =
     try {
       if (Files.isDirectory(p, java.nio.file.LinkOption.NOFOLLOW_LINKS)) {
         val children = Files.list(p)

@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-  OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** Structured Streaming twins of the batch event operators
@@ -227,11 +227,10 @@ object EventStreams {
       prefix: String)(drive: StreamingQuery => Unit): DataFrame = {
     val out = graft.TempDirs.create(s"${prefix}_out").toString
     val ckpt = graft.TempDirs.create(s"${prefix}_ckpt").toString
-    val q = stream.writeStream
+    runQuery(spark, stream.writeStream
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    try drive(q) finally q.stop()
+      .outputMode("append"))(drive)
     graft.Tables.parquet(spark, out, Some(stream.schema))
   }
 
@@ -473,16 +472,9 @@ object EventStreams {
     val agg = stream.groupBy("h", "event_type")
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
         sum((col("v") * col("v")).cast(DecimalType(38, 4))).as("ss"))
-    val name = nextSinkName("graft_stream_msprt")
-    withSink(spark, name) {
-      withScaledState(spark, pathBytes(dir)) {
-        val q = agg.writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      graft.operators.Stats.msprtFromHourly(
-        drainMemorySink(spark, name), "purchase", "click", 0.5)
-    }
+    graft.operators.Stats.msprtFromHourly(
+      drainToMemory(spark, agg, "graft_stream_msprt", pathBytes(dir)),
+      "purchase", "click", 0.5)
   }
 
   /** STREAMING FUNNEL WITH WILSON BANDS (`stream_funnel_ci`) — the
@@ -507,16 +499,8 @@ object EventStreams {
         max(when(col("event_type") === "click", 1L).otherwise(0L)).as("c"),
         max(when(col("event_type") === "purchase", 1L).otherwise(0L))
           .as("p"))
-    val name = nextSinkName("graft_stream_funnel")
-    withSink(spark, name) {
-      withScaledState(spark, pathBytes(dir)) {
-        val q = flags.writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      graft.operators.Relational.funnelCiFromFlags(
-        drainMemorySink(spark, name))
-    }
+    graft.operators.Relational.funnelCiFromFlags(
+      drainToMemory(spark, flags, "graft_stream_funnel", pathBytes(dir)))
   }
 
   private def nextSinkName(prefix: String): String =
@@ -566,25 +550,51 @@ object EventStreams {
   }
 
   private[graft] def withScaledState[T](spark: SparkSession, feedBytes: Long)
-      (body: => T): T = {
-    val n = scaledStatePartitions(spark, feedBytes)
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
+      (body: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions",
+      scaledStatePartitions(spark, feedBytes).toString)(body)
+
+  /** Run `body` with the session conf `key` at `value`, restoring the
+    * prior value (or its absence) after, also when `body` throws. The
+    * one scope behind every per-query conf of this object: state
+    * partitions, state-store provider, checkpoint file manager.
+    */
+  private[graft] def withConf[T](spark: SparkSession, key: String,
+      value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
     try body
-    finally old match {
+    finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
   }
+
+  /** Start the query `writer` describes with its checkpoint I/O on
+    * [[GraftCheckpointFileManager]] (offset and commit logs, sink and
+    * source logs, state stores), run `drive` against it and stop it
+    * whatever happens; returns the stopped query. Every stream this
+    * object runs starts here.
+    */
+  private[graft] def runQuery(spark: SparkSession,
+      writer: DataStreamWriter[_])(drive: StreamingQuery => Unit)
+      : StreamingQuery =
+    withConf(spark, GraftCheckpointFileManager.ConfKey,
+        classOf[GraftCheckpointFileManager].getName) {
+      val q = writer.start()
+      try drive(q) finally q.stop()
+      q
+    }
 
   /** [[withScaledState]] sized from the session's events parquet —
     * the feed every event-stream key symlinks or re-writes subsets of.
     */
   private def withScaledStateFor[T](spark: SparkSession, sfDir: String)
       (body: => T): T =
-    withScaledState(spark,
-      pathBytes(java.nio.file.Paths.get(s"$sfDir/events.parquet")))(body)
+    withScaledState(spark, eventBytes(sfDir))(body)
+
+  private def eventBytes(sfDir: String): Long =
+    pathBytes(java.nio.file.Paths.get(s"$sfDir/events.parquet"))
 
   /** Run a streaming query on the RocksDB state-store provider,
     * restoring the session provider after — for operators whose keyed
@@ -602,17 +612,10 @@ object EventStreams {
     * at that size. Results are provider-independent (state backend is
     * internal); the dedup keys' DuckDB gates re-pass under RocksDB.
     */
-  private def withRocksDbState[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withRocksDbState[T](spark: SparkSession)(body: => T): T =
+    withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")(body)
 
   /** Materialize a memory-sink view and drop it immediately, spilling
     * through a per-run temp parquet: the memory sink already holds one
@@ -643,6 +646,23 @@ object EventStreams {
       throw t
     }
 
+  /** Run `stream` over its bounded feed (of `feedBytes`, see
+    * [[withScaledState]]) into a per-call memory sink and drain it
+    * ([[drainMemorySink]]).
+    */
+  private def drainToMemory(spark: SparkSession, stream: Dataset[_],
+      prefix: String, feedBytes: Long, mode: String = "complete")
+      : DataFrame = {
+    val name = nextSinkName(prefix)
+    withSink(spark, name) {
+      withScaledState(spark, feedBytes) {
+        runQuery(spark, stream.writeStream.format("memory").queryName(name)
+          .outputMode(mode))(_.processAllAvailable())
+      }
+      drainMemorySink(spark, name)
+    }
+  }
+
   /** The streaming path behind the driver's batch hash gate: read the
     * events parquet through the FILE-STREAM source, run the unbounded
     * hourly plan, materialize via a memory sink (complete mode — a
@@ -656,15 +676,8 @@ object EventStreams {
     // shared flag lock scopes it atomically vs other scoped uses
     graft.Tables.withNanosAsLong(spark) {
       val (_, _, events) = eventFeed(spark, sfDir, "graft_stream_src")
-      val name = nextSinkName("graft_stream_hourly")
-      withSink(spark, name) {
-        withScaledStateFor(spark, sfDir) {
-          val q = hourlyCountsFull(events).writeStream
-            .format("memory").queryName(name).outputMode("complete").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        drainMemorySink(spark, name)
-      }
+      drainToMemory(spark, hourlyCountsFull(events), "graft_stream_hourly",
+        eventBytes(sfDir))
     }
 
   /** INCREMENTAL sketch maintenance over a stream: the theta distinct
@@ -702,17 +715,9 @@ object EventStreams {
         .select(col("event_type"), col("user_id").cast("string").as("uid"))
         .groupBy("event_type")
         .agg(graft.functions.ThetaSketch.theta_sketch(col("uid"), 65536).as("sk"))
-      val name = nextSinkName("graft_stream_theta")
-      withSink(spark, name) {
-        withScaledStateFor(spark, sfDir) {
-          val q = agg.writeStream
-            .format("memory").queryName(name).outputMode("complete").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        drainMemorySink(spark, name)
-          .select(col("event_type"),
-            graft.functions.ThetaSketch.theta_estimate(col("sk"), 65536).as("users"))
-      }
+      drainToMemory(spark, agg, "graft_stream_theta", eventBytes(sfDir))
+        .select(col("event_type"),
+          graft.functions.ThetaSketch.theta_estimate(col("sk"), 65536).as("users"))
     }
 
   /** INCREMENTAL quantile-sketch maintenance over a stream: the KLL
@@ -739,19 +744,11 @@ object EventStreams {
     val agg = stream.groupBy("lang")
       .agg(graft.functions.KllSketch.kll_quantiles(
         col("n_chars"), 8192, Seq(0.25, 0.5, 0.75)).as("qs"))
-    val name = nextSinkName("graft_stream_kll")
-    withSink(spark, name) {
-      withScaledState(spark, pathBytes(dir)) {
-        val q = agg.writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      drainMemorySink(spark, name)
-        .select(col("lang"),
-          element_at(col("qs"), 1).as("p25"),
-          element_at(col("qs"), 2).as("p50"),
-          element_at(col("qs"), 3).as("p75"))
-    }
+    drainToMemory(spark, agg, "graft_stream_kll", pathBytes(dir))
+      .select(col("lang"),
+        element_at(col("qs"), 1).as("p25"),
+        element_at(col("qs"), 2).as("p50"),
+        element_at(col("qs"), 3).as("p75"))
   }
 
   /** INCREMENTAL Count-Min maintenance over a stream: one global CMS
@@ -778,21 +775,13 @@ object EventStreams {
       .parquet(dir.toString)
     val agg = stream.agg(
       graft.functions.CountMinSketch.count_min(col("event_type"), 4, 8192).as("sk"))
-    val name = nextSinkName("graft_stream_cms")
-    withSink(spark, name) {
-      withScaledState(spark, pathBytes(dir)) {
-        val q = agg.writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      val sk = drainMemorySink(spark, name)
-      // the final complete-mode sketch is ONE row; broadcast it over
-      // the distinct item set so the wide cell array never shuffles
-      ev.distinct().crossJoin(broadcast(sk))
-        .select(col("event_type"),
-          graft.functions.CountMinSketch.cms_estimate(
-            col("sk"), col("event_type"), 4, 8192).as("cnt"))
-    }
+    val sk = drainToMemory(spark, agg, "graft_stream_cms", pathBytes(dir))
+    // the final complete-mode sketch is ONE row; broadcast it over
+    // the distinct item set so the wide cell array never shuffles
+    ev.distinct().crossJoin(broadcast(sk))
+      .select(col("event_type"),
+        graft.functions.CountMinSketch.cms_estimate(
+          col("sk"), col("event_type"), 4, 8192).as("cnt"))
   }
 
   /** INCREMENTAL drift monitoring over a stream: the per-bucket
@@ -834,18 +823,11 @@ object EventStreams {
       .groupBy("bucket")
       .agg(sum(when(col("run") === 1, 1L).otherwise(0L)).as("n1"),
         sum(when(col("run") === 2, 1L).otherwise(0L)).as("n2"))
-    val name = nextSinkName("graft_stream_drift")
-    withSink(spark, name) {
-      withScaledState(spark, pathBytes(dir)) {
-        val q = agg.writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      // the drained final counts run the SAME psi projection as the
-      // batch operator — one definition, one smoothing constant
-      graft.operators.Pipeline.psiFromCounts(
-        drainMemorySink(spark, name), nBuckets)
-    }
+    // the drained final counts run the SAME psi projection as the
+    // batch operator — one definition, one smoothing constant
+    graft.operators.Pipeline.psiFromCounts(
+      drainToMemory(spark, agg, "graft_stream_drift", pathBytes(dir)),
+      nBuckets)
   }
 
   /** INCREMENTAL exact-moment maintenance over a stream: per-type
@@ -885,24 +867,16 @@ object EventStreams {
         sum(col("v") * col("v")).as("s2"),
         min(col("v")).as("mn"),
         max(col("v")).as("mx"))
-    val name = nextSinkName("graft_stream_moments")
-    withSink(spark, name) {
-      withScaledState(spark, pathBytes(dir)) {
-        val q = agg.writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      drainMemorySink(spark, name)
-        .select(col("event_type"), col("n"),
-          round(col("s1").cast("double") / col("n").cast("double"), 6)
-            .as("mean"),
-          round((col("n").cast("double") * col("s2").cast("double")
-              - col("s1").cast("double") * col("s1").cast("double"))
-            / (col("n").cast("double") * (col("n").cast("double") - lit(1.0))),
-            6).as("var_samp"),
-          col("mn").cast("double").as("vmin"),
-          col("mx").cast("double").as("vmax"))
-    }
+    drainToMemory(spark, agg, "graft_stream_moments", pathBytes(dir))
+      .select(col("event_type"), col("n"),
+        round(col("s1").cast("double") / col("n").cast("double"), 6)
+          .as("mean"),
+        round((col("n").cast("double") * col("s2").cast("double")
+            - col("s1").cast("double") * col("s1").cast("double"))
+          / (col("n").cast("double") * (col("n").cast("double") - lit(1.0))),
+          6).as("var_samp"),
+        col("mn").cast("double").as("vmin"),
+        col("mx").cast("double").as("vmax"))
   }
 
   /** INCREMENTAL heavy-hitter maintenance over a stream: per-language
@@ -930,18 +904,10 @@ object EventStreams {
       .parquet(dir.toString)
     val agg = stream.groupBy("lang")
       .agg(graft.functions.FreqItemsSketch.freq_items(col("word"), 64).as("sk"))
-    val name = nextSinkName("graft_stream_topk")
-    withSink(spark, name) {
-      withScaledState(spark, pathBytes(dir)) {
-        val q = agg.writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      drainMemorySink(spark, name)
-        .select(col("lang"), posexplode(slice(col("sk"), 1, 5)))
-        .select(col("lang"), col("col.item").as("word"),
-          col("col.cnt").as("cnt"), (col("pos") + 1).cast("long").as("rnk"))
-    }
+    drainToMemory(spark, agg, "graft_stream_topk", pathBytes(dir))
+      .select(col("lang"), posexplode(slice(col("sk"), 1, 5)))
+      .select(col("lang"), col("col.item").as("word"),
+        col("col.cnt").as("cnt"), (col("pos") + 1).cast("long").as("rnk"))
   }
 
   /** STREAM–STATIC enrichment join (`stream_dim_join`) — the
@@ -972,17 +938,9 @@ object EventStreams {
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("v")).as("sv"))
-    val name = nextSinkName("graft_stream_dim")
-    withSink(spark, name) {
-      withScaledState(spark, pathBytes(dir)) {
-        val q = joined.writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      drainMemorySink(spark, name)
-        .select(col("c_mktsegment"), col("event_type"), col("n"),
-          col("sv").cast("double").as("sum_value"))
-    }
+    drainToMemory(spark, joined, "graft_stream_dim", pathBytes(dir))
+      .select(col("c_mktsegment"), col("event_type"), col("n"),
+        col("sv").cast("double").as("sum_value"))
   }
 
   case class BandRow(doc_id: Long, band: Int, sig: String)
@@ -1086,11 +1044,10 @@ object EventStreams {
         .groupBy(window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n"))
       def runOnce(): Unit = withScaledStateFor(spark, sfDir) {
-        val q = counts.writeStream
+        runQuery(spark, counts.writeStream
           .format("parquet").option("path", out.toString)
           .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+          .outputMode("append"))(_.processAllAvailable())
       }
       runOnce()
       dumpFeedFile(feed, late, "b.parquet", 1000000060000L)
@@ -1128,16 +1085,10 @@ object EventStreams {
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1") // force the cross-batch carry
       .parquet(feed.toString)
-    val name = nextSinkName("graft_stream_near_dup")
-    withSink(spark, name) {
-      withScaledState(spark, pathBytes(feed)) { withRocksDbState(spark) {
-        val q = nearDupStream(stream).writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      } }
-      drainMemorySink(spark, name)
-        .select(col("doc_id"), col("near_dup_of"))
-    }
+    withRocksDbState(spark) {
+      drainToMemory(spark, nearDupStream(stream), "graft_stream_near_dup",
+        pathBytes(feed))
+    }.select(col("doc_id"), col("near_dup_of"))
   }
 
   /** Streaming CDC apply (`stream_merge`): change batches arriving on
@@ -1170,16 +1121,14 @@ object EventStreams {
     val stream = spark.readStream.schema(updates.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(feed.toString)
-    val q = stream.writeStream
+    runQuery(spark, stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         val merged = Relational.mergeApply(graft.Tables.parquet(spark, cur),
           batch, "o_orderkey", Seq("o_orderstatus", "o_totalprice"))
         val next = s"$tbl/v${id + 1}"
         merged.write.mode("overwrite").parquet(next)
         cur = next
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })(_.processAllAvailable())
     graft.Tables.parquet(spark, cur)
   }
 
@@ -1214,12 +1163,11 @@ object EventStreams {
       }
       def runOnce(): Unit =
         withScaledStateFor(spark, sfDir) { withRocksDbState(spark) {
-        val q = dedupStream(events).writeStream
+        runQuery(spark, dedupStream(events).writeStream
           .format("parquet")
           .option("path", out.toString)
           .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
+          .outputMode("append"))(_.processAllAvailable())
       } }
       java.nio.file.Files.createSymbolicLink(
         feed.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
@@ -1267,9 +1215,8 @@ object EventStreams {
       .schema(graft.sources.v2.GraftSink.Schema)
       .option("path", dir).load()
     def runOnce(): Unit = {
-      val q = tail.writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
+      runQuery(spark, tail.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt))(_.processAllAvailable())
     }
     put(roll.filter(col("user_id") % 2 === 0))
     runOnce()
@@ -1316,9 +1263,8 @@ object EventStreams {
       .schema(graft.sources.v2.GraftSink.Schema)
       .option("path", dir).option("mode", "cdc").load()
     def runOnce(): Unit = {
-      val q = changes.writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt).start()
-      try q.processAllAvailable() finally q.stop()
+      runQuery(spark, changes.writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt))(_.processAllAvailable())
     }
     put(roll.filter(col("user_id") % 2 === 0))
     put(roll.filter(col("user_id") % 2 =!= 0))
@@ -1387,15 +1333,13 @@ object EventStreams {
           org.apache.spark.sql.types.DoubleType)))
       def runOnce(): Unit =
         withScaledStateFor(spark, sfDir) { withRocksDbState(spark) {
-        val q = dedupStream(events).writeStream
+        runQuery(spark, dedupStream(events).writeStream
           .foreachBatch { (batch: DataFrame, id: Long) =>
             shape(batch).write.format("graft.sources.v2.GraftSinkSource")
               .option("path", out).option("txn", s"epoch-$id")
               .mode("append").save()
           }
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
+          .option("checkpointLocation", ckpt.toString))(_.processAllAvailable())
       } }
       java.nio.file.Files.createSymbolicLink(
         feed.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
@@ -1466,7 +1410,7 @@ object EventStreams {
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("n_chars", LongType)))
     val nCompactions = new java.util.concurrent.atomic.AtomicLong(0)
-    val q = spark.readStream.schema(schema)
+    runQuery(spark, spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(feed)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -1490,9 +1434,7 @@ object EventStreams {
         }
         ()
       }
-      .option("checkpointLocation", ckpt)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .option("checkpointLocation", ckpt))(_.processAllAvailable())
     val finalFiles = GraftSink.history(spark, out)
       .orderBy(col("generation").desc).limit(1)
       .select("n_files").first().getLong(0)
@@ -1551,7 +1493,7 @@ object EventStreams {
       .mode("overwrite").parquet(feed)
     dirty.foreach(_.select(col("doc_id").cast("long"),
       col("n_chars").cast("long")).write.mode("append").parquet(feed))
-    val q = spark.readStream.schema(sinkSchema)
+    runQuery(spark, spark.readStream.schema(sinkSchema)
       .option("maxFilesPerTrigger", "1").parquet(feed)
       .writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -1559,9 +1501,7 @@ object EventStreams {
           .option("path", branch).option("txn", s"epoch-$id")
           .mode("append").save()
       }
-      .option("checkpointLocation", ckpt)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .option("checkpointLocation", ckpt))(_.processAllAvailable())
     // the AUDIT, over the staged TABLE (inherited baseline + every
     // streamed epoch): key uniqueness across the WHOLE history and a
     // per-row sanity rule — cross-epoch invariants a batch-local
@@ -1601,15 +1541,11 @@ object EventStreams {
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir.toString)
-    val name = nextSinkName("graft_stream_curate")
-    withSink(spark, name) {
-      val q = graft.operators.TextAnalysis.curateGateOver(stream)
-        .writeStream
-        .format("memory").queryName(name).outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-      drainMemorySink(spark, name)
-        .select(col("doc_id"), col("n_words"), col("pred_lang"))
-    }
+    // parquet file sink, not memory: the kept documents are
+    // corpus-sized (see sessionsFromFiles)
+    drainToFiles(spark, graft.operators.TextAnalysis.curateGateOver(stream),
+        "graft_stream_curate")(_.processAllAvailable())
+      .select(col("doc_id"), col("n_words"), col("pred_lang"))
   }
 
   /** `Dataset.observe` on a STREAMING query — the per-batch
@@ -1641,10 +1577,9 @@ object EventStreams {
     val name = nextSinkName("graft_stream_obs")
     val (nRows, sumV, nPurch) = withSink(spark, name) {
       val q = withScaledState(spark, pathBytes(dir)) {
-        val q0 = agg.writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q0.processAllAvailable() finally q0.stop()
-        q0
+        runQuery(spark, agg.writeStream
+          .format("memory").queryName(name).outputMode("complete"))(
+          _.processAllAvailable())
       }
       // the sink rows are never read — drop the view NOW so the
       // success path honors the no-pinned-sink invariant too
@@ -1703,31 +1638,15 @@ object EventStreams {
       .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
       .parquet(dir.toString)
       .as[Event]
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState(spark) {
       val alerts = stream.groupByKey(_.user_id)
         .transformWithState(new PowerAlertProcessor(),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Append(),
           org.apache.spark.sql.Encoders.product[TwsAlert])
-      val name = nextSinkName("graft_stream_tws")
-      withSink(spark, name) {
-        withScaledState(spark, pathBytes(dir)) {
-          val q = alerts.toDF().writeStream
-            .format("memory").queryName(name).outputMode("append").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        drainMemorySink(spark, name)
-          .select(col("user_id"), col("threshold"))
-      }
-    } finally prevProvider match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      drainToMemory(spark, alerts.toDF(), "graft_stream_tws",
+        pathBytes(dir), "append")
+        .select(col("user_id"), col("threshold"))
     }
   }
 
@@ -1776,31 +1695,24 @@ object EventStreams {
       .groupByKey(_._1)
       .agg(graft.functions.VecSumAgg.agg(d).toColumn)
       .toDF("cid", "buf")
-    val name = nextSinkName("graft_stream_kmeans")
-    withSink(spark, name) {
-      withScaledState(spark, pathBytes(dir)) {
-        val q = agg.writeStream
-          .format("memory").queryName(name).outputMode("complete").start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      // k bounded rows of drained state -> refined centroids
-      val rows = drainMemorySink(spark, name).collect().map { r =>
-        val cid = r.getInt(0)
-        val buf = r.getStruct(1)
-        val n = buf.getLong(0)
-        val s = buf.getSeq[Double](1)
-        val c0 = cents(cid)
-        val c1 = if (n > 0) s.map(_ / n).toArray else c0
-        val cnorm = math.sqrt(c1.map(x => x * x).sum)
-        val shift = math.sqrt(
-          c1.zip(c0).map { case (a, b) => (a - b) * (a - b) }.sum)
-        (cid.toLong, n, cnorm, shift)
-      }.toSeq
-      rows.toDF("cluster_id", "n", "cnorm0", "shift0")
-        .select(col("cluster_id"), col("n"),
-          round(col("cnorm0"), 6).as("cnorm"),
-          round(col("shift0"), 6).as("shift"))
-    }
+    // k bounded rows of drained state -> refined centroids
+    val rows = drainToMemory(spark, agg, "graft_stream_kmeans",
+        pathBytes(dir)).collect().map { r =>
+      val cid = r.getInt(0)
+      val buf = r.getStruct(1)
+      val n = buf.getLong(0)
+      val s = buf.getSeq[Double](1)
+      val c0 = cents(cid)
+      val c1 = if (n > 0) s.map(_ / n).toArray else c0
+      val cnorm = math.sqrt(c1.map(x => x * x).sum)
+      val shift = math.sqrt(
+        c1.zip(c0).map { case (a, b) => (a - b) * (a - b) }.sum)
+      (cid.toLong, n, cnorm, shift)
+    }.toSeq
+    rows.toDF("cluster_id", "n", "cnorm0", "shift0")
+      .select(col("cluster_id"), col("n"),
+        round(col("cnorm0"), 6).as("cnorm"),
+        round(col("shift0"), 6).as("shift"))
   }
 
   case class EwmaIn(event_type: String, day: java.sql.Date, y: Long)
@@ -1876,36 +1788,20 @@ object EventStreams {
       .option("maxFilesPerTrigger", "1") // force the cross-batch carry
       .parquet(feed.toString)
       .as[EwmaIn]
-    val prevProvider =
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDbState(spark) {
       val out = stream.groupByKey(_.event_type)
         .transformWithState(new EwmaProcessor(params),
           org.apache.spark.sql.streaming.TimeMode.None(),
           OutputMode.Append(),
           org.apache.spark.sql.Encoders.product[EwmaOut])
-      val name = nextSinkName("graft_stream_ewma")
-      withSink(spark, name) {
-        withScaledState(spark, pathBytes(feed)) {
-          val q = out.toDF().writeStream
-            .format("memory").queryName(name).outputMode("append").start()
-          try q.processAllAvailable() finally q.stop()
-        }
-        drainMemorySink(spark, name)
-          .join(broadcast(lims
-            .select(col("event_type"), col("hi"), col("lo"))), "event_type")
-          .select(col("event_type"), col("day"), col("y"),
-            round(col("ewma"), 6).as("ewma"),
-            round(col("hi"), 6).as("ucl"), round(col("lo"), 6).as("lcl"),
-            col("out_of_control"))
-      }
-    } finally prevProvider match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None =>
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      drainToMemory(spark, out.toDF(), "graft_stream_ewma",
+        pathBytes(feed), "append")
+        .join(broadcast(lims
+          .select(col("event_type"), col("hi"), col("lo"))), "event_type")
+        .select(col("event_type"), col("day"), col("y"),
+          round(col("ewma"), 6).as("ewma"),
+          round(col("hi"), 6).as("ucl"), round(col("lo"), 6).as("lcl"),
+          col("out_of_control"))
     }
   }
 }
