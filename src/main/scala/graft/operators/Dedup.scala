@@ -351,9 +351,14 @@ object Dedup {
   private[graft] def componentsOver(verts: DataFrame, edges0: DataFrame,
       maxIters: Int, driverCutoff: Long = DriverEdgeCutoff): DataFrame = {
     val spark = verts.sparkSession
-    val edges = edges0.cache()
-    val nEdges = edges.count()
-    if (nEdges <= driverCutoff) {
+    // ONE bounded collect decides the path and, on the driver path,
+    // is the edge list: it stops at cutoff + 1 rows (a limit is an
+    // Int, and no driver array holds more). Explicit long cast: an
+    // int32 doc_id column would otherwise ClassCastException in getLong
+    val limit = math.max(0L, math.min(driverCutoff, Int.MaxValue - 1L))
+    val got = edges0.select(col("doc_a").cast("long"),
+      col("doc_b").cast("long")).limit(limit.toInt + 1).collect()
+    if (got.length <= driverCutoff) {
       val parent = scala.collection.mutable.HashMap.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -362,17 +367,13 @@ object Dedup {
         while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      // explicit long cast: an int32 doc_id column would otherwise
-      // ClassCastException in getLong
-      edges.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-        .collect().foreach { row =>
+      got.foreach { row =>
         val a = row.getLong(0); val b = row.getLong(1)
         parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
         val ra = find(a); val rb = find(b)
         // min-id root ⇒ representative is the component minimum
         if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
       }
-      edges.unpersist()
       import spark.implicits._
       val mapping = parent.keys.toSeq.map(k => (k, find(k)))
         .toDF("doc_id", "lbl")
@@ -381,7 +382,7 @@ object Dedup {
         .select(col("doc_id"),
           coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
     }
-    componentsDistributed(verts, edges, maxIters)
+    componentsDistributed(verts, edges0.cache(), maxIters)
   }
 
   private def componentsDistributed(verts: DataFrame, edges: DataFrame,

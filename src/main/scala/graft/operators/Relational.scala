@@ -2802,9 +2802,10 @@ object Relational {
     * `localCheckpoint`, whose LogicalRDD reports UNKNOWN size stats,
     * so the planner sort-merge-joins 550k edges against a 20k-row
     * score vector every half-step; re-attaching the size decision
-    * from one bounded pre-flight count restores the broadcast the
-    * stats loss hid. Past the budget the sort-merge shape stands — a
-    * web-scale score vector cannot ship to every executor.
+    * from the degree vectors' observed row counts restores the
+    * broadcast the stats loss hid. Past the budget the sort-merge
+    * shape stands — a web-scale score vector cannot ship to every
+    * executor.
     */
   private val HitsBroadcastNodeBudget = 4L * 1000 * 1000
 
@@ -2839,12 +2840,25 @@ object Relational {
       sfDir: String) {
     private val d289 = DecimalType(28, 9)
     private[graft] val edges = hitsEdges(spark, sfDir)
-    // ONE bounded pre-flight agg over the memoized edge frame prices
-    // the join strategy for every round (the scaledPlanesPerBand
-    // convention: derive the scale decision from the data, once)
-    private val nNodes = edges
-      .agg(countDistinct(col("u")) + countDistinct(col("p")))
-      .first().getLong(0)
+
+    /** Per-node degree vector on side `key`, checkpointed once, with
+      * its row count (= the side's distinct nodes) observed on the
+      * same job.
+      */
+    private def degrees(key: String): (DataFrame, Long) = {
+      val obs = org.apache.spark.sql.Observation()
+      val deg = edges.groupBy(col(key).as("node"))
+        .agg(count(lit(1)).as("deg"))
+        .observe(obs, count(lit(1)).as("n"))
+        .localCheckpoint()
+      (deg, obs.get("n").asInstanceOf[Long])
+    }
+    private[graft] val (uDeg, nCust) = degrees("u")
+    private[graft] val (pDeg, nPart) = degrees("p")
+    // the degree builds' observed counts price the join strategy for
+    // every round (the scaledPlanesPerBand convention: derive the
+    // scale decision from the data, once)
+    private val nNodes = nCust + nPart
     private[graft] def sized(df: DataFrame): DataFrame =
       if (nNodes <= HitsBroadcastNodeBudget) broadcast(df) else df
 
@@ -2870,8 +2884,7 @@ object Relational {
     // between as of rounds k-1 and k (defined from round 2), computed
     // on first read — a fixed-round caller never pays for it
     private val hs = scala.collection.mutable.ArrayBuffer[DataFrame](
-      edges.select(col("u").as("node")).distinct()
-        .select(col("node"), lit(1.0).as("s")))
+      uDeg.select(col("node"), lit(1.0).as("s")))
     private val as = scala.collection.mutable.ArrayBuffer[DataFrame]()
     private val l1s = scala.collection.mutable.Map[Int, Double]()
 
@@ -2901,9 +2914,11 @@ object Relational {
           Seq("node"), "left")
         .agg(coalesce(sum(abs(col("s") - col("prev"))), lit(0.0)))
         .first().getDouble(0)))
-    /** Evict hook: free every checkpointed round. */
+    /** Evict hook: free every checkpointed round and both degree
+      * vectors.
+      */
     private[graft] def release(): Unit = synchronized(
-      (as ++ hs).foreach(MemoCache.freeLocalCheckpoint))
+      (as ++ hs ++ Seq(uDeg, pDeg)).foreach(MemoCache.freeLocalCheckpoint))
   }
 
   private[graft] val hitsTrajMemo = new MemoCache[
@@ -2931,14 +2946,10 @@ object Relational {
     }
     val a = traj.a(rounds)
     val h = traj.h(rounds)
-    val pDeg = traj.edges.groupBy(col("p").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    val uDeg = traj.edges.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("deg"))
-    (a.join(traj.sized(pDeg), "node")
+    (a.join(traj.sized(traj.pDeg), "node")
       .select(lit("part").as("kind"), col("node").as("node_id"),
         col("s").as("score"), col("deg"))
-      .unionByName(h.join(traj.sized(uDeg), "node")
+      .unionByName(h.join(traj.sized(traj.uDeg), "node")
         .select(lit("cust").as("kind"), col("node").as("node_id"),
           col("s").as("score"), col("deg"))),
       rounds, converged)

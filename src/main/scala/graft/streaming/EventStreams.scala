@@ -227,10 +227,11 @@ object EventStreams {
       prefix: String)(drive: StreamingQuery => Unit): DataFrame = {
     val out = graft.TempDirs.create(s"${prefix}_out").toString
     val ckpt = graft.TempDirs.create(s"${prefix}_ckpt").toString
-    runQuery(spark, stream.writeStream
+    try runQuery(spark, stream.writeStream
       .format("parquet").option("path", out)
       .option("checkpointLocation", ckpt)
       .outputMode("append"))(drive)
+    finally graft.TempDirs.delete(ckpt) // the read-back needs only `out`
     graft.Tables.parquet(spark, out, Some(stream.schema))
   }
 
@@ -434,13 +435,16 @@ object EventStreams {
       // The file sink streams each batch straight to disk through
       // its manifest; rows are identical, the driver never holds
       // them (guide §5: the driver should do almost no data work).
-      withScaledStateFor(spark, sfDir) { withRocksDbState(spark) {
-        drainToFiles(spark, dedupStream(events),
-          "graft_stream_dedup")(_.processAllAvailable())
-      } }
-        .select(col("event_id"),
-          date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
-          col("user_id"), col("event_type"), col("value"))
+      // The feed dir holds only symlinks: the drained frame reads
+      // `out`, so the feed goes once the query has stopped.
+      val drained =
+        try withStateFor(spark, eventBytes(sfDir)) {
+          drainToFiles(spark, dedupStream(events),
+            "graft_stream_dedup")(_.processAllAvailable())
+        } finally graft.TempDirs.delete(dir.toString)
+      drained.select(col("event_id"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
+        col("user_id"), col("event_type"), col("value"))
     }
 
   /** Per-call memory-sink names: a fixed name would let two concurrent
@@ -543,11 +547,14 @@ object EventStreams {
     */
   private[graft] def scaledStatePartitions(spark: SparkSession,
       feedBytes: Long): Int = {
-    val per = spark.conf.getOption("graft.stream.bytesPerStatePartition")
-      .map(_.toLong).getOrElse(8L << 20)
+    val per = bytesPerStatePartition(spark)
     val cap = math.max(1, spark.sparkContext.defaultParallelism)
     math.max(1L, math.min(cap.toLong, (feedBytes + per - 1) / per)).toInt
   }
+
+  private def bytesPerStatePartition(spark: SparkSession): Long =
+    spark.conf.getOption("graft.stream.bytesPerStatePartition")
+      .map(_.toLong).getOrElse(8L << 20)
 
   private[graft] def withScaledState[T](spark: SparkSession, feedBytes: Long)
       (body: => T): T =
@@ -596,26 +603,46 @@ object EventStreams {
   private def eventBytes(sfDir: String): Long =
     pathBytes(java.nio.file.Paths.get(s"$sfDir/events.parquet"))
 
+  /** Run a stream whose keyed state grows WITH THE FEED (exact dedup
+    * keeps one entry per event id inside the watermark; the near-dup
+    * bucket store keeps one per distinct band signature) with its
+    * state sized from the feed for the life of the query:
+    * [[scaledStatePartitions]] state partitions, and a state-store
+    * provider chosen from the same measure. A feed that fits one
+    * state partition's byte budget keeps Spark's on-heap HDFS-backed
+    * store. RocksDB's fixed costs dominate at that size: per
+    * micro-batch a native open, JNI gets and puts (plus one extra get
+    * per write for row tracking) and a commit that flushes, fsyncs,
+    * checkpoints and uploads SST files; once per JVM the extraction
+    * of its 14 MB native library. A larger feed runs on RocksDB,
+    * which keeps state off-heap with disk spill: the HDFS-backed
+    * store holds its whole map ON-HEAP per partition, and measured at
+    * the sf10 stream (10M events, 171 MB feed), stream_dedup's state
+    * (~2×10M entries across both feed copies) OOMs the 4 GB bench JVM
+    * outright. Results are provider-independent (the state backend is
+    * internal); both confs are restored after the body.
+    */
+  private[graft] def withStateFor[T](spark: SparkSession, feedBytes: Long)
+      (body: => T): T =
+    withScaledState(spark, feedBytes) {
+      withStateProvider(spark,
+        if (feedBytes <= bytesPerStatePartition(spark))
+          "HDFSBackedStateStoreProvider"
+        else "RocksDBStateStoreProvider")(body)
+    }
+
   /** Run a streaming query on the RocksDB state-store provider,
-    * restoring the session provider after — for operators whose keyed
-    * state grows WITH THE STREAM (exact dedup keeps one entry per
-    * event id inside the watermark; the near-dup bucket store keeps
-    * one per distinct band signature). The default HDFS-backed store
-    * holds its whole map ON-HEAP per partition: measured at the sf10
-    * stream (10M events, 171 MB feed), stream_dedup's state (~2×10M
-    * entries across both feed copies) OOMs the 4 GB bench JVM
-    * outright. RocksDB keeps state off-heap with disk spill — the
-    * store Structured Streaming ships for exactly this shape (and the
-    * one `transformWithState` already requires). Windowed/bounded-
-    * cardinality aggregations keep the default store: their state is
-    * O(windows × keys), and the HDFS store's in-memory map is faster
-    * at that size. Results are provider-independent (state backend is
-    * internal); the dedup keys' DuckDB gates re-pass under RocksDB.
+    * restoring the session provider after — for `transformWithState`,
+    * which requires it (the multi-column-family store the operator is
+    * built on).
     */
   private def withRocksDbState[T](spark: SparkSession)(body: => T): T =
+    withStateProvider(spark, "RocksDBStateStoreProvider")(body)
+
+  private def withStateProvider[T](spark: SparkSession, cls: String)
+      (body: => T): T =
     withConf(spark, "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")(body)
+      s"org.apache.spark.sql.execution.streaming.state.$cls")(body)
 
   /** Materialize a memory-sink view and drop it immediately, spilling
     * through a per-run temp parquet: the memory sink already holds one
@@ -1085,9 +1112,10 @@ object EventStreams {
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1") // force the cross-batch carry
       .parquet(feed.toString)
-    withRocksDbState(spark) {
+    val feedBytes = pathBytes(feed)
+    withStateFor(spark, feedBytes) {
       drainToMemory(spark, nearDupStream(stream), "graft_stream_near_dup",
-        pathBytes(feed))
+        feedBytes)
     }.select(col("doc_id"), col("near_dup_of"))
   }
 
@@ -1161,14 +1189,13 @@ object EventStreams {
           case _ => s0
         }
       }
-      def runOnce(): Unit =
-        withScaledStateFor(spark, sfDir) { withRocksDbState(spark) {
+      def runOnce(): Unit = withStateFor(spark, eventBytes(sfDir)) {
         runQuery(spark, dedupStream(events).writeStream
           .format("parquet")
           .option("path", out.toString)
           .option("checkpointLocation", ckpt.toString)
           .outputMode("append"))(_.processAllAvailable())
-      } }
+      }
       java.nio.file.Files.createSymbolicLink(
         feed.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
       runOnce()
@@ -1331,8 +1358,7 @@ object EventStreams {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.DoubleType)))
-      def runOnce(): Unit =
-        withScaledStateFor(spark, sfDir) { withRocksDbState(spark) {
+      def runOnce(): Unit = withStateFor(spark, eventBytes(sfDir)) {
         runQuery(spark, dedupStream(events).writeStream
           .foreachBatch { (batch: DataFrame, id: Long) =>
             shape(batch).write.format("graft.sources.v2.GraftSinkSource")
@@ -1340,7 +1366,7 @@ object EventStreams {
               .mode("append").save()
           }
           .option("checkpointLocation", ckpt.toString))(_.processAllAvailable())
-      } }
+      }
       java.nio.file.Files.createSymbolicLink(
         feed.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
       runOnce()

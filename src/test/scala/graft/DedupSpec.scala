@@ -143,6 +143,14 @@ class DedupSpec extends SparkSpec {
       "driver and distributed components disagree")
   }
 
+  test("a warm dedup_clusters call runs at most 4 Spark jobs") {
+    def call(): Unit = SparkEntry.queries("dedup_clusters")(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    call() // builds the memoized pair artifact
+    val n = jobsOf(call())
+    assert(n <= 4, s"warm dedup_clusters ran $n jobs")
+  }
+
   test("both CC paths collapse a diameter-99 chain to one cluster") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -906,6 +906,14 @@ class RelationalExtSpec extends SparkSpec {
     out.unpersist()
   }
 
+  test("a warm q_hits call runs at most 3 Spark jobs") {
+    def call(): Unit = SparkEntry.queries("q_hits")(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    call() // builds the memoized edges, degrees and trajectory
+    val n = jobsOf(call())
+    assert(n <= 3, s"warm q_hits ran $n jobs")
+  }
+
   test("HITS on an empty edge graph returns an empty frame") {
     // the sf0.001 schemas with no lineitem row: no (customer, part) edge
     val dir = TempDirs.create("graft_hits_empty")

@@ -2,9 +2,12 @@ package graft
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
@@ -688,6 +691,91 @@ class StreamingSpec extends SparkSpec {
       EventStreams.withScaledState(spark, 1L) { sys.error("boom") }
     }
     assert(spark.conf.get(key) == before, "conf not restored on throw")
+  }
+
+  /** `body`'s result with the custom-metric names of the state
+    * operators in every progress of the streams it runs, read once
+    * each of them has reported its termination (the listener bus
+    * delivers in order).
+    */
+  private def withStateMetrics[T](body: => T): (T, Set[String]) = {
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val names = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.add(e.runId)
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (started.contains(e.progress.runId))
+          e.progress.stateOperators.foreach(
+            _.customMetrics.keySet.forEach(k => names.add(k)))
+      def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.add(e.runId)
+    }
+    spark.streams.addListener(listener)
+    val out = try {
+      val out = body
+      def done = !started.isEmpty && ended.containsAll(started)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!done && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(done, "a query's termination was never reported")
+      out
+    } finally spark.streams.removeListener(listener)
+    (out, names.asScala.toSet)
+  }
+
+  test("stream_dedup's state store follows its feed: on-heap at the " +
+      "test SF, RocksDB past the per-partition budget; both runs equal " +
+      "the batch table and restore the session confs") {
+    val want = Tables.events(spark, sf)
+      .select(col("event_id"),
+        date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
+        col("user_id"), col("event_type"), col("value"))
+    val confs = Seq("spark.sql.streaming.stateStore.providerClass",
+      "spark.sql.shuffle.partitions")
+    def run(): Set[String] = {
+      val before = confs.map(spark.conf.getOption)
+      val (got, metrics) =
+        withStateMetrics(EventStreams.dedupFromFiles(spark, sf))
+      assert(confs.map(spark.conf.getOption) == before, "confs not restored")
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+        "stream_dedup diverges from the single-copy batch table")
+      assert(metrics.nonEmpty, "no state-operator metrics reported")
+      metrics
+    }
+    val onHeap = run()
+    assert(!onHeap.exists(_.startsWith("rocksdb")),
+      s"small feed ran on RocksDB: ${onHeap.filter(_.startsWith("rocksdb"))}")
+    val budget = "graft.stream.bytesPerStatePartition"
+    val feed = java.nio.file.Files.size(
+      java.nio.file.Paths.get(s"$sf/events.parquet"))
+    spark.conf.set(budget, (feed / 2).toString)
+    val rocks = try run() finally spark.conf.unset(budget)
+    assert(rocks.exists(_.startsWith("rocksdb")),
+      s"feed past the budget did not run on RocksDB: $rocks")
+  }
+
+  test("stream_dedup leaves no checkpoint or feed dir behind; its " +
+      "output dirs stay and back the returned frames") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def dirs(prefix: String): Set[String] = {
+      val s = java.nio.file.Files.list(tmp)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches(s"${prefix}[0-9]+")).toSet
+      finally s.close()
+    }
+    val prefixes = Seq("graft_stream_dedup", "graft_stream_dedup_ckpt",
+      "graft_stream_dedup_out")
+    val before = prefixes.map(p => p -> dirs(p)).toMap
+    val outs = Seq.fill(3)(EventStreams.dedupFromFiles(spark, sf))
+    val added = prefixes.map(p => p -> (dirs(p) -- before(p))).toMap
+    assert(added("graft_stream_dedup").isEmpty, s"feed dirs left: $added")
+    assert(added("graft_stream_dedup_ckpt").isEmpty,
+      s"checkpoint dirs left: $added")
+    assert(added("graft_stream_dedup_out").size == 3)
+    val n = Tables.events(spark, sf).count()
+    outs.foreach(o => assert(o.count() == n))
   }
 
   test("a file-sink drain of an empty feed commits no file and reads " +

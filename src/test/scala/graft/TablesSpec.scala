@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.{ConcurrentLinkedQueue, CyclicBarrier}
+import java.util.concurrent.CyclicBarrier
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
-import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
 /** The parquet schema cache behind `Tables.parquet`: a warm load
@@ -17,37 +15,6 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 class TablesSpec extends SparkSpec {
 
   private val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
-
-  /** Spark jobs `body` starts on this thread. A trailing marker job
-    * in its own group proves the listener bus delivered every earlier
-    * job start before the count is read.
-    */
-  private def jobsOf(body: => Any): Int = {
-    val group = s"tables-spec-${java.util.UUID.randomUUID}"
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .filter(_.startsWith(group)).foreach(groups.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "body")
-      body
-      sc.setJobGroup(s"$group-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30.seconds.toNanos
-      while (!groups.contains(s"$group-marker")
-          && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(groups.contains(s"$group-marker"), "marker job never reported")
-      groups.asScala.count(_ == group)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** A fresh corpus dir holding copies of the named sf tables. */
   private def corpusCopy(names: String*): String = {
