@@ -82,7 +82,7 @@ object Bench {
     // rebuilt once per run instead of accumulating — run3 now measures
     // the same storage state as run1, separating box noise from any
     // future leak in the per-run arrays (set =0 to keep caches across
-    // runs). localCheckpoint-backed session memos are unaffected.
+    // runs). localCheckpoint-backed `Artifacts` frames are unaffected.
     val clearBetweenRuns =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_CLEARCACHE", "1") != "0"
     val runs: Seq[Seq[(String, Double)]] = (1 to nRuns).map { r =>
@@ -100,7 +100,7 @@ object Bench {
     }.toMap
     val total = byName.values.filter(_ >= 0).sum
     // the COLD map (run 1): the only per-key numbers that include every
-    // one-time session-artifact build — a memo consumer's best-of-3 is
+    // one-time session-artifact build — an artifact consumer's best-of-3 is
     // a warm filter over a checkpointed artifact, so a 2x slowdown in
     // the build is invisible to `best`; run 1 pays it and reports it
     val cold: Map[String, Double] = runs.head.toMap
@@ -172,7 +172,7 @@ object Bench {
     // best-of-depth noise that masquerades as regression on sub-second
     // keys while still catching a real structural slowdown. Checked on
     // BOTH arrays: `best` (warm steady state) and `cold` (run 1, the
-    // only array where a memo ARTIFACT BUILD regression is visible —
+    // only array where an ARTIFACT BUILD regression is visible —
     // a consumer key's warm best is a filter over the built artifact
     // and stays flat no matter how slow the build got).
     def flag(now: Map[String, Double], fl: Map[String, Double])

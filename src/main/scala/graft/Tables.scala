@@ -21,7 +21,7 @@ object Tables {
 
   /** The parquet read of corpus tables and train-once stores. With
     * `schema` given the read takes it as is; otherwise the inferred
-    * schema is served from [[schemaMemo]]. Spark 4 infers a parquet
+    * schema is served from [[schemaCache]]. Spark 4 infers a parquet
     * schema with a one-task footer job on EVERY `spark.read.parquet`,
     * even for one file, so a warm call that re-reads a table it read
     * before would pay one Spark job per table for a schema that
@@ -32,7 +32,7 @@ object Tables {
   def parquet(spark: SparkSession, path: String,
       schema: Option[StructType] = None): DataFrame = {
     val s = schema.getOrElse(
-      schemaMemo.getOrCompute(SchemaKey(spark, path, fingerprint(spark, path),
+      schemaCache.getOrCompute(SchemaKey(spark, path, fingerprint(spark, path),
         SchemaConfs.map(spark.conf.get)))(spark.read.parquet(path).schema))
     spark.read.schema(s).parquet(path)
   }
@@ -53,7 +53,7 @@ object Tables {
   private case class SchemaKey(spark: SparkSession, path: String,
       files: Seq[(String, Long, Long)], confs: Seq[String])
 
-  private val schemaMemo = new MemoCache[SchemaKey, StructType](
+  private val schemaCache = new MemoCache[SchemaKey, StructType](
     capacity = 256, _.spark)(_ => ())
 
   /** One recursive Hadoop listing of `path`: (name, length, mtime) of
@@ -61,9 +61,10 @@ object Tables {
     * inference read then raises Spark's own error. `listStatus`, not
     * `listFiles`: the latter's `LocatedFileStatus` copies each file's
     * permission, which the local filesystem without native IO reads by
-    * forking `ls -ld` per file.
+    * forking `ls -ld` per file. Also the corpus part of every
+    * [[graft.operators.Artifacts]] key.
     */
-  private def fingerprint(spark: SparkSession,
+  private[graft] def fingerprint(spark: SparkSession,
       path: String): Seq[(String, Long, Long)] = {
     import org.apache.hadoop.fs.{FileStatus, Path}
     val p = new Path(path)
@@ -116,15 +117,20 @@ object Tables {
     // restore runs under the shared per-JVM flag lock — two concurrent
     // loads (or overlap with a streaming helper holding the flag for a
     // whole query) would otherwise interleave and restore a stale value.
-    val raw = withNanosAsLong(s)(load(s, d, "events"))
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
-      case _ => raw
-    }
+    tsMicros(withNanosAsLong(s)(load(s, d, "events")))
   }
+
+  /** An events frame with its nanos `ts` (read as long) floored to a
+    * µs timestamp; as is when `ts` already is a timestamp. Also the
+    * normalization of every events stream.
+    */
+  private[graft] def tsMicros(df: DataFrame): DataFrame =
+    df.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        df.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
+          org.apache.spark.sql.functions.expr("ts div 1000")))
+      case _ => df
+    }
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 

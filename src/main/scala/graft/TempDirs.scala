@@ -30,8 +30,8 @@ object TempDirs {
   }
 
   /** Delete a directory made by [[create]] now, not at JVM exit — the
-    * release hook of memoized TempDir stores, so an evicted store
-    * frees its disk in a long session.
+    * release of evicted `Artifacts` stores and of a stream's feed and
+    * checkpoint dirs, so a long session does not grow its disk.
     */
   def delete(path: String): Unit = {
     val p = java.nio.file.Paths.get(path)

@@ -93,33 +93,25 @@ object Dedup {
   private[graft] def graphSized(nNodes: Long)(df: DataFrame): DataFrame =
     if (nNodes <= GraphBroadcastNodeBudget) broadcast(df) else df
 
-  /** Memoized near-dup PAIR artifact per (session, sfDir, threshold,
-    * maxDf) — the `hitsEdgeMemo` convention applied to the dup graph:
-    * the verified pair list is the train-once artifact every graph
-    * analytic reads (`q_pagerank`, `q_label_prop`, `q_kcore`,
-    * `q_bfs_hops`, `q_triangles`, `q_clustering_coeff`,
-    * `q_assortativity`, `q_capture_recapture`, `dedup_clusters`, …
-    * all iterate the IDENTICAL pair set), so one session computes the
-    * candidate join once and serves every consumer from the
-    * checkpointed copy — at 100 TB a production pipeline persists the
-    * near-dup edge list and every downstream job reloads it. Bounded
-    * by [[MemoCache]] eviction (frees the checkpoint blocks).
-    */
-  private[graft] val dupPairMemo = new MemoCache[
-    (SparkSession, String, Long, Long), DataFrame](
-    capacity = 8, _._1)(MemoCache.freeLocalCheckpoint)
-
   /** Exact n-gram Jaccard near-dup pairs: candidates share ≥1
     * NON-HOT shingle (df ≤ maxDf), jaccard = |∩|/|∪| ≥ threshold over
     * the full shingle sets. Integer-exact arithmetic → the final
     * division is bit-identical in DuckDB (oracle-gated).
+    *
+    * The verified pair list is a train-once [[Artifacts]] frame per
+    * (corpus, threshold, maxDf): every graph analytic reads it
+    * (`q_pagerank`, `q_label_prop`, `q_kcore`, `q_bfs_hops`,
+    * `q_triangles`, `q_clustering_coeff`, `q_assortativity`,
+    * `q_capture_recapture`, `dedup_clusters`, … all iterate the
+    * IDENTICAL pair set), so one session computes the candidate join
+    * once and serves every consumer from the checkpointed copy — at
+    * 100 TB a production pipeline persists the near-dup edge list and
+    * every downstream job reloads it.
     */
   def ngramJaccard(spark: SparkSession, sfDir: String,
       threshold: Double = 0.5, maxDf: Long = DefaultMaxDf): DataFrame =
-    dupPairMemo.getOrCompute(
-      (spark, sfDir, java.lang.Double.doubleToLongBits(threshold), maxDf))(
-      jaccardFromStats(corpusPairStats(spark, sfDir, maxDf), threshold)
-        .localCheckpoint())
+    Artifacts.frame(spark, sfDir, "dedup_pairs", threshold, maxDf)(
+      jaccardFromStats(corpusPairStats(spark, sfDir, maxDf), threshold))
 
   private def jaccardFromStats(stats: DataFrame,
       threshold: Double): DataFrame =
@@ -192,17 +184,16 @@ object Dedup {
     */
   def ngramContainment(spark: SparkSession, sfDir: String,
       threshold: Double = 0.8, maxDf: Long = DefaultMaxDf): DataFrame =
-    corpusPairStats(spark, sfDir, maxDf)
-      .withColumn("containment",
-        col("n_common").cast("double")
-          / least(col("n_a"), col("n_b")).cast("double"))
-      .filter(col("containment") >= threshold)
-      .select("doc_a", "doc_b", "n_common", "containment")
+    containmentFromStats(corpusPairStats(spark, sfDir, maxDf), threshold)
 
   /** Same containment operator over an arbitrary (doc_id, sh) frame. */
   def ngramContainmentOver(docs: DataFrame, threshold: Double,
       maxDf: Long = DefaultMaxDf): DataFrame =
-    pairStats(docs, maxDf)
+    containmentFromStats(pairStats(docs, maxDf), threshold)
+
+  private def containmentFromStats(stats: DataFrame,
+      threshold: Double): DataFrame =
+    stats
       .withColumn("containment",
         col("n_common").cast("double")
           / least(col("n_a"), col("n_b")).cast("double"))
@@ -214,23 +205,18 @@ object Dedup {
     * sharing ≥1 non-hot (df ≤ maxDf) shingle, with n_common computed
     * over the FULL shingle sets (rare via the pair aggregation, hot
     * via the tiny per-doc hot arrays).
+    *
+    * A threshold-INDEPENDENT [[Artifacts]] frame per (corpus, maxDf):
+    * every exact near-dup consumer — the Jaccard and containment
+    * verifiers, the threshold sweep, the LSH parameter planner — reads
+    * the identical frame and differs only in the filter/projection
+    * applied on top, so the candidate self-join (the expensive pass)
+    * runs once per session and corpus.
     */
-  /** Memoized, threshold-INDEPENDENT pair-stats artifact per
-    * (session, sfDir, maxDf): every exact near-dup consumer — the
-    * Jaccard and containment verifiers, the threshold sweep, the LSH
-    * parameter planner — reads the identical
-    * (doc_a, doc_b, n_common, n_a, n_b) frame and differs only in the
-    * filter/projection applied on top, so the candidate self-join
-    * (the expensive pass) runs once per session and corpus.
-    */
-  private[graft] val pairStatsMemo = new MemoCache[
-    (SparkSession, String, Long), DataFrame](
-    capacity = 8, _._1)(MemoCache.freeLocalCheckpoint)
-
   private def corpusPairStats(spark: SparkSession, sfDir: String,
       maxDf: Long): DataFrame =
-    pairStatsMemo.getOrCompute((spark, sfDir, maxDf))(
-      pairStats(docShingles(spark, sfDir), maxDf).localCheckpoint())
+    Artifacts.frame(spark, sfDir, "dedup_pair_stats", maxDf)(
+      pairStats(docShingles(spark, sfDir), maxDf))
 
   private def pairStats(docs: DataFrame, maxDf: Long): DataFrame = {
     val sh = docs.select(col("doc_id"), explode(col("sh")).as("s"))
@@ -1364,28 +1350,21 @@ object Dedup {
     * (`dedup_substring` and `dedup_substring_span` run the IDENTICAL
     * hash pass and the IDENTICAL groupBy(h) count; they differ only
     * in the filter on the counts and what they join back). Built
-    * once per (session, corpus, k) into a per-JVM TempDir parquet
-    * store (the `ivfDirMemo` artifact convention — a production
-    * suffix-style dedup persists this hash pass once and every
-    * analysis reloads it): the store survives cache clearing, keeps
-    * the ~20x-corpus-bytes frame off the execution-memory budget,
-    * and re-reads cost a plain columnar scan. The counts table is
-    * derived FROM the written pos store, so the explode+hash pass
-    * runs exactly once per session.
+    * once per (session, corpus, k) into an [[Artifacts]] TempDir
+    * parquet store (a production suffix-style dedup persists this hash
+    * pass once and every analysis reloads it): the store survives
+    * cache clearing, keeps the ~20x-corpus-bytes frame off the
+    * execution-memory budget, and re-reads cost a plain columnar scan.
+    * The counts table is derived FROM the written pos store, so the
+    * explode+hash pass runs exactly once per session.
     */
-  private[graft] val posDirMemo = new MemoCache[
-    (SparkSession, String, Int), String](capacity = 4, _._1)(
-    graft.TempDirs.delete)
-
   private def substrStore(spark: SparkSession, sfDir: String,
       k: Int): (DataFrame, DataFrame) = {
-    val dir = posDirMemo.getOrCompute((spark, sfDir, k)) {
-      val d = graft.TempDirs.create("graft_substr_pos").toString
+    val dir = Artifacts.dir(spark, sfDir, "substr_pos", k) { d =>
       posOver(Tables.documents(spark, sfDir), k)
         .write.mode("overwrite").parquet(s"$d/pos")
       posCountsOver(Tables.parquet(spark, s"$d/pos"))
         .write.mode("overwrite").parquet(s"$d/counts")
-      d
     }
     (Tables.parquet(spark, s"$dir/pos"),
       Tables.parquet(spark, s"$dir/counts"))

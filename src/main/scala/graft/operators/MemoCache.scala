@@ -1,10 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
 
-/** Bounded LRU memo for train-once session artifacts — the unigram
-  * (words, vocabulary) pair, the unigram apply frame, the HITS edge
-  * graph. These are deliberately long-lived (the whole point is that
+import org.apache.spark.sql.{Dataset, SparkSession}
+
+/** Bounded LRU memo for session-long values — the one under
+  * [[Artifacts]], the registry of train-once artifacts (the unigram
+  * vocabulary, the HITS trajectory, the near-dup pairs, the ANN
+  * stores), and `Tables`' parquet schema cache. These are
+  * deliberately long-lived (the whole point is that
   * one session trains once and every consumer key reuses the
   * artifact), but before this cache they were plain
   * `ConcurrentHashMap`s keyed by SparkSession with no eviction: a
@@ -62,8 +66,22 @@ final class MemoCache[K, V](capacity: Int,
     winner
   }
 
-  /** Test hook. */
+  /** Drop every entry whose key satisfies `p`, releasing its value. */
+  def removeWhere(p: K => Boolean): Unit = {
+    var dropped = List.empty[V]
+    map.synchronized {
+      val it = map.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (p(e.getKey)) { dropped ::= e.getValue; it.remove() }
+      }
+    }
+    dropped.foreach(release)
+  }
+
+  /** Test hooks. */
   def size: Int = map.synchronized(map.size())
+  def keys: List[K] = map.synchronized(map.keySet().asScala.toList)
 }
 
 object MemoCache {
@@ -71,7 +89,7 @@ object MemoCache {
     * localCheckpoint-backed frame (no-op for other plans, and for
     * frames of an already-stopped session — nothing left to free).
     */
-  def freeLocalCheckpoint(df: DataFrame): Unit =
+  def freeLocalCheckpoint(df: Dataset[_]): Unit =
     if (!df.sparkSession.sparkContext.isStopped)
       df.queryExecution.analyzed.collectLeaves().foreach {
         case l: org.apache.spark.sql.execution.LogicalRDD =>

@@ -1093,47 +1093,40 @@ object Relational {
     * order-shaped fact), never corpus-quadratic; per-order distinct
     * parts first so multi-line items don't double-count.
     */
-  /** Shared BASKET artifacts per (session, corpus) — `q_market_basket`
+  /** Shared BASKET [[Artifacts]] frames per corpus — `q_market_basket`
     * and `q_item_similarity` both start from the identical distinct
     * (order, part) incidence and its unordered co-occurrence counts;
-    * before this memo each key re-scanned lineitem and self-joined
-    * the incidence with itself (the incidence subtree twice per key).
-    * `orderParts` is ONE partial-aggregated shuffle (collect_set
-    * dedups (order, part) and the set is sorted, so the kernel's
-    * a < b pairs are exactly the self-join's `part_a < part_b` rows);
-    * `basketPairCounts` explodes the pairs MAP-SIDE (codegen'd
+    * before these artifacts each key re-scanned lineitem and
+    * self-joined the incidence with itself (the incidence subtree
+    * twice per key). `orderParts` is ONE partial-aggregated shuffle
+    * (collect_set dedups (order, part) and the set is sorted, so the
+    * kernel's a < b pairs are exactly the self-join's
+    * `part_a < part_b` rows); `basketPairCounts` explodes the pairs
+    * MAP-SIDE (codegen'd
     * [[graft.functions.CatalystExprs.sorted_pairs]], bounded by
     * lines-per-order) into one partial-aggregated count shuffle.
     * Two shuffles total for the artifact both keys read, vs four per
     * key before (guide §2.4 — remove shuffles outright; §1.2 — don't
     * recompute).
+    *
+    * (l_orderkey, ps: sorted distinct parts) — one row per order.
     */
-  private[graft] val orderPartsMemo = new MemoCache[
-    (SparkSession, String), DataFrame](
-    capacity = 8, _._1)(MemoCache.freeLocalCheckpoint)
-  private[graft] val basketPairMemo = new MemoCache[
-    (SparkSession, String), DataFrame](
-    capacity = 8, _._1)(MemoCache.freeLocalCheckpoint)
-
-  /** (l_orderkey, ps: sorted distinct parts) — one row per order. */
   private def orderParts(spark: SparkSession, sfDir: String): DataFrame =
-    orderPartsMemo.getOrCompute((spark, sfDir))(
+    Artifacts.frame(spark, sfDir, "basket_order_parts")(
       Tables.lineitem(spark, sfDir)
         .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        .localCheckpoint())
+        .agg(sort_array(collect_set(col("l_partkey"))).as("ps")))
 
   /** (pa, pb, n_ab) with pa < pb — co-order counts over all baskets. */
   private def basketPairCounts(spark: SparkSession,
       sfDir: String): DataFrame =
-    basketPairMemo.getOrCompute((spark, sfDir))(
+    Artifacts.frame(spark, sfDir, "basket_pairs")(
       orderParts(spark, sfDir)
         .select(explode(
           graft.functions.CatalystExprs.sorted_pairs(col("ps"))).as("pr"))
         .select(col("pr.a").as("pa"), col("pr.b").as("pb"))
         .groupBy("pa", "pb")
-        .agg(count(lit(1)).as("n_ab"))
-        .localCheckpoint())
+        .agg(count(lit(1)).as("n_ab")))
 
   def marketBasket(spark: SparkSession, sfDir: String,
       minCount: Long = 2, topK: Int = 20): DataFrame =
@@ -1160,7 +1153,7 @@ object Relational {
     */
   def itemSimilarity(spark: SparkSession, sfDir: String,
       topK: Int = 3): DataFrame = {
-    // both artifacts come from the shared basket memos (see
+    // both artifacts come from the shared basket artifacts (see
     // marketBasket): the incidence is never self-joined, the pair
     // counts are computed once per session
     val freq = orderParts(spark, sfDir)
@@ -2775,27 +2768,6 @@ object Relational {
       lit(rounds.toLong).as("n_rounds"), lit(converged).as("converged"))
   }
 
-  /** Memoized HITS edge table per (session, sfDir): `q_hits`, the
-    * convergence-mode twin, and the certificate spec's fixed unrolls
-    * all iterate the IDENTICAL distinct (customer, part) graph, so
-    * one session builds it once — the graph is the train-once
-    * artifact here, exactly like the unigram vocabulary (at 100 TB a
-    * production HITS persists this edge list and every run reloads
-    * it).
-    */
-  private[graft] val hitsEdgeMemo = new MemoCache[
-    (SparkSession, String), DataFrame](
-    capacity = 8, _._1)(MemoCache.freeLocalCheckpoint)
-
-  private def hitsEdges(spark: SparkSession, sfDir: String): DataFrame =
-    hitsEdgeMemo.getOrCompute((spark, sfDir))(
-      Tables.lineitem(spark, sfDir)
-        .join(Tables.orders(spark, sfDir),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("u"), col("l_partkey").as("p"))
-        .distinct()
-        .localCheckpoint())
-
   /** Node budget under which a HITS score/degree vector broadcasts
     * (~4M nodes ≈ a few hundred MB built — the guide's comfortable
     * broadcast range). The per-round joins read score frames through
@@ -2809,15 +2781,21 @@ object Relational {
     */
   private val HitsBroadcastNodeBudget = 4L * 1000 * 1000
 
-  /** The memoized HITS TRAJECTORY per (session, corpus) — the
-    * hitsEdgeMemo convention one level up: the (a, h) score vectors
-    * are a deterministic function of the edge graph alone (eps only
-    * decides where a caller STOPS reading), so `q_hits` (2 rounds),
-    * `q_hits_converged` (rounds until the L1 test fires) and the
-    * certificate spec's fixed unrolls all read prefixes of ONE
-    * fixed-point iteration. Before this memo each caller re-ran the
-    * edge join 2×rounds times from round 1 — a production HITS
-    * maintains one score table and every consumer reads it.
+  /** The HITS TRAJECTORY, an [[Artifacts]] value per corpus that
+    * owns every frame it reads: the distinct (customer, part) edge
+    * graph, both degree vectors and each round's score vectors, all
+    * freed by `close()` when the registry evicts it. `q_hits`, the
+    * convergence-mode twin, and the certificate spec's fixed unrolls
+    * all iterate the IDENTICAL graph (at 100 TB a production HITS
+    * persists this edge list and every run reloads it), and the
+    * (a, h) score vectors are a deterministic function of the edge
+    * graph alone (eps only decides where a caller STOPS reading), so
+    * `q_hits` (2 rounds), `q_hits_converged` (rounds until the L1
+    * test fires) and the certificate spec's fixed unrolls all read
+    * prefixes of ONE fixed-point iteration. Before this artifact each
+    * caller re-ran the edge join 2×rounds times from round 1 — a
+    * production HITS maintains one score table and every consumer
+    * reads it.
     *
     * Round economy inside the trajectory: one half-step is ONE
     * materialized job — the edge join + decimal side-sums
@@ -2837,9 +2815,14 @@ object Relational {
     * cheap narrow projection over its round's checkpoint.
     */
   private[graft] final class HitsTrajectory(spark: SparkSession,
-      sfDir: String) {
+      sfDir: String) extends AutoCloseable {
     private val d289 = DecimalType(28, 9)
-    private[graft] val edges = hitsEdges(spark, sfDir)
+    private val edges = Tables.lineitem(spark, sfDir)
+      .join(Tables.orders(spark, sfDir),
+        col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_custkey").as("u"), col("l_partkey").as("p"))
+      .distinct()
+      .localCheckpoint()
 
     /** Per-node degree vector on side `key`, checkpointed once, with
       * its row count (= the side's distinct nodes) observed on the
@@ -2914,20 +2897,16 @@ object Relational {
           Seq("node"), "left")
         .agg(coalesce(sum(abs(col("s") - col("prev"))), lit(0.0)))
         .first().getDouble(0)))
-    /** Evict hook: free every checkpointed round and both degree
-      * vectors.
+    /** Evict hook: free the edge graph, every checkpointed round and
+      * both degree vectors.
       */
-    private[graft] def release(): Unit = synchronized(
-      (as ++ hs ++ Seq(uDeg, pDeg)).foreach(MemoCache.freeLocalCheckpoint))
+    def close(): Unit = synchronized((as ++ hs ++ Seq(edges, uDeg, pDeg))
+      .foreach(MemoCache.freeLocalCheckpoint))
   }
-
-  private[graft] val hitsTrajMemo = new MemoCache[
-    (SparkSession, String), HitsTrajectory](
-    capacity = 4, _._1)(_.release())
 
   private[graft] def hitsRun(spark: SparkSession, sfDir: String,
       maxRounds: Int, eps: Option[Double]): (DataFrame, Int, Boolean) = {
-    val traj = hitsTrajMemo.getOrCompute((spark, sfDir))(
+    val traj = Artifacts.value(spark, sfDir, "hits_trajectory")(
       new HitsTrajectory(spark, sfDir))
     var rounds = 0
     var converged = false

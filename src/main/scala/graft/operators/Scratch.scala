@@ -32,11 +32,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * action and is reclaimed immediately after — the bounded-lifetime
   * shape the frames always claimed in their comments.
   *
-  * What this deliberately does NOT cover: the keyed session memos
-  * (unigram train/apply, HITS edge graph, the per-corpus `vecs`
-  * projection) — those are train-once artifacts whose whole point is
-  * surviving across calls; they are bounded by [[MemoCache]]'s
-  * eviction instead.
+  * What this deliberately does NOT cover: the train-once artifacts
+  * (unigram train/apply, the HITS trajectory) and the per-corpus
+  * `vecs` projection — their whole point is surviving across calls;
+  * the artifacts are bounded by the [[Artifacts]] registry's
+  * eviction instead, and `vecs` is one cache-manager entry per
+  * session and corpus.
   *
   * Unpersisting is always a performance hint, never a correctness
   * edge: a released frame recomputes from its (deterministic) plan.

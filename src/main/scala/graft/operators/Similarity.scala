@@ -690,26 +690,6 @@ object Similarity {
     */
   val DerivedWidth = -1
 
-  /** Banded SRP near-neighbor pairs: each band gets its own
-    * `planesPerBand` hyperplanes (a slice of one seeded family); a
-    * pair is a candidate when ANY band's sign-code agrees (standard
-    * OR-of-ANDs LSH amplification), then verified by exact cosine ≥
-    * threshold. The shuffle keys are (band, code) — linear in corpus
-    * size, candidates deduped before the verify.
-    */
-  /** Memoized UNFILTERED verified SRP pair artifacts per (session,
-    * sfDir, probe family, bands, width, probes) — the dupPairMemo
-    * convention lifted to the embedding side: every SRP consumer
-    * (ann_lsh at τ=0.3, dedup_embedding at τ=0.45, the multiprobe key
-    * at τ=0.3, the knn graph with no floor at all) runs the identical
-    * banded candidate join + exact-cosine verify and differs only in
-    * the threshold filter on top, so one session pays the join once
-    * per family and every key filters the checkpointed copy.
-    */
-  private[graft] val srpPairMemo = new MemoCache[
-    (SparkSession, String, String, Int, Int, Int), DataFrame](
-    capacity = 8, _._1)(MemoCache.freeLocalCheckpoint)
-
   /** Exact-cosine verification of a canonical (vec_a < vec_b)
     * candidate frame — shared by both SRP probe families.
     */
@@ -725,6 +705,23 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"), col("cos"))
   }
 
+  /** Banded SRP near-neighbor pairs: each band gets its own
+    * `planesPerBand` hyperplanes (a slice of one seeded family); a
+    * pair is a candidate when ANY band's sign-code agrees (standard
+    * OR-of-ANDs LSH amplification), then verified by exact cosine ≥
+    * threshold. The shuffle keys are (band, code) — linear in corpus
+    * size, candidates deduped before the verify.
+    *
+    * The verify step keeps the UNFILTERED verified SRP pairs as an
+    * [[Artifacts]] frame per (corpus, probe family, bands, width,
+    * probes) — the near-dup pair artifact lifted to the embedding
+    * side: every SRP consumer (ann_lsh at τ=0.3, dedup_embedding at
+    * τ=0.45, the multiprobe key at τ=0.3, the knn graph with no floor
+    * at all) runs the identical banded candidate join + exact-cosine
+    * verify and differs only in the threshold filter on top, so one
+    * session pays the join once per family and every key filters the
+    * checkpointed copy.
+    */
   def annLsh(spark: SparkSession, sfDir: String,
       threshold: Double = 0.3,
       bands: Int = DefaultSrpBands,
@@ -738,8 +735,8 @@ object Similarity {
     val ppb =
       if (planesPerBand != DerivedWidth) planesPerBand
       else scaledPlanesPerBand(coded.count(), floor = DefaultPlanesPerBand)
-    val pairs = srpPairMemo.getOrCompute(
-        (spark, sfDir, "single", bands, ppb, 0)) {
+    val pairs = Artifacts.frame(spark, sfDir, "srp_pairs", "single", bands,
+        ppb, 0) {
       val fam = planesFor(bands * ppb)
       val banded = coded.select(
           col("vec_id"),
@@ -755,7 +752,7 @@ object Similarity {
             && col("x.vec_id") < col("y.vec_id"))
         .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
         .distinct()
-      verifyPairs(coded, cand).localCheckpoint()
+      verifyPairs(coded, cand)
     }
     pairs.filter(col("cos") >= threshold)
   }
@@ -806,15 +803,15 @@ object Similarity {
     val ppb =
       if (planesPerBand != DerivedWidth) planesPerBand
       else scaledPlanesPerBand(coded.count())
-    val verified = srpPairMemo.getOrCompute(
-        (spark, sfDir, "multi", bands, ppb, probes)) {
+    val verified = Artifacts.frame(spark, sfDir, "srp_pairs", "multi", bands,
+        ppb, probes) {
       val banded = mpCodes(coded, bands, ppb, probes)
       val cand = banded.as("x").join(banded.as("y"),
           col("x.band") === col("y.band") && col("x.code") === col("y.code")
             && col("x.vec_id") < col("y.vec_id"))
         .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
         .distinct()
-      verifyPairs(coded, cand).localCheckpoint()
+      verifyPairs(coded, cand)
     }
     // −∞ means NO verify floor (the knn-graph caller keeps every
     // candidate); `cos >= -1.0` is NOT the absence of a filter — a
@@ -1598,6 +1595,25 @@ object Similarity {
       k: Int = KmClusters, iters: Int = KmIters): DataFrame =
     kmeansFit(spark, vecs(spark, sfDir), k, iters)
 
+  /** The (truth, system-under-test) top-k frames of the eval family
+    * are [[Artifacts]] frames per (corpus, k, nQueries) —
+    * `q_retrieval_metrics`, `q_ndcg`, `q_recall_curve`, and the recall
+    * report all join the SAME brute-force truth against the SAME IVF
+    * answer (both bounded k×nQueries frames), and each referenced them
+    * 2–3 times inside one plan, so the corpus scans behind them ran up
+    * to a dozen times per bench run. The truth list is the eval
+    * harness's train-once artifact.
+    */
+  private[graft] def truthTopk(spark: SparkSession, sfDir: String,
+      k: Int = 10, nQueries: Int = 20): DataFrame =
+    Artifacts.frame(spark, sfDir, "eval_truth_topk", k, nQueries)(
+      annTopkBrute(spark, sfDir, k, nQueries))
+
+  private[graft] def ivfTopk(spark: SparkSession, sfDir: String,
+      k: Int = 10, nQueries: Int = 20): DataFrame =
+    Artifacts.frame(spark, sfDir, "eval_ivf_topk", k, nQueries)(
+      annIvf(spark, sfDir, k, nQueries))
+
   /** RETRIEVAL-QUALITY EVALUATION as a first-class operator — the
     * recall@k / MRR harness every vector-search deployment runs
     * before trusting an index (and re-runs after every reindex):
@@ -1618,29 +1634,6 @@ object Similarity {
     * callers aggregate the per-query rows in decimal if they need a
     * corpus headline).
     */
-  /** Memoized (truth, system-under-test) top-k frames for the eval
-    * family — `q_retrieval_metrics`, `q_ndcg`, `q_recall_curve`, and
-    * the recall report all join the SAME brute-force truth against
-    * the SAME IVF answer (both bounded k×nQueries frames), and each
-    * referenced them 2–3 times inside one plan, so the corpus scans
-    * behind them ran up to a dozen times per bench run. The truth
-    * list is the eval harness's train-once artifact; checkpoint both
-    * once per (session, corpus, k, nQueries).
-    */
-  private[graft] val evalTopkMemo = new MemoCache[
-    (SparkSession, String, String, Int, Int), DataFrame](
-    capacity = 8, _._1)(MemoCache.freeLocalCheckpoint)
-
-  private[graft] def truthTopk(spark: SparkSession, sfDir: String,
-      k: Int = 10, nQueries: Int = 20): DataFrame =
-    evalTopkMemo.getOrCompute((spark, sfDir, "brute", k, nQueries))(
-      annTopkBrute(spark, sfDir, k, nQueries).localCheckpoint())
-
-  private[graft] def ivfTopk(spark: SparkSession, sfDir: String,
-      k: Int = 10, nQueries: Int = 20): DataFrame =
-    evalTopkMemo.getOrCompute((spark, sfDir, "ivf", k, nQueries))(
-      annIvf(spark, sfDir, k, nQueries).localCheckpoint())
-
   def retrievalMetrics(spark: SparkSession, sfDir: String,
       k: Int = 10, nQueries: Int = 20): DataFrame = {
     val truth = truthTopk(spark, sfDir, k, nQueries)

@@ -217,17 +217,6 @@ object Stats {
     * partition into the final merge, never a global sort).
     * Rows-gated; the planted-flip spec pins rank 1.
     */
-  /** Cross-fitted fold betas per (session, corpus, folds) — the
-    * ugTrainMemo convention applied to the probe family: the Newton
-    * cross-fit (folds × 8 driver-loop aggregate jobs) is the
-    * train-once artifact, the mislabel ranking is a cheap scoring
-    * pass over it. The betas are tiny driver arrays; nothing survives
-    * the session.
-    */
-  private[graft] val probeBetaMemo = new MemoCache[
-    (SparkSession, String, Int), Seq[Array[Double]]](
-    capacity = 4, _._1)(_ => ())
-
   def probeMislabel(spark: SparkSession, sfDir: String,
       k: Int = 20, folds: Int = 3): DataFrame = {
     val features = Tables.embeddings(spark, sfDir)
@@ -235,7 +224,11 @@ object Stats {
       .select(col("vec_id"),
         (col("label") === 0).cast("int").as("y"),
         col("embedding").cast("array<double>").as("x"))
-    val betas = probeBetaMemo.getOrCompute((spark, sfDir, folds))(
+    // the cross-fitted fold betas are an `Artifacts` driver value per
+    // (corpus, folds): the Newton cross-fit (folds × 8 driver-loop
+    // aggregate jobs) is the train-once artifact, the mislabel
+    // ranking a cheap scoring pass over it
+    val betas = Artifacts.value(spark, sfDir, "probe_betas", folds)(
       trainFoldBetas(features, folds))
     scoreFolds(features, betas, k)
   }

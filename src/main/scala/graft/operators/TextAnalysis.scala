@@ -324,29 +324,24 @@ object TextAnalysis {
     unigramLmFrom(words, vocab)
   }
 
-  /** Memoized (word table, trained vocabulary) per (session, sfDir,
-    * params) — the unigram family's TRAIN-ONCE discipline:
-    * `text_unigram_lm` / `_apply` / `_coverage` are three views over
-    * ONE trained tokenizer, so a verify/bench session pays the
-    * seed+prune passes once (the AnnIndex artifact discipline in
-    * memo form — at 100 TB the trained vocabulary IS a persisted
-    * artifact a serving job reloads). Keyed on the session so an
-    * entry from a stopped session can never serve a later one;
-    * planted-corpus `Over` variants bypass the memo entirely.
+  /** The unigram family's TRAIN-ONCE discipline: `text_unigram_lm`
+    * / `_apply` / `_coverage` are three views over ONE trained
+    * tokenizer, so a verify/bench session pays the seed+prune passes
+    * once (at 100 TB the trained vocabulary IS a persisted artifact a
+    * serving job reloads). The unique-word table is an [[Artifacts]]
+    * frame per corpus, the vocabulary a driver value per (corpus,
+    * params); planted-corpus `Over` variants bypass the registry
+    * entirely.
     */
-  private[graft] val ugTrainMemo = new MemoCache[
-    (SparkSession, String, Int, Seq[Int], Int), (DataFrame, Seq[String])](
-    capacity = 8, _._1)(v => MemoCache.freeLocalCheckpoint(v._1))
-
   private def trainedUnigram(spark: SparkSession, sfDir: String,
       seedSize: Int, pruneSizes: Seq[Int], maxPieceLen: Int)
-      : (DataFrame, Seq[String]) =
-    ugTrainMemo.getOrCompute(
-      (spark, sfDir, seedSize, pruneSizes, maxPieceLen)) {
-        val words = unigramWords(Tables.documents(spark, sfDir))
-        (words,
-          trainUnigramVocab(words, seedSize, pruneSizes, maxPieceLen))
-      }
+      : (DataFrame, Seq[String]) = {
+    def words = Artifacts.frame(spark, sfDir, "unigram_words")(
+      unigramWords(Tables.documents(spark, sfDir)))
+    (words, Artifacts.value(spark, sfDir, "unigram_vocab", seedSize,
+      pruneSizes, maxPieceLen)(
+      trainUnigramVocab(words, seedSize, pruneSizes, maxPieceLen)))
+  }
 
   /** Same trainer over any documents-shaped frame — planted-corpus
     * specs pin the greedy segmentation, the prune order, and the
@@ -354,7 +349,7 @@ object TextAnalysis {
     */
   private[graft] def unigramLmOver(docs: DataFrame, seedSize: Int,
       pruneSizes: Seq[Int], maxPieceLen: Int): DataFrame = {
-    val words = unigramWords(docs)
+    val words = unigramWords(docs).localCheckpoint()
     unigramLmFrom(words,
       trainUnigramVocab(words, seedSize, pruneSizes, maxPieceLen))
   }
@@ -384,7 +379,6 @@ object TextAnalysis {
     .select(explode(wsTokens(col("text"))).as("w"))
     .filter(length(col("w")) >= 2 && col("w").rlike("^[a-z]+$"))
     .groupBy("w").agg(count(lit(1)).as("n"))
-    .localCheckpoint()
 
   /** Greedy longest-match segmentation of column `w` as ONE codegen'd
     * HOF over the word's character positions: pieces sorted
@@ -483,27 +477,23 @@ object TextAnalysis {
       maxPieceLen: Int = 4): DataFrame =
     unigramApplyShared(spark, sfDir, seedSize, pruneSizes, maxPieceLen)
 
-  /** Memoized APPLY frame per (session, sfDir, params): `_apply` and
-    * `_coverage` consume the identical per-document encoding, so the
-    * corpus segment-join pass runs once per session and coverage
-    * becomes a broadcast-dim rollup over the cached rows (the frame
-    * is #docs × 4 longs — bounded). localCheckpoint is the right
-    * materialization here (unlike the substring families' per-
-    * character scratch): the frame is tiny and both keys re-read it.
+  /** The APPLY frame is an [[Artifacts]] frame per (corpus, params):
+    * `_apply` and `_coverage` consume the identical per-document
+    * encoding, so the corpus segment-join pass runs once per session
+    * and coverage becomes a broadcast-dim rollup over the checkpointed
+    * rows (the frame is #docs × 4 longs — bounded). localCheckpoint
+    * is the right materialization here (unlike the substring
+    * families' per-character scratch): the frame is tiny and both
+    * keys re-read it.
     */
-  private[graft] val ugApplyMemo = new MemoCache[
-    (SparkSession, String, Int, Seq[Int], Int), DataFrame](
-    capacity = 8, _._1)(MemoCache.freeLocalCheckpoint)
-
   private def unigramApplyShared(spark: SparkSession, sfDir: String,
       seedSize: Int, pruneSizes: Seq[Int], maxPieceLen: Int): DataFrame =
-    ugApplyMemo.getOrCompute(
-      (spark, sfDir, seedSize, pruneSizes, maxPieceLen)) {
-        val (words, vocab) =
-          trainedUnigram(spark, sfDir, seedSize, pruneSizes, maxPieceLen)
-        unigramApplyFrom(Tables.documents(spark, sfDir), words, vocab)
-          .localCheckpoint()
-      }
+    Artifacts.frame(spark, sfDir, "unigram_apply", seedSize, pruneSizes,
+        maxPieceLen) {
+      val (words, vocab) =
+        trainedUnigram(spark, sfDir, seedSize, pruneSizes, maxPieceLen)
+      unigramApplyFrom(Tables.documents(spark, sfDir), words, vocab)
+    }
 
   /** UNIGRAM COVERAGE (`text_unigram_coverage`) — close the loop the
     * way [[tokenizerCoverage]] closes BPE's: the apply rows rolled up
@@ -538,7 +528,7 @@ object TextAnalysis {
 
   private[graft] def unigramApplyOver(docs: DataFrame, seedSize: Int,
       pruneSizes: Seq[Int], maxPieceLen: Int): DataFrame = {
-    val words = unigramWords(docs)
+    val words = unigramWords(docs).localCheckpoint()
     unigramApplyFrom(docs, words,
       trainUnigramVocab(words, seedSize, pruneSizes, maxPieceLen))
   }
@@ -735,6 +725,42 @@ object TextAnalysis {
         round(col("nll_sum").cast("double") / col("n_tokens"), 6).as("avg_nll"))
   }
 
+  /** The word-level LM count tables — (UNPRUNED bigram counts,
+    * unigram counts, token total), one [[Artifacts]] frame each per
+    * corpus: `text_perplexity_bigram` and `text_kneser_ney` both count
+    * the identical corpus bigrams and differ only in smoothing; a
+    * production LM counts once and every scorer reloads the tables.
+    * The per-doc scoring fan-out stays per-call (it IS each query's
+    * work).
+    */
+  private def bigramCounts(spark: SparkSession, sfDir: String): DataFrame =
+    Artifacts.frame(spark, sfDir, "lm_bigram_counts")(
+      bigramsOf(wordArraysOf(Tables.documents(spark, sfDir)))
+        .groupBy("a", "b").agg(count(lit(1)).as("c_ab")))
+
+  private def bigramStats(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    def tok = wordArraysOf(Tables.documents(spark, sfDir))
+      .select(col("doc_id"), explode(col("w")).as("w"))
+    (bigramCounts(spark, sfDir),
+      Artifacts.frame(spark, sfDir, "lm_unigram_counts")(
+        tok.groupBy("w").agg(count(lit(1)).as("cw"))),
+      Artifacts.frame(spark, sfDir, "lm_token_total")(
+        tok.agg(count(lit(1)).as("n_total"))))
+  }
+
+  private def wordArraysOf(docs: DataFrame): DataFrame = docs
+    .select(col("doc_id"),
+      filter(split(col("text"), WordSplit), w => w =!= "").as("w"))
+
+  private def bigramsOf(words: DataFrame): DataFrame = words
+    .filter(size(col("w")) >= 2)
+    .select(col("doc_id"), explode(expr(
+      "transform(sequence(1, size(w) - 1), " +
+        "i -> struct(element_at(w, i) AS a, element_at(w, i + 1) AS b))"))
+      .as("pr"))
+    .select(col("doc_id"), col("pr.a").as("a"), col("pr.b").as("b"))
+
   /** Bigram LM perplexity with Stupid Backoff (Brants et al. 2007,
     * "Large Language Models in Machine Translation" — the
     * division-free web-scale scheme): score S(b|a) = c(ab)/c(a) when
@@ -754,45 +780,6 @@ object TextAnalysis {
     * each count table (broadcast N); per-doc reduce. No corpus-global
     * state beyond the count tables themselves.
     */
-  /** The word-level LM count tables per (session, corpus) —
-    * (UNPRUNED bigram counts, unigram counts, token total), the
-    * ugTrainMemo convention for the scoring LMs: `text_perplexity_
-    * bigram` and `text_kneser_ney` both count the identical corpus
-    * bigrams and differ only in smoothing; a production LM counts
-    * once and every scorer reloads the tables. The per-doc scoring
-    * fan-out stays per-call (it IS each query's work).
-    */
-  private[graft] val bigramStatsMemo = new MemoCache[
-    (SparkSession, String), (DataFrame, DataFrame, DataFrame)](
-    capacity = 4, _._1)(v => {
-      MemoCache.freeLocalCheckpoint(v._1)
-      MemoCache.freeLocalCheckpoint(v._2)
-      MemoCache.freeLocalCheckpoint(v._3)
-    })
-
-  private def bigramStats(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    bigramStatsMemo.getOrCompute((spark, sfDir)) {
-      val words = wordArraysOf(Tables.documents(spark, sfDir))
-      val tok = words.select(col("doc_id"), explode(col("w")).as("w"))
-      (bigramsOf(words).groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
-          .localCheckpoint(),
-        tok.groupBy("w").agg(count(lit(1)).as("cw")).localCheckpoint(),
-        tok.agg(count(lit(1)).as("n_total")).localCheckpoint())
-    }
-
-  private def wordArraysOf(docs: DataFrame): DataFrame = docs
-    .select(col("doc_id"),
-      filter(split(col("text"), WordSplit), w => w =!= "").as("w"))
-
-  private def bigramsOf(words: DataFrame): DataFrame = words
-    .filter(size(col("w")) >= 2)
-    .select(col("doc_id"), explode(expr(
-      "transform(sequence(1, size(w) - 1), " +
-        "i -> struct(element_at(w, i) AS a, element_at(w, i + 1) AS b))"))
-      .as("pr"))
-    .select(col("doc_id"), col("pr.a").as("a"), col("pr.b").as("b"))
-
   def perplexityBigram(spark: SparkSession, sfDir: String,
       minCount: Long = 2): DataFrame = {
     val (cabAll, uni, tot) = bigramStats(spark, sfDir)
@@ -871,18 +858,6 @@ object TextAnalysis {
     * word / word-pair; scoring is two broadcast-or-shuffle joins
     * against tables that grow with the VOCABULARY, not the corpus.
     */
-  /** Persisted-LM artifact store per (session, corpus, minCount) —
-    * the `ivfDirMemo` convention lifted to the LM family: the model
-    * is the train-once artifact (a production LM is trained offline
-    * ONCE and every ingest batch scores against it), so one session
-    * builds the count tables once and every call serves from the
-    * parquet store. The store is a per-JVM TempDir — nothing survives
-    * the session.
-    */
-  private[graft] val lmDirMemo = new MemoCache[
-    (SparkSession, String, Long), String](capacity = 4, _._1)(
-    graft.TempDirs.delete)
-
   def lmPersisted(spark: SparkSession, sfDir: String,
       minCount: Long = 2): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
@@ -891,29 +866,22 @@ object TextAnalysis {
         .cast("long").as("t"))
     def half(pred: Column => Column): DataFrame =
       docs.crossJoin(broadcast(thr)).filter(pred(col("t"))).drop("t")
-    def wordArrays(d: DataFrame): DataFrame = d.select(col("doc_id"),
-      filter(split(col("text"), WordSplit), w => w =!= "").as("w"))
-    def bigrams(words: DataFrame): DataFrame = words
-      .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) - 1), " +
-          "i -> struct(element_at(w, i) AS a, element_at(w, i + 1) AS b))"))
-        .as("pr"))
-      .select(col("doc_id"), col("pr.a").as("a"), col("pr.b").as("b"))
     // TRAIN once per (session, corpus, minCount): count tables from
-    // the id-lower half, persisted to the session store
-    val dir = lmDirMemo.getOrCompute((spark, sfDir, minCount)) {
-      val d = graft.TempDirs.create("graft_lm_store").toString
-      val trainWords = wordArrays(half(col("doc_id") <= _))
+    // the id-lower half, persisted to an `Artifacts` store — the
+    // model is the train-once artifact (a production LM is trained
+    // offline ONCE and every ingest batch scores against it), so one
+    // session builds the count tables once and every call serves
+    // from the parquet store
+    val dir = Artifacts.dir(spark, sfDir, "lm_store", minCount) { d =>
+      val trainWords = wordArraysOf(half(col("doc_id") <= _))
       val trainTok = trainWords.select(explode(col("w")).as("w"))
       trainTok.groupBy("w").agg(count(lit(1)).as("cw"))
         .write.mode("overwrite").parquet(s"$d/uni")
-      bigrams(trainWords).groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
+      bigramsOf(trainWords).groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
         .filter(col("c_ab") >= minCount)
         .write.mode("overwrite").parquet(s"$d/big")
       trainTok.agg(count(lit(1)).as("n_total"))
         .write.mode("overwrite").parquet(s"$d/meta")
-      d
     }
     // SERVE: held-out half scored from artifacts only
     scoreWithLm(half(col("doc_id") > _),
@@ -929,16 +897,7 @@ object TextAnalysis {
     */
   private[graft] def scoreWithLm(docs: DataFrame, uni: DataFrame,
       cab: DataFrame, tot: DataFrame): DataFrame = {
-    def wordArrays(d: DataFrame): DataFrame = d.select(col("doc_id"),
-      filter(split(col("text"), WordSplit), w => w =!= "").as("w"))
-    def bigrams(words: DataFrame): DataFrame = words
-      .filter(size(col("w")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(1, size(w) - 1), " +
-          "i -> struct(element_at(w, i) AS a, element_at(w, i + 1) AS b))"))
-        .as("pr"))
-      .select(col("doc_id"), col("pr.a").as("a"), col("pr.b").as("b"))
-    val words = wordArrays(docs)
+    val words = wordArraysOf(docs)
     val lead = words.filter(size(col("w")) >= 1)
       .select(col("doc_id"), element_at(col("w"), 1).as("w"))
       .join(uni.select(col("w"), col("cw").as("c_b")), Seq("w"), "left")
@@ -948,7 +907,7 @@ object TextAnalysis {
           .as("nll"),
         lit(0L).as("backoff"),
         when(col("c_b").isNull, 1L).otherwise(0L).as("oov"))
-    val rest = bigrams(words)
+    val rest = bigramsOf(words)
       .join(cab, Seq("a", "b"), "left")
       .join(uni.select(col("w").as("b"), col("cw").as("c_b")),
         Seq("b"), "left")
@@ -1542,22 +1501,17 @@ object TextAnalysis {
     bpeMergesOver(docs, nMerges).collect()
       .sortBy(_.getLong(0)).map(_.getString(1)).toSeq
 
-  /** Memoized BPE train+encode artifact per (session, sfDir,
-    * nMerges) — the ugTrainMemo convention for the BPE family: the
-    * `bpe_apply` key, the shard writer, and the bin packer all
-    * consume the identical encoded corpus, and each call re-ran the
-    * merge training (a driver collect over nMerges pair-count
-    * rounds) plus the full encode pass.
+  /** The BPE train+encode result is an [[Artifacts]] frame per
+    * (corpus, nMerges): the `bpe_apply` key, the shard writer, and the
+    * bin packer all consume the identical encoded corpus, and each
+    * call re-ran the merge training (a driver collect over nMerges
+    * pair-count rounds) plus the full encode pass.
     */
-  private[graft] val bpeApplyMemo = new MemoCache[
-    (SparkSession, String, Int), DataFrame](
-    capacity = 4, _._1)(MemoCache.freeLocalCheckpoint)
-
   def bpeApply(spark: SparkSession, sfDir: String,
       nMerges: Int = 3): DataFrame =
-    bpeApplyMemo.getOrCompute((spark, sfDir, nMerges)) {
+    Artifacts.frame(spark, sfDir, "bpe_apply", nMerges) {
       val docs = Tables.documents(spark, sfDir)
-      bpeApplyOver(docs, trainedMerges(docs, nMerges)).localCheckpoint()
+      bpeApplyOver(docs, trainedMerges(docs, nMerges))
     }
 
   /** Encode any documents-shaped frame with an explicit rank-ordered
@@ -1866,15 +1820,14 @@ object TextAnalysis {
         .groupBy("a", "b").agg(count(lit(1)).as("c_ab"))
         .localCheckpoint())
 
-  /** Corpus path: the bigram count table comes from the shared
-    * [[bigramStats]] memo (text_perplexity_bigram counts the same
+  /** Corpus path: the bigram count table is the shared
+    * [[bigramCounts]] artifact (text_perplexity_bigram counts the same
     * corpus); the KN context/continuation tables derive from it per
     * call — bounded aggs over the checkpoint.
     */
   private def kneserNeyShared(spark: SparkSession,
       sfDir: String): DataFrame =
-    kneserNeyFrom(Tables.documents(spark, sfDir),
-      bigramStats(spark, sfDir)._1)
+    kneserNeyFrom(Tables.documents(spark, sfDir), bigramCounts(spark, sfDir))
 
   private def kneserNeyFrom(docs: DataFrame, cab: DataFrame): DataFrame = {
     val words = wordArraysOf(docs)

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.Artifacts
+
 /** Source/sink surface (SURVEY §2 sources): parquet (primary), CSV,
   * JSON(L), with schema-explicit reads.
   *
@@ -225,17 +227,6 @@ object Formats {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(path)
 
-  /** One bucketed layout per (sfDir, nBuckets), built under the map
-    * lock on first use and reused by every later call — gate + bench
-    * + BucketingSpec in one JVM share a single on-disk copy instead
-    * of accumulating one per call (the table names encode the key, so
-    * concurrent DIFFERENT keys still can't clobber each other). If a
-    * later SparkSession lost the catalog entries, the same names are
-    * re-registered over the same warehouse path (Overwrite).
-    */
-  private val bucketedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
-
   /** Bucketed co-located fact⋈fact join — THE 100 TB strategy for a
     * join both sides of which are big and reused: write each side
     * once, pre-hashed into the same bucket layout on the join key
@@ -244,31 +235,33 @@ object Formats {
     * the shuffle is paid once at layout time, not per query.
     * BucketingSpec asserts the no-join-key-exchange plan; the driver
     * gate checks the result against the plain-join oracle.
+    *
+    * The layout is an [[Artifacts]] store per (corpus, nBuckets): the
+    * gate, the bench and BucketingSpec in one session share a single
+    * on-disk copy. Its two catalog tables are named after the store
+    * dir, so no two stores (of different keys, sessions or corpus
+    * versions) ever register the same name, and a table always points
+    * at the store that registered it.
     */
   def bucketedOrdersLineitemJoin(spark: SparkSession, sfDir: String,
       nBuckets: Int = 8): DataFrame = {
     import org.apache.spark.sql.functions._
-    val keyTag = s"${nBuckets}_${java.lang.Integer.toHexString(sfDir.hashCode)}"
-    val oT = s"graft_orders_bkt_$keyTag"
-    val lT = s"graft_lineitem_bkt_$keyTag"
-    bucketedLayouts.compute((sfDir, nBuckets), (_, cached) => {
-      if (cached != null && spark.catalog.tableExists(oT)
-          && spark.catalog.tableExists(lT)) cached
-      else {
-        val warehouse =
-          if (cached != null) cached
-          else graft.TempDirs.create("graft_bucketed").toString
-        graft.Tables.orders(spark, sfDir).write
-          .bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
-          .option("path", s"$warehouse/$oT")
-          .mode(SaveMode.Overwrite).saveAsTable(oT)
-        graft.Tables.lineitem(spark, sfDir).write
-          .bucketBy(nBuckets, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$warehouse/$lT")
-          .mode(SaveMode.Overwrite).saveAsTable(lT)
-        warehouse
-      }
-    })
+    def tables(dir: String): (String, String) = {
+      val tag = java.nio.file.Paths.get(dir).getFileName
+      (s"${tag}_orders", s"${tag}_lineitem")
+    }
+    val dir = Artifacts.dir(spark, sfDir, "bucketed", nBuckets) { dir =>
+      val (oT, lT) = tables(dir)
+      graft.Tables.orders(spark, sfDir).write
+        .bucketBy(nBuckets, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"$dir/$oT")
+        .mode(SaveMode.Overwrite).saveAsTable(oT)
+      graft.Tables.lineitem(spark, sfDir).write
+        .bucketBy(nBuckets, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"$dir/$lT")
+        .mode(SaveMode.Overwrite).saveAsTable(lT)
+    }
+    val (oT, lT) = tables(dir)
     spark.table(lT)
       .join(spark.table(oT), col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderstatus", "l_linestatus")
@@ -293,27 +286,21 @@ object Formats {
       spark.read.schema(li.schema).orc(path))
   }
 
-  private val partitionedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Hive-style partition PRUNING — the other half of the layout
     * story next to bucketing: events written `partitionBy(event_type)`
     * once, so a query filtering on the partition column never opens
     * the other partitions' files at all (directory-level pruning —
     * `PartitionFilters` in the scan, asserted by PlanSpec; at 100 TB
     * this is the difference between scanning one event type and
-    * scanning all of them). The layout is written once per (JVM,
-    * corpus) and reused; the gate compares the pruned read's daily
-    * rollup against the unpartitioned oracle.
+    * scanning all of them). The layout is an [[Artifacts]] store,
+    * written once per (session, corpus) and reused; the gate compares
+    * the pruned read's daily rollup against the unpartitioned oracle.
     */
   def partitionPrunedEvents(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val dir = partitionedLayouts.computeIfAbsent(sfDir, _ => {
-      val d = graft.TempDirs.create("graft_part_events").toString
+    val dir = Artifacts.dir(spark, sfDir, "part_events")(
       graft.Tables.events(spark, sfDir).write
-        .partitionBy("event_type").mode(SaveMode.Overwrite).parquet(d)
-      d
-    })
+        .partitionBy("event_type").mode(SaveMode.Overwrite).parquet(_))
     graft.Tables.parquet(spark, dir)
       .filter(col("event_type") === "purchase")
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"),
@@ -370,33 +357,26 @@ object Formats {
     * rewrite of old data), day-1 rows surface the new column as null,
     * and the aggregate normalizes them with `coalesce` — the
     * null-vs-absent distinction is exactly what the oracle gate
-    * pins. Partition discovery (`day=N`) rides the same read.
+    * pins. Partition discovery (`day=N`) rides the same read. The two
+    * days are an [[Artifacts]] store per (session, corpus).
     */
   def mergedSchemaDocs(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val docs = graft.Tables.documents(spark, sfDir)
-    val dir = evolvedLayouts.computeIfAbsent(sfDir, _ => {
-      // feed construction only, INSIDE the once-per-corpus lambda: the
+    val dir = Artifacts.dir(spark, sfDir, "schema_evo") { d =>
+      // feed construction only, INSIDE the once-per-corpus build: the
       // cutoff agg is a corpus scan repeated callers shouldn't pay
       val cutoff = docs.agg(max(col("doc_id"))).head().getLong(0) / 2 + 1
-      val d = graft.TempDirs.create("graft_schema_evo").toString
       docs.filter(col("doc_id") < cutoff).drop("source")
         .write.mode(SaveMode.Overwrite).parquet(s"$d/day=1")
       docs.filter(col("doc_id") >= cutoff)
         .write.mode(SaveMode.Overwrite).parquet(s"$d/day=2")
-      d
-    })
+    }
     spark.read.option("mergeSchema", "true").parquet(dir)
       .groupBy(coalesce(col("source"), lit("unknown")).as("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("n_chars"))
   }
-
-  private val evolvedLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private val binaryLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** `binaryFile` ingest — the multimodal on-ramp: opaque per-item
     * files (image/audio/video in production) read as (path, length,
@@ -416,12 +396,12 @@ object Formats {
     * source is not splittable), so this path's job is to fingerprint
     * and re-pack arrivals into parquet-embedded binary columns
     * (`mediaTable`/`mm_binary_meta`), which is where every downstream
-    * operator reads from.
+    * operator reads from. The landing dir is an [[Artifacts]] store
+    * per (session, corpus).
     */
   def binaryDocs(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val dir = binaryLayouts.computeIfAbsent(sfDir, _ => {
-      val d = graft.TempDirs.create("graft_binary_docs").toString
+    val dir = Artifacts.dir(spark, sfDir, "binary_docs") { d =>
       graft.Tables.documents(spark, sfDir).select("doc_id", "text")
         .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
           rows.foreach { r =>
@@ -430,8 +410,7 @@ object Formats {
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
         }
-      d
-    })
+    }
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.bin")
       .load(dir)

@@ -10,6 +10,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{DecimalType, LongType}
 
+import graft.Tables.tsMicros
+
 /** Structured Streaming twins of the batch event operators
   * (SURVEY §2.G): the same logical computation as
   * `Relational.eventsHourly` / `Relational.sessionize`, expressed as
@@ -170,25 +172,32 @@ object EventStreams {
 
   /** Single-copy file-source feed over the events parquet: per-run
     * symlink dir (the file source monitors a DIRECTORY), schema-
-    * explicit readStream, nanos→µs ts normalization. Returns the
+    * explicit readStream, nanos→µs ts normalization. `body` gets the
     * batch frame (for schema/sentinel use), the feed dir (for
-    * appending), and the streaming frame. Shared by every
-    * single-copy FromFiles entry so feed mechanics cannot diverge.
+    * appending), and the streaming frame; the feed dir is deleted
+    * once `body` returns or throws, so `body` must drain its query.
+    * Shared by every single-copy FromFiles entry so feed mechanics
+    * cannot diverge.
     */
-  private def eventFeed(spark: SparkSession, sfDir: String,
-      prefix: String): (DataFrame, java.nio.file.Path, DataFrame) = {
+  private def withEventFeed[T](spark: SparkSession, sfDir: String,
+      prefix: String)(body: (DataFrame, java.nio.file.Path, DataFrame) => T)
+      : T = withTempDirs(prefix) { case Seq(dir) =>
     val path = s"$sfDir/events.parquet"
     val raw = graft.Tables.parquet(spark, path)
-    val dir = graft.TempDirs.create(prefix)
     java.nio.file.Files.createSymbolicLink(
       dir.resolve("events.parquet"), java.nio.file.Paths.get(path))
-    val stream0 = spark.readStream.schema(raw.schema).parquet(dir.toString)
-    val events = raw.schema("ts").dataType match {
-      case LongType => stream0.withColumn("ts",
-        timestamp_micros(expr("ts div 1000")))
-      case _ => stream0
-    }
-    (raw, dir, events)
+    body(raw, dir,
+      tsMicros(spark.readStream.schema(raw.schema).parquet(dir.toString)))
+  }
+
+  /** Run `body` over fresh TempDirs, one per prefix, and delete them
+    * once it returns or throws: a bounded stream needs its feed,
+    * checkpoint and source-table dirs only while its query runs.
+    */
+  private def withTempDirs[T](prefixes: String*)
+      (body: Seq[java.nio.file.Path] => T): T = {
+    val dirs = prefixes.map(graft.TempDirs.create)
+    try body(dirs) finally dirs.foreach(d => graft.TempDirs.delete(d.toString))
   }
 
   /** Far-future sentinel: one event a year past the corpus max
@@ -246,21 +255,22 @@ object EventStreams {
   def sessionsFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val drained = graft.Tables.withNanosAsLong(spark) {
-      val (raw, dir, eventsDf) = eventFeed(spark, sfDir, "graft_stream_sess")
-      val events = eventsDf
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value")).as[Event]
-      // PARQUET sink, not memory (the stream_dedup shape): the session
-      // output is corpus-sized — one session row per user-burst — and
-      // a memory sink pins one full driver copy of it (the wall
-      // stream_dedup hit at sf10; guide §5 — the driver should do
-      // almost no data work). The file sink streams each batch to
-      // disk through its manifest; the read-back is manifest-scoped.
-      withScaledStateFor(spark, sfDir) {
-        drainToFiles(spark, sessionize(events), "graft_stream_sess") { q =>
-          q.processAllAvailable()
-          appendSentinel(spark, raw, dir)
-          q.processAllAvailable()
+      withEventFeed(spark, sfDir, "graft_stream_sess") { (raw, dir, eventsDf) =>
+        val events = eventsDf
+          .select(col("event_id"), col("ts"), col("user_id"),
+            col("event_type"), col("value")).as[Event]
+        // PARQUET sink, not memory (the stream_dedup shape): the session
+        // output is corpus-sized — one session row per user-burst — and
+        // a memory sink pins one full driver copy of it (the wall
+        // stream_dedup hit at sf10; guide §5 — the driver should do
+        // almost no data work). The file sink streams each batch to
+        // disk through its manifest; the read-back is manifest-scoped.
+        withScaledStateFor(spark, sfDir) {
+          drainToFiles(spark, sessionize(events), "graft_stream_sess") { q =>
+            q.processAllAvailable()
+            appendSentinel(spark, raw, dir)
+            q.processAllAvailable()
+          }
         }
       }
     }
@@ -288,21 +298,22 @@ object EventStreams {
     */
   def sessionWindowFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     val drained = graft.Tables.withNanosAsLong(spark) {
-      val (raw, dir, events) = eventFeed(spark, sfDir, "graft_stream_swin")
-      val sessions = events
-        .withWatermark("ts", "10 minutes")
-        .groupBy(col("user_id"),
-          session_window(col("ts"), "30 minutes").as("sw"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ts")).as("s"), max(col("ts")).as("e"))
-        .select(col("user_id"), col("s"), col("e"), col("n_events"))
-      // parquet file sink for the corpus-sized session output — the
-      // stream_dedup shape (see sessionsFromFiles)
-      withScaledStateFor(spark, sfDir) {
-        drainToFiles(spark, sessions, "graft_stream_swin") { q =>
-          q.processAllAvailable()
-          appendSentinel(spark, raw, dir)
-          q.processAllAvailable()
+      withEventFeed(spark, sfDir, "graft_stream_swin") { (raw, dir, events) =>
+        val sessions = events
+          .withWatermark("ts", "10 minutes")
+          .groupBy(col("user_id"),
+            session_window(col("ts"), "30 minutes").as("sw"))
+          .agg(count(lit(1)).as("n_events"),
+            min(col("ts")).as("s"), max(col("ts")).as("e"))
+          .select(col("user_id"), col("s"), col("e"), col("n_events"))
+        // parquet file sink for the corpus-sized session output — the
+        // stream_dedup shape (see sessionsFromFiles)
+        withScaledStateFor(spark, sfDir) {
+          drainToFiles(spark, sessions, "graft_stream_swin") { q =>
+            q.processAllAvailable()
+            appendSentinel(spark, raw, dir)
+            q.processAllAvailable()
+          }
         }
       }
     }
@@ -323,23 +334,14 @@ object EventStreams {
     */
   def purchaseClicksFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     val drained = graft.Tables.withNanosAsLong(spark) {
-      val path = s"$sfDir/events.parquet"
-      val raw = graft.Tables.parquet(spark, path)
-      val dir = graft.TempDirs.create("graft_stream_join")
-      java.nio.file.Files.createSymbolicLink(
-        dir.resolve("events.parquet"), java.nio.file.Paths.get(path))
-      val stream0 = spark.readStream.schema(raw.schema).parquet(dir.toString)
-      val events = raw.schema("ts").dataType match {
-        case LongType => stream0.withColumn("ts",
-          timestamp_micros(expr("ts div 1000")))
-        case _ => stream0
-      }
-      // parquet file sink: the join output is |purchases| ×
-      // matching-clicks — corpus-proportional, the exact driver-copy
-      // wall stream_dedup hit at sf10 (guide §5)
-      withScaledStateFor(spark, sfDir) {
-        drainToFiles(spark, purchaseClickJoin(events),
-          "graft_stream_join")(_.processAllAvailable())
+      withEventFeed(spark, sfDir, "graft_stream_join") { (_, _, events) =>
+        // parquet file sink: the join output is |purchases| ×
+        // matching-clicks — corpus-proportional, the exact driver-copy
+        // wall stream_dedup hit at sf10 (guide §5)
+        withScaledStateFor(spark, sfDir) {
+          drainToFiles(spark, purchaseClickJoin(events),
+            "graft_stream_join")(_.processAllAvailable())
+        }
       }
     }
     drained.select(
@@ -367,30 +369,31 @@ object EventStreams {
   def purchaseClickOuterFromFiles(spark: SparkSession,
       sfDir: String): DataFrame = {
     val drained = graft.Tables.withNanosAsLong(spark) {
-      val (raw, dir, events) = eventFeed(spark, sfDir, "graft_stream_ojoin")
-      val purchases = events.filter(col("event_type") === "purchase"
-          || col("user_id") === -1L)
-        .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"))
-        .withWatermark("p_ts", "2 hours")
-      val clicks = events.filter(col("event_type") === "click"
-          || col("user_id") === -1L)
-        .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
-          col("event_id").as("click_id"))
-        .withWatermark("c_ts", "2 hours")
-      val joined = purchases.join(clicks,
-        col("p_user") === col("c_user")
-          && col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR")
-          && col("c_ts") <= col("p_ts"),
-        "left_outer")
-      // parquet file sink: the outer-join output is corpus-sized
-      // (every purchase emits at least one row) — see
-      // purchaseClicksFromFiles / sessionsFromFiles
-      withScaledStateFor(spark, sfDir) {
-        drainToFiles(spark, joined, "graft_stream_ojoin") { q =>
-          q.processAllAvailable()
-          appendSentinel(spark, raw, dir)
-          q.processAllAvailable()
+      withEventFeed(spark, sfDir, "graft_stream_ojoin") { (raw, dir, events) =>
+        val purchases = events.filter(col("event_type") === "purchase"
+            || col("user_id") === -1L)
+          .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
+            col("event_id").as("purchase_id"))
+          .withWatermark("p_ts", "2 hours")
+        val clicks = events.filter(col("event_type") === "click"
+            || col("user_id") === -1L)
+          .select(col("user_id").as("c_user"), col("ts").as("c_ts"),
+            col("event_id").as("click_id"))
+          .withWatermark("c_ts", "2 hours")
+        val joined = purchases.join(clicks,
+          col("p_user") === col("c_user")
+            && col("c_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR")
+            && col("c_ts") <= col("p_ts"),
+          "left_outer")
+        // parquet file sink: the outer-join output is corpus-sized
+        // (every purchase emits at least one row) — see
+        // purchaseClicksFromFiles / sessionsFromFiles
+        withScaledStateFor(spark, sfDir) {
+          drainToFiles(spark, joined, "graft_stream_ojoin") { q =>
+            q.processAllAvailable()
+            appendSentinel(spark, raw, dir)
+            q.processAllAvailable()
+          }
         }
       }
     }
@@ -420,14 +423,9 @@ object EventStreams {
         dir.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
       java.nio.file.Files.createSymbolicLink(
         dir.resolve("events_b.parquet"), java.nio.file.Paths.get(path))
-      val stream0 = spark.readStream.schema(raw.schema)
+      val events = tsMicros(spark.readStream.schema(raw.schema)
         .option("maxFilesPerTrigger", "1") // force a cross-BATCH duplicate
-        .parquet(dir.toString)
-      val events = raw.schema("ts").dataType match {
-        case LongType => stream0.withColumn("ts",
-          timestamp_micros(expr("ts div 1000")))
-        case _ => stream0
-      }
+        .parquet(dir.toString))
       // PARQUET sink, not memory (stream_restart's shape): the
       // deduped output is corpus-sized, and a memory sink pins one
       // full driver copy of it — measured at the sf10 stream the 10M
@@ -702,9 +700,10 @@ object EventStreams {
     // file splits convert the parquet schema as they are read; the
     // shared flag lock scopes it atomically vs other scoped uses
     graft.Tables.withNanosAsLong(spark) {
-      val (_, _, events) = eventFeed(spark, sfDir, "graft_stream_src")
-      drainToMemory(spark, hourlyCountsFull(events), "graft_stream_hourly",
-        eventBytes(sfDir))
+      withEventFeed(spark, sfDir, "graft_stream_src") { (_, _, events) =>
+        drainToMemory(spark, hourlyCountsFull(events), "graft_stream_hourly",
+          eventBytes(sfDir))
+      }
     }
 
   /** INCREMENTAL sketch maintenance over a stream: the theta distinct
@@ -1041,14 +1040,8 @@ object EventStreams {
     */
   def lateDropFromFiles(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.withNanosAsLong(spark) {
-      val raw0 = graft.Tables.parquet(spark, s"$sfDir/events.parquet")
-      def normalize(df: DataFrame): DataFrame =
-        raw0.schema("ts").dataType match {
-          case LongType => df.withColumn("ts",
-            timestamp_micros(expr("ts div 1000")))
-          case _ => df
-        }
-      val raw = normalize(raw0).select(col("event_id"), col("ts"))
+      val raw = tsMicros(graft.Tables.parquet(spark, s"$sfDir/events.parquet"))
+        .select(col("event_id"), col("ts"))
       val cut = raw.agg(
         expr("date_add(to_date(min(ts)), CAST(datediff(to_date(max(ts))," +
           " to_date(min(ts))) div 2 AS INT))").as("cutoff"))
@@ -1056,30 +1049,34 @@ object EventStreams {
         .filter(to_date(col("ts")) < col("cutoff")).drop("cutoff")
       val fresh = raw.crossJoin(broadcast(cut))
         .filter(to_date(col("ts")) >= col("cutoff")).drop("cutoff")
-      val feed = graft.TempDirs.create("graft_stream_late_src")
-      val ckpt = graft.TempDirs.create("graft_stream_late_ckpt")
       val out = graft.TempDirs.create("graft_stream_late_out")
-      // the LATER half arrives FIRST — a full run over it commits the
-      // advanced watermark into the checkpoint (a trailing no-data
-      // micro-batch finalizes its closed windows); only THEN does the
-      // earlier half land, entirely beyond the recovered watermark
-      dumpFeedFile(feed, fresh, "a.parquet", 1000000000000L)
-      def counts = spark.readStream.schema(graft.Tables.parquet(spark,
-          feed.resolve("a.parquet").toString).schema)
-        .parquet(feed.toString)
-        .withWatermark("ts", "2 hours")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n"))
-      def runOnce(): Unit = withScaledStateFor(spark, sfDir) {
-        runQuery(spark, counts.writeStream
-          .format("parquet").option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append"))(_.processAllAvailable())
+      // the returned frame reads `out` only: the feed and checkpoint
+      // go once both runs have stopped
+      val schema = withTempDirs("graft_stream_late_src",
+          "graft_stream_late_ckpt") { case Seq(feed, ckpt) =>
+        // the LATER half arrives FIRST — a full run over it commits the
+        // advanced watermark into the checkpoint (a trailing no-data
+        // micro-batch finalizes its closed windows); only THEN does the
+        // earlier half land, entirely beyond the recovered watermark
+        dumpFeedFile(feed, fresh, "a.parquet", 1000000000000L)
+        def counts = spark.readStream.schema(graft.Tables.parquet(spark,
+            feed.resolve("a.parquet").toString).schema)
+          .parquet(feed.toString)
+          .withWatermark("ts", "2 hours")
+          .groupBy(window(col("ts"), "1 hour"))
+          .agg(count(lit(1)).as("n"))
+        def runOnce(): Unit = withScaledStateFor(spark, sfDir) {
+          runQuery(spark, counts.writeStream
+            .format("parquet").option("path", out.toString)
+            .option("checkpointLocation", ckpt.toString)
+            .outputMode("append"))(_.processAllAvailable())
+        }
+        runOnce()
+        dumpFeedFile(feed, late, "b.parquet", 1000000060000L)
+        runOnce()
+        counts.schema
       }
-      runOnce()
-      dumpFeedFile(feed, late, "b.parquet", 1000000060000L)
-      runOnce()
-      graft.Tables.parquet(spark, out.toString, Some(counts.schema))
+      graft.Tables.parquet(spark, out.toString, Some(schema))
         .select(date_format(col("window.start"),
           "yyyy-MM-dd HH:mm:ss").as("window_start"), col("n"))
     }
@@ -1103,19 +1100,22 @@ object EventStreams {
     // feed construction only (not the operator): 1-row bounded agg
     // for the id cutoff between the two simulated ingest runs
     val cutoff = docs.agg(max(col("doc_id"))).head().getLong(0) / 2 + 1
-    val feed = graft.TempDirs.create("graft_stream_near_dup")
-    // fixed past mtimes: the source processes oldest-first
-    dumpFeedFile(feed, docs.filter(col("doc_id") < cutoff),
-      "run1.parquet", 1000000000000L)
-    dumpFeedFile(feed, docs.filter(col("doc_id") >= cutoff),
-      "run2.parquet", 1000000060000L)
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1") // force the cross-batch carry
-      .parquet(feed.toString)
-    val feedBytes = pathBytes(feed)
-    withStateFor(spark, feedBytes) {
-      drainToMemory(spark, nearDupStream(stream), "graft_stream_near_dup",
-        feedBytes)
+    // the drained frame reads the memory sink's spill: the feed goes
+    // once the query has stopped
+    withTempDirs("graft_stream_near_dup") { case Seq(feed) =>
+      // fixed past mtimes: the source processes oldest-first
+      dumpFeedFile(feed, docs.filter(col("doc_id") < cutoff),
+        "run1.parquet", 1000000000000L)
+      dumpFeedFile(feed, docs.filter(col("doc_id") >= cutoff),
+        "run2.parquet", 1000000060000L)
+      val stream = spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", "1") // force the cross-batch carry
+        .parquet(feed.toString)
+      val feedBytes = pathBytes(feed)
+      withStateFor(spark, feedBytes) {
+        drainToMemory(spark, nearDupStream(stream), "graft_stream_near_dup",
+          feedBytes)
+      }
     }.select(col("doc_id"), col("near_dup_of"))
   }
 
@@ -1178,33 +1178,30 @@ object EventStreams {
     graft.Tables.withNanosAsLong(spark) {
       val path = s"$sfDir/events.parquet"
       val raw = graft.Tables.parquet(spark, path)
-      val feed = graft.TempDirs.create("graft_stream_restart_src")
-      val ckpt = graft.TempDirs.create("graft_stream_restart_ckpt")
       val out = graft.TempDirs.create("graft_stream_restart_out")
-      def events = {
-        val s0 = spark.readStream.schema(raw.schema).parquet(feed.toString)
-        raw.schema("ts").dataType match {
-          case LongType => s0.withColumn("ts",
-            timestamp_micros(expr("ts div 1000")))
-          case _ => s0
+      // the read-back needs only `out`: the feed and checkpoint go
+      // once both runs have stopped
+      val schema = withTempDirs("graft_stream_restart_src",
+          "graft_stream_restart_ckpt") { case Seq(feed, ckpt) =>
+        def events =
+          tsMicros(spark.readStream.schema(raw.schema).parquet(feed.toString))
+        def runOnce(): Unit = withStateFor(spark, eventBytes(sfDir)) {
+          runQuery(spark, dedupStream(events).writeStream
+            .format("parquet")
+            .option("path", out.toString)
+            .option("checkpointLocation", ckpt.toString)
+            .outputMode("append"))(_.processAllAvailable())
         }
+        java.nio.file.Files.createSymbolicLink(
+          feed.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
+        runOnce()
+        // the duplicate copy lands only AFTER the restart boundary
+        java.nio.file.Files.createSymbolicLink(
+          feed.resolve("events_b.parquet"), java.nio.file.Paths.get(path))
+        runOnce()
+        dedupStream(events).schema
       }
-      def runOnce(): Unit = withStateFor(spark, eventBytes(sfDir)) {
-        runQuery(spark, dedupStream(events).writeStream
-          .format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append"))(_.processAllAvailable())
-      }
-      java.nio.file.Files.createSymbolicLink(
-        feed.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
-      runOnce()
-      // the duplicate copy lands only AFTER the restart boundary
-      java.nio.file.Files.createSymbolicLink(
-        feed.resolve("events_b.parquet"), java.nio.file.Paths.get(path))
-      runOnce()
-      graft.Tables.parquet(spark, out.toString,
-          Some(dedupStream(events).schema))
+      graft.Tables.parquet(spark, out.toString, Some(schema))
         .select(col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
           col("user_id"), col("event_type"), col("value"))
@@ -1226,8 +1223,6 @@ object EventStreams {
     */
   def sinkTail(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val dir = graft.TempDirs.create("graft_stream_tail_tbl").toString
-    val ckpt = graft.TempDirs.create("graft_stream_tail_ckpt").toString
     val out = graft.TempDirs.create("graft_stream_tail_out").toString
     val ev = graft.Tables.events(spark, sfDir)
     val roll = ev.groupBy("user_id", "event_type")
@@ -1235,22 +1230,29 @@ object EventStreams {
         sum(col("value").cast(DecimalType(18, 2))).as("sv"))
       .select(col("user_id"), col("event_type"), col("n"),
         col("sv").cast(DecimalType(18, 2)).as("sum_value"))
-    def put(df: DataFrame): Unit =
-      df.write.format("graft.sources.v2.GraftSinkSource")
-        .option("path", dir).mode("append").save()
-    def tail = spark.readStream.format("graft.sources.v2.GraftSinkSource")
-      .schema(graft.sources.v2.GraftSink.Schema)
-      .option("path", dir).load()
-    def runOnce(): Unit = {
-      runQuery(spark, tail.writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt))(_.processAllAvailable())
+    // the tailed output lands in `out`: the source table and the
+    // checkpoint go once both runs have stopped
+    val schema = withTempDirs("graft_stream_tail_tbl",
+        "graft_stream_tail_ckpt") { case Seq(tbl, ckptDir) =>
+      val (dir, ckpt) = (tbl.toString, ckptDir.toString)
+      def put(df: DataFrame): Unit =
+        df.write.format("graft.sources.v2.GraftSinkSource")
+          .option("path", dir).mode("append").save()
+      def tail = spark.readStream.format("graft.sources.v2.GraftSinkSource")
+        .schema(graft.sources.v2.GraftSink.Schema)
+        .option("path", dir).load()
+      def runOnce(): Unit = {
+        runQuery(spark, tail.writeStream.format("parquet").option("path", out)
+          .option("checkpointLocation", ckpt))(_.processAllAvailable())
+      }
+      put(roll.filter(col("user_id") % 2 === 0))
+      runOnce()
+      // the second generation lands only AFTER the restart boundary
+      put(roll.filter(col("user_id") % 2 =!= 0))
+      runOnce()
+      tail.schema
     }
-    put(roll.filter(col("user_id") % 2 === 0))
-    runOnce()
-    // the second generation lands only AFTER the restart boundary
-    put(roll.filter(col("user_id") % 2 =!= 0))
-    runOnce()
-    graft.Tables.parquet(spark, out, Some(tail.schema)).groupBy("event_type")
+    graft.Tables.parquet(spark, out, Some(schema)).groupBy("event_type")
       .agg(count(lit(1)).as("n_keys"), sum(col("n")).as("n_events"),
         sum(col("sum_value")).cast("double").as("total_value"))
   }
@@ -1332,17 +1334,7 @@ object EventStreams {
     graft.Tables.withNanosAsLong(spark) {
       val path = s"$sfDir/events.parquet"
       val raw = graft.Tables.parquet(spark, path)
-      val feed = graft.TempDirs.create("graft_stream_gsink_src")
-      val ckpt = graft.TempDirs.create("graft_stream_gsink_ckpt")
       val out = graft.TempDirs.create("graft_stream_gsink_out").toString
-      def events = {
-        val s0 = spark.readStream.schema(raw.schema).parquet(feed.toString)
-        raw.schema("ts").dataType match {
-          case LongType => s0.withColumn("ts",
-            timestamp_micros(expr("ts div 1000")))
-          case _ => s0
-        }
-      }
       // TSV-serializable shape: the event-time formats to a string,
       // doubles round-trip exactly (Double.toString ∘ parseDouble = id)
       def shape(df: DataFrame): DataFrame = df.select(
@@ -1358,31 +1350,33 @@ object EventStreams {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.DoubleType)))
-      def runOnce(): Unit = withStateFor(spark, eventBytes(sfDir)) {
-        runQuery(spark, dedupStream(events).writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            shape(batch).write.format("graft.sources.v2.GraftSinkSource")
-              .option("path", out).option("txn", s"epoch-$id")
-              .mode("append").save()
-          }
-          .option("checkpointLocation", ckpt.toString))(_.processAllAvailable())
+      // the sink read-back needs only `out`: the feed and checkpoint
+      // go once both runs have stopped
+      withTempDirs("graft_stream_gsink_src",
+          "graft_stream_gsink_ckpt") { case Seq(feed, ckpt) =>
+        def events =
+          tsMicros(spark.readStream.schema(raw.schema).parquet(feed.toString))
+        def runOnce(): Unit = withStateFor(spark, eventBytes(sfDir)) {
+          runQuery(spark, dedupStream(events).writeStream
+            .foreachBatch { (batch: DataFrame, id: Long) =>
+              shape(batch).write.format("graft.sources.v2.GraftSinkSource")
+                .option("path", out).option("txn", s"epoch-$id")
+                .mode("append").save()
+            }
+            .option("checkpointLocation", ckpt.toString))(_.processAllAvailable())
+        }
+        java.nio.file.Files.createSymbolicLink(
+          feed.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
+        runOnce()
+        // the duplicate copy lands only AFTER the restart boundary
+        java.nio.file.Files.createSymbolicLink(
+          feed.resolve("events_b.parquet"), java.nio.file.Paths.get(path))
+        runOnce()
       }
-      java.nio.file.Files.createSymbolicLink(
-        feed.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
-      runOnce()
-      // the duplicate copy lands only AFTER the restart boundary
-      java.nio.file.Files.createSymbolicLink(
-        feed.resolve("events_b.parquet"), java.nio.file.Paths.get(path))
-      runOnce()
       // leg 3 — duplicate DELIVERY of a whole committed epoch: replay
       // epoch 0's payload (its batch twin) with epoch 0's txn id; the
       // manifest ledger must skip the commit or the hash gate doubles
-      val batchTwin = raw.schema("ts").dataType match {
-        case LongType => raw.withColumn("ts",
-          timestamp_micros(expr("ts div 1000")))
-        case _ => raw
-      }
-      shape(batchTwin).dropDuplicates("event_id")
+      shape(tsMicros(raw)).dropDuplicates("event_id")
         .write.format("graft.sources.v2.GraftSinkSource")
         .option("path", out).option("txn", "epoch-0")
         .mode("append").save()

@@ -96,11 +96,11 @@ class DedupSpec extends SparkSpec {
       "consumers: containment, sweep, and planner add no new " +
       "entries beyond the (corpus, maxDf) artifact") {
     Dedup.ngramJaccard(spark, sf, 0.5) // seeds the stats artifact
-    val n0 = Dedup.pairStatsMemo.size
+    val n0 = graft.operators.Artifacts.count("dedup_pair_stats")
     Dedup.ngramContainment(spark, sf).count()
     Dedup.dedupSweep(spark, sf).count()
     Dedup.lshParamPlanner(spark, sf).count()
-    assert(Dedup.pairStatsMemo.size == n0,
+    assert(graft.operators.Artifacts.count("dedup_pair_stats") == n0,
       "a consumer re-trained its own pair stats instead of sharing")
   }
 

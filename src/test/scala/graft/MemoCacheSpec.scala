@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.{Dedup, MemoCache, TextAnalysis}
+import graft.operators.{Artifacts, MemoCache}
 
 /** The bounded session-memo contract (MemoCache.scala): capacity-LRU
   * eviction actually RELEASES the evicted localCheckpoint blocks —
-  * the round-18 bound on the previously-unbounded train-once caches
-  * (unigram vocab/apply, HITS edges).
+  * the bound under the train-once [[graft.operators.Artifacts]]
+  * registry.
   */
 class MemoCacheSpec extends SparkSpec {
 
@@ -54,29 +54,25 @@ class MemoCacheSpec extends SparkSpec {
   }
 
   test("the engine's memos are MemoCache-bounded (not raw maps)") {
-    // a compile-time-ish pin: the three train-once memos expose the
-    // bounded type, so a future regression back to an unbounded map
-    // breaks this line
-    val a: graft.operators.MemoCache[_, _] =
-      graft.operators.TextAnalysis.ugTrainMemo
-    val b: graft.operators.MemoCache[_, _] =
-      graft.operators.TextAnalysis.ugApplyMemo
-    val c: graft.operators.MemoCache[_, _] =
-      graft.operators.Relational.hitsEdgeMemo
-    assert(a.size >= 0 && b.size >= 0 && c.size >= 0)
+    // the one registry every train-once artifact goes through holds
+    // at most Capacity entries, however many keys pass through it
+    val kind = "memo_bound_probe"
+    (0 to Artifacts.Capacity).foreach(i =>
+      Artifacts.value(spark, s"/bound/corpus$i", kind)(Seq(i)))
+    assert(Artifacts.count(kind) == Artifacts.Capacity)
+    // the newest entry is live: a hit builds nothing
+    assert(Artifacts.value[Seq[Int]](spark,
+      s"/bound/corpus${Artifacts.Capacity}", kind)(fail("must hit"))
+      == Seq(Artifacts.Capacity))
   }
 
   test("evicting a memoized TempDir store deletes its directory") {
-    def evictsDir[K](memo: MemoCache[K, String], key: Int => K): Unit = {
-      // capacity 4: the first of five inserts is the LRU victim
-      val dirs = (0 to 4).map(i => memo.getOrCompute(key(i))(
-        TempDirs.create("graft_memo_evict").toString))
-      def exists(d: String) = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(d))
-      assert(!exists(dirs.head), "evicted store directory still on disk")
-      assert(dirs.tail.forall(exists))
-    }
-    evictsDir(Dedup.posDirMemo, i => (spark, s"/evict/corpus$i", 32))
-    evictsDir(TextAnalysis.lmDirMemo, i => (spark, s"/evict/corpus$i", 2L))
+    // the first of Capacity + 1 stores is the LRU victim
+    val dirs = (0 to Artifacts.Capacity).map(i =>
+      Artifacts.dir(spark, s"/evict/corpus$i", "memo_evict")(_ => ()))
+    def exists(d: String) = java.nio.file.Files.exists(
+      java.nio.file.Paths.get(d))
+    assert(!exists(dirs.head), "evicted store directory still on disk")
+    assert(dirs.tail.forall(exists))
   }
 }

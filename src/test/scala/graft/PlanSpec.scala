@@ -294,9 +294,9 @@ class PlanSpec extends SparkSpec {
         s"per-call persist on the corpus path (store expected):\n$opt")
     }
     // both keys resolve to the SAME store directory (the memo)
-    val d1 = Dedup.posDirMemo.getOrCompute((spark, sf, 32))(
-      throw new IllegalStateException("store should already exist"))
-    assert(Dedup.posDirMemo.size >= 1 && d1.nonEmpty)
+    val d1 = graft.operators.Artifacts.dir(spark, sf, "substr_pos", 32)(
+      _ => throw new IllegalStateException("store should already exist"))
+    assert(graft.operators.Artifacts.count("substr_pos") >= 1 && d1.nonEmpty)
     // the planted/spec path still builds its own DISK_ONLY frame
     // with lineage intact (executor loss recomputes instead of
     // aborting; the ~20x-corpus scratch stays off the

@@ -1134,11 +1134,12 @@ class RelationalExtSpec extends SparkSpec {
       "self-join row for row, item similarity shares the same pair " +
       "artifact, and repeat calls add no new entries") {
     Relational.marketBasket(spark, sf).count() // seeds both artifacts
-    val n0 = Relational.basketPairMemo.size + Relational.orderPartsMemo.size
+    def n = graft.operators.Artifacts.count("basket_pairs") +
+      graft.operators.Artifacts.count("basket_order_parts")
+    val n0 = n
     val got = Relational.marketBasket(spark, sf)
     Relational.itemSimilarity(spark, sf).count()
-    assert(Relational.basketPairMemo.size
-        + Relational.orderPartsMemo.size == n0,
+    assert(n == n0,
       "a consumer re-built the basket artifact instead of sharing")
     // the original formulation, verbatim: incidence self-join on the
     // order key, a < b, counted, thresholded, top-k

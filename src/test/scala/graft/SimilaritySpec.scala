@@ -949,10 +949,10 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.operators.Similarity
     Similarity.annLshMultiProbe(spark, sf).count() // seeds the artifact
-    val n0 = Similarity.srpPairMemo.size
+    val n0 = graft.operators.Artifacts.count("srp_pairs")
     Similarity.knnGraph(spark, sf).count()
     Similarity.knnGraphScaled(spark, sf).count()
-    assert(Similarity.srpPairMemo.size == n0,
+    assert(graft.operators.Artifacts.count("srp_pairs") == n0,
       "a multiprobe consumer re-ran the banded join instead of sharing")
     // the thresholded view is a filter over the unfloored artifact
     val floored = Similarity.annLshMultiProbe(spark, sf, threshold = 0.3)

@@ -134,9 +134,9 @@ class StatsSpec extends SparkSpec {
       "betas, and the memoized serve path equals the un-memoized " +
       "cross-fit row for row") {
     Stats.probeMislabel(spark, sf).count() // seeds the artifact
-    val n0 = Stats.probeBetaMemo.size
+    val n0 = graft.operators.Artifacts.count("probe_betas")
     val a = Stats.probeMislabel(spark, sf)
-    assert(Stats.probeBetaMemo.size == n0,
+    assert(graft.operators.Artifacts.count("probe_betas") == n0,
       "second call re-trained instead of serving the memo")
     val feats = Tables.embeddings(spark, sf)
       .filter(col("label").isin(0, 1))

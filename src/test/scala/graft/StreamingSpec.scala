@@ -776,6 +776,32 @@ class StreamingSpec extends SparkSpec {
     assert(added("graft_stream_dedup_out").size == 3)
     val n = Tables.events(spark, sf).count()
     outs.foreach(o => assert(o.count() == n))
+    // the other bounded-stream keys: feed, checkpoint and source-table
+    // dirs go once the query has stopped; only the dir behind the
+    // returned frame (the file-sink output or the memory-sink spill)
+    // stays
+    val keys = Seq(
+      "stream_restart" -> (Seq("graft_stream_restart_src",
+        "graft_stream_restart_ckpt"), "graft_stream_restart_out"),
+      "stream_graft_sink" -> (Seq("graft_stream_gsink_src",
+        "graft_stream_gsink_ckpt"), "graft_stream_gsink_out"),
+      "stream_late_drop" -> (Seq("graft_stream_late_src",
+        "graft_stream_late_ckpt"), "graft_stream_late_out"),
+      "stream_sink_tail" -> (Seq("graft_stream_tail_tbl",
+        "graft_stream_tail_ckpt"), "graft_stream_tail_out"),
+      "stream_sessionize" -> (Seq("graft_stream_sess",
+        "graft_stream_sess_ckpt"), "graft_stream_sess_out"),
+      "stream_events_hourly" -> (Seq("graft_stream_src"), "graft_sink_drain"),
+      "stream_near_dup" -> (Seq("graft_stream_near_dup"), "graft_sink_drain"))
+    keys.foreach { case (key, (gone, kept)) =>
+      val ps = gone :+ kept
+      val before = ps.map(p => p -> dirs(p)).toMap
+      val out = SparkEntry.queries(key)(spark, sf)
+      val added = ps.map(p => p -> (dirs(p) -- before(p))).toMap
+      gone.foreach(p => assert(added(p).isEmpty, s"$key left $p dirs: $added"))
+      assert(added(kept).size == 1, s"$key: $added")
+      assert(out.count() > 0, s"$key: its returned frame reads no rows")
+    }
   }
 
   test("a file-sink drain of an empty feed commits no file and reads " +

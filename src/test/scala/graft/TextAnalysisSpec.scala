@@ -636,9 +636,9 @@ class TextAnalysisSpec extends SparkSpec {
       "trained artifact dir (no re-train), and the served scores are " +
       "call-stable") {
     val a = TextAnalysis.lmPersisted(spark, sf)
-    val n0 = TextAnalysis.lmDirMemo.size
+    val n0 = graft.operators.Artifacts.count("lm_store")
     val b = TextAnalysis.lmPersisted(spark, sf)
-    assert(TextAnalysis.lmDirMemo.size == n0,
+    assert(graft.operators.Artifacts.count("lm_store") == n0,
       "second call trained a new LM store instead of serving the memo")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "served scores drifted between calls over the same store")
