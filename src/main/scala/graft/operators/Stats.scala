@@ -489,27 +489,8 @@ object Stats {
     * known-answer spec pins the t/df arithmetic.
     */
   def abTestOver(events: DataFrame, typeA: String, typeB: String)
-      : DataFrame = {
-    val m = events
-      .filter(col("event_type").isin(typeA, typeB))
-      .select(col("event_type"), money(col("value")).as("v"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
-        sum((col("v") * col("v")).cast(DecimalType(38, 4))).as("ss"))
-      .select(col("event_type"), col("n").cast("double").as("n"),
-        col("s").cast("double").as("s"), col("ss").cast("double").as("ss"))
-    val a = m.filter(col("event_type") === typeA)
-      .select(col("n").as("na"), col("s").as("sa"), col("ss").as("ssa"))
-    val b = m.filter(col("event_type") === typeB)
-      .select(col("n").as("nb"), col("s").as("sb"), col("ss").as("ssb"))
-    // 1-row × 1-row: the cross join is a broadcast of a single row
-    a.crossJoin(broadcast(b))
-      .withColumn("ma", col("sa") / col("na"))
-      .withColumn("mb", col("sb") / col("nb"))
-      .withColumn("va",
-        (col("ssa") - col("na") * col("ma") * col("ma")) / (col("na") - 1))
-      .withColumn("vb",
-        (col("ssb") - col("nb") * col("mb") * col("mb")) / (col("nb") - 1))
+      : DataFrame =
+    welchMoments(events, typeA, typeB)
       .withColumn("sea", col("va") / col("na"))
       .withColumn("seb", col("vb") / col("nb"))
       .withColumn("t",
@@ -522,7 +503,6 @@ object Stats {
         col("na").cast("long").as("n_a"), col("nb").cast("long").as("n_b"),
         round(col("ma"), 6).as("mean_a"), round(col("mb"), 6).as("mean_b"),
         round(col("t"), 6).as("t_stat"), round(col("df"), 6).as("df"))
-  }
 
   /** TOST EQUIVALENCE TEST (`q_tost`) — two one-sided Welch t-tests
     * (Schuirmann '87, the regulatory bioequivalence standard) asking
@@ -539,26 +519,8 @@ object Stats {
     */
   def tost(spark: SparkSession, sfDir: String,
       typeA: String = "click", typeB: String = "view",
-      margin: Double = 0.25): DataFrame = {
-    val m = Tables.events(spark, sfDir)
-      .filter(col("event_type").isin(typeA, typeB))
-      .select(col("event_type"), money(col("value")).as("v"))
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
-        sum((col("v") * col("v")).cast(DecimalType(38, 4))).as("ss"))
-      .select(col("event_type"), col("n").cast("double").as("n"),
-        col("s").cast("double").as("s"), col("ss").cast("double").as("ss"))
-    val a = m.filter(col("event_type") === typeA)
-      .select(col("n").as("na"), col("s").as("sa"), col("ss").as("ssa"))
-    val b = m.filter(col("event_type") === typeB)
-      .select(col("n").as("nb"), col("s").as("sb"), col("ss").as("ssb"))
-    a.crossJoin(broadcast(b))
-      .withColumn("ma", col("sa") / col("na"))
-      .withColumn("mb", col("sb") / col("nb"))
-      .withColumn("va",
-        (col("ssa") - col("na") * col("ma") * col("ma")) / (col("na") - 1))
-      .withColumn("vb",
-        (col("ssb") - col("nb") * col("mb") * col("mb")) / (col("nb") - 1))
+      margin: Double = 0.25): DataFrame =
+    welchMoments(Tables.events(spark, sfDir), typeA, typeB)
       .withColumn("se", sqrt(col("va") / col("na") + col("vb") / col("nb")))
       .withColumn("t_lower",
         ((col("ma") - col("mb")) + lit(margin)) / col("se"))
@@ -572,6 +534,36 @@ object Stats {
         round(col("t_upper"), 6).as("t_upper"),
         (col("t_lower") > 1.645 && col("t_upper") > 1.645)
           .as("equivalent"))
+
+  /** The exact decimal moment pass behind every Welch readout: per
+    * `keys` group and arm, (n, Σx, Σx²) as exact decimal sums from one
+    * partial-aggregated scan, the arms side by side (arm B broadcast;
+    * with no `keys`, a 1-row × 1-row cross), then means and sample
+    * variances `ma`, `mb`, `va`, `vb` as one fixed IEEE dag — so
+    * [[abTestOver]], [[tost]] and the FDR family hash alike against
+    * DuckDB.
+    */
+  private def welchMoments(events: DataFrame, typeA: String, typeB: String,
+      keys: Seq[String] = Nil): DataFrame = {
+    val k = keys.map(col)
+    val m = events
+      .filter(col("event_type").isin(typeA, typeB))
+      .select(k ++ Seq(col("event_type"), money(col("value")).as("v")): _*)
+      .groupBy(k :+ col("event_type"): _*)
+      .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
+        sum((col("v") * col("v")).cast(DecimalType(38, 4))).as("ss"))
+    def arm(t: String, x: String): DataFrame =
+      m.filter(col("event_type") === t)
+        .select(k ++ Seq(col("n").cast("double").as(s"n$x"),
+          col("s").cast("double").as(s"s$x"),
+          col("ss").cast("double").as(s"ss$x")): _*)
+    arm(typeA, "a").join(broadcast(arm(typeB, "b")), keys)
+      .withColumn("ma", col("sa") / col("na"))
+      .withColumn("mb", col("sb") / col("nb"))
+      .withColumn("va",
+        (col("ssa") - col("na") * col("ma") * col("ma")) / (col("na") - 1))
+      .withColumn("vb",
+        (col("ssb") - col("nb") * col("mb") * col("mb")) / (col("nb") - 1))
   }
 
   /** CUPED variance-reduced A/B readout (Deng et al. 2013,
@@ -2822,29 +2814,7 @@ object Stats {
     */
   private def rankedSliceP(events: DataFrame, typeA: String,
       typeB: String): DataFrame = {
-    val m0 = events
-      .filter(col("event_type").isin(typeA, typeB))
-      .select(col("slice"), col("event_type"),
-        money(col("value")).as("v"))
-      .groupBy("slice", "event_type")
-      .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
-        sum((col("v") * col("v")).cast(DecimalType(38, 4))).as("ss"))
-      .select(col("slice"), col("event_type"),
-        col("n").cast("double").as("n"),
-        col("s").cast("double").as("s"), col("ss").cast("double").as("ss"))
-    val a = m0.filter(col("event_type") === typeA)
-      .select(col("slice"), col("n").as("na"), col("s").as("sa"),
-        col("ss").as("ssa"))
-    val b = m0.filter(col("event_type") === typeB)
-      .select(col("slice"), col("n").as("nb"), col("s").as("sb"),
-        col("ss").as("ssb"))
-    val z = a.join(b, "slice")
-      .withColumn("ma", col("sa") / col("na"))
-      .withColumn("mb", col("sb") / col("nb"))
-      .withColumn("va",
-        (col("ssa") - col("na") * col("ma") * col("ma")) / (col("na") - 1))
-      .withColumn("vb",
-        (col("ssb") - col("nb") * col("mb") * col("mb")) / (col("nb") - 1))
+    val z = welchMoments(events, typeA, typeB, Seq("slice"))
       .withColumn("se2", col("va") / col("na") + col("vb") / col("nb"))
       .withColumn("z",
         when(col("na") > 1 && col("nb") > 1 && col("se2") > 0,

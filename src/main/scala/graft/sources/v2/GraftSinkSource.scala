@@ -1041,8 +1041,8 @@ object GraftSink {
     // per-file adoption under job-unique names — no driver-side data
     // write under a fresh subdir: the datasource writer refuses a
     // pre-existing path, and TempDirs.create makes one
-    val dvDir = Paths.get(
-      graft.TempDirs.create("graft_sink_dv").toString, "out").toString
+    val dvRoot = graft.TempDirs.create("graft_sink_dv")
+    val dvDir = dvRoot.resolve("out").toString
     newDv.repartition(col("__file"))
       .write.partitionBy("__file").text(dvDir)
     val jobTag = java.util.UUID.randomUUID().toString.substring(0, 8)
@@ -1067,6 +1067,7 @@ object GraftSink {
       dvMarker(f, dvName,
         hits(f) + dvs.get(f).map(_._2).getOrElse(0L))
     }
+    graft.TempDirs.delete(dvRoot.toString) // every vector is adopted
     // MoR never drops data entries — only the affected files' #dv
     // markers swap (inline), so raw lines keep every shard ref as-is
     val newLines = dropDvFor(lines0, affected.toSet) ++ markers
@@ -1077,7 +1078,7 @@ object GraftSink {
     * move every head-listed part in under its job-unique name (atomic,
     * refuses to clobber) and hand back the manifest entries — the
     * shared rewrite step of every copy-on-write maintenance commit
-    * (delete, compact, cluster, merge).
+    * (delete, compact, cluster, merge). The emptied side dir goes.
     */
   private def adoptSideFiles(side: String, path: String): Seq[String] = {
     val entries = dataLines(resolved(side, head(side)._2))
@@ -1085,6 +1086,7 @@ object GraftSink {
       Files.move(Paths.get(side, fileOf(e)), Paths.get(path, fileOf(e)),
         StandardCopyOption.ATOMIC_MOVE)
     }
+    graft.TempDirs.delete(side)
     entries
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
   GroupStateTimeout, OutputMode, StreamingQuery}
-import org.apache.spark.sql.types.{DecimalType, LongType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
 import graft.Tables.tsMicros
 
@@ -170,34 +170,102 @@ object EventStreams {
         col("event_type"), col("n"), col("sum_value"),
         col("min_value"), col("max_value"))
 
-  /** Single-copy file-source feed over the events parquet: per-run
-    * symlink dir (the file source monitors a DIRECTORY), schema-
-    * explicit readStream, nanos→µs ts normalization. `body` gets the
-    * batch frame (for schema/sentinel use), the feed dir (for
-    * appending), and the streaming frame; the feed dir is deleted
-    * once `body` returns or throws, so `body` must drain its query.
-    * Shared by every single-copy FromFiles entry so feed mechanics
-    * cannot diverge.
+  /** Run `body` over a bounded feed and delete every dir the feed
+    * scope made once `body` returns or throws: a bounded stream needs
+    * its feed, checkpoint and source table only while its query runs,
+    * so `body` must drain its query, and a frame it returns must read
+    * a dir made outside the scope (a file sink's output, a memory
+    * sink's spill, a result table). Every stream key starts here.
+    *
+    * `body` lays the feed out through the [[Feed]] it is handed, all
+    * at once or staged between restarts, in one of three layouts:
+    *   - [[Feed.link]]: symlinks to the corpus events file (a copy
+    *     where no symlink can be made);
+    *   - [[Feed.split]]: a frame split into `n` part files;
+    *   - [[Feed.dump]]: named single files with fixed mtimes (the
+    *     source processes oldest-first, so fixed mtimes fix batch
+    *     order).
+    * The first layout fixes the schema of the streaming frame each
+    * layout call returns, and the feed's byte measure
+    * ([[Feed.bytes]]: one copy of a linked file, else the bytes
+    * written) that sizes the query's state. A first layout of more
+    * than one file streams one file per trigger: that forces a
+    * cross-BATCH state carry, so a key gates state that survived a
+    * batch boundary, not a single-batch degenerate case.
     */
-  private def withEventFeed[T](spark: SparkSession, sfDir: String,
-      prefix: String)(body: (DataFrame, java.nio.file.Path, DataFrame) => T)
-      : T = withTempDirs(prefix) { case Seq(dir) =>
-    val path = s"$sfDir/events.parquet"
-    val raw = graft.Tables.parquet(spark, path)
-    java.nio.file.Files.createSymbolicLink(
-      dir.resolve("events.parquet"), java.nio.file.Paths.get(path))
-    body(raw, dir,
-      tsMicros(spark.readStream.schema(raw.schema).parquet(dir.toString)))
+  private def withFeed[T](spark: SparkSession, prefix: String)
+      (body: Feed => T): T = {
+    val root = graft.TempDirs.create(prefix)
+    try body(new Feed(spark, root))
+    finally graft.TempDirs.delete(root.toString)
   }
 
-  /** Run `body` over fresh TempDirs, one per prefix, and delete them
-    * once it returns or throws: a bounded stream needs its feed,
-    * checkpoint and source-table dirs only while its query runs.
+  /** One feed's dirs under the scope's root: the feed dir the file
+    * source monitors, the checkpoint and a source table. Each is made
+    * here through java.nio: Hadoop's local filesystem forks a `chmod`
+    * for each dir it makes.
     */
-  private def withTempDirs[T](prefixes: String*)
-      (body: Seq[java.nio.file.Path] => T): T = {
-    val dirs = prefixes.map(graft.TempDirs.create)
-    try body(dirs) finally dirs.foreach(d => graft.TempDirs.delete(d.toString))
+  private final class Feed(spark: SparkSession, root: java.nio.file.Path) {
+    import java.nio.file.Files
+    val dir: java.nio.file.Path = Files.createDirectory(root.resolve("feed"))
+    val ckpt: String = Files.createDirectory(root.resolve("ckpt")).toString
+    val table: String = Files.createDirectory(root.resolve("tbl")).toString
+    private var links = 0
+    private var first: Option[(StructType, Int, Long)] = None
+
+    /** Add `copies` symlinks to `sfDir`'s events file; the returned
+      * stream normalizes its nanos `ts` to µs.
+      */
+    def link(sfDir: String, copies: Int = 1): DataFrame = {
+      val path = java.nio.file.Paths.get(s"$sfDir/events.parquet")
+      for (_ <- 1 to copies) {
+        val to = dir.resolve(s"events_$links.parquet")
+        links += 1
+        // a copy where symlink creation is privilege-restricted
+        // (e.g. Windows without developer mode)
+        try Files.createSymbolicLink(to, path)
+        catch {
+          case _: UnsupportedOperationException | _: java.io.IOException =>
+            Files.copy(path, to)
+        }
+      }
+      tsMicros(laidOut(graft.Tables.parquet(spark, path.toString).schema,
+        copies, pathBytes(path)))
+    }
+
+    /** Add `df` split round-robin into `n` part files. */
+    def split(df: DataFrame, n: Int = 2): DataFrame = {
+      df.repartition(n).write.mode("append").parquet(dir.toString)
+      laidOut(df.schema, n, pathBytes(dir))
+    }
+
+    /** Add each `(df, name, mtimeMs)` as the single file `name`. */
+    def dump(files: (DataFrame, String, Long)*): DataFrame = {
+      files.foreach { case (df, name, mtimeMs) =>
+        val tmp = dir.resolve(s"${name}_tmp")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val part = Files.list(tmp).iterator().asScala
+          .find(_.getFileName.toString.endsWith(".parquet"))
+          .getOrElse(sys.error(s"no parquet part under $tmp"))
+        val dest = dir.resolve(name)
+        Files.move(part, dest)
+        Files.setLastModifiedTime(dest,
+          java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
+      }
+      laidOut(files.head._1.schema, files.size, pathBytes(dir))
+    }
+
+    /** The feed's byte measure, taken after its first layout. */
+    def bytes: Long = first.get._3
+
+    private def laidOut(schema: StructType, files: Int, measure: => Long)
+        : DataFrame = {
+      if (first.isEmpty) first = Some((schema, files, measure))
+      val (s, n, _) = first.get
+      val reader = spark.readStream.schema(s)
+      (if (n > 1) reader.option("maxFilesPerTrigger", "1") else reader)
+        .parquet(dir.toString)
+    }
   }
 
   /** Far-future sentinel: one event a year past the corpus max
@@ -206,11 +274,11 @@ object EventStreams {
     * state forever. The sentinel file must carry the same physical ts
     * type as the source files; user_id −1 marks it for exclusion.
     */
-  private def appendSentinel(spark: SparkSession, raw: DataFrame,
-      dir: java.nio.file.Path): Unit = {
+  private def sentinel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val maxTs = raw.agg(max(col("ts"))).head.get(0)
-    val sentinel = raw.schema("ts").dataType match {
+    val raw = graft.Tables.parquet(spark, s"$sfDir/events.parquet")
+    val maxTs = raw.agg(max(col("ts"))).head().get(0)
+    raw.schema("ts").dataType match {
       case LongType =>
         spark.createDataset(Seq(
           (-1L, maxTs.asInstanceOf[Long] + 365L * 86400 * 1000000000L,
@@ -222,7 +290,6 @@ object EventStreams {
         spark.createDataset(Seq((-1L, far, -1L, "x", 0.0)))
           .toDF("event_id", "ts", "user_id", "event_type", "value")
     }
-    sentinel.write.mode("append").parquet(dir.toString)
   }
 
   /** Drain `stream` into a per-run parquet FILE sink (append mode):
@@ -230,17 +297,21 @@ object EventStreams {
     * whatever happens, and the committed output reads back through
     * the sink's manifest with the query's own schema — so a stream
     * that commits no file drains to an empty frame instead of failing
-    * schema inference, and the read-back starts no footer job.
+    * schema inference, and the read-back starts no footer job. The
+    * checkpoint is the output's hidden `_ckpt` dir (made through
+    * java.nio, see [[Feed]]), which readers skip and which goes once
+    * the query has stopped.
     */
   private[graft] def drainToFiles(spark: SparkSession, stream: Dataset[_],
       prefix: String)(drive: StreamingQuery => Unit): DataFrame = {
     val out = graft.TempDirs.create(s"${prefix}_out").toString
-    val ckpt = graft.TempDirs.create(s"${prefix}_ckpt").toString
+    val ckpt =
+      java.nio.file.Files.createDirectory(java.nio.file.Paths.get(out, "_ckpt"))
     try runQuery(spark, stream.writeStream
       .format("parquet").option("path", out)
-      .option("checkpointLocation", ckpt)
+      .option("checkpointLocation", ckpt.toString)
       .outputMode("append"))(drive)
-    finally graft.TempDirs.delete(ckpt) // the read-back needs only `out`
+    finally graft.TempDirs.deleteRecursively(ckpt)
     graft.Tables.parquet(spark, out, Some(stream.schema))
   }
 
@@ -255,8 +326,8 @@ object EventStreams {
   def sessionsFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val drained = graft.Tables.withNanosAsLong(spark) {
-      withEventFeed(spark, sfDir, "graft_stream_sess") { (raw, dir, eventsDf) =>
-        val events = eventsDf
+      withFeed(spark, "graft_stream_sess") { f =>
+        val events = f.link(sfDir)
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value")).as[Event]
         // PARQUET sink, not memory (the stream_dedup shape): the session
@@ -265,10 +336,10 @@ object EventStreams {
         // stream_dedup hit at sf10; guide §5 — the driver should do
         // almost no data work). The file sink streams each batch to
         // disk through its manifest; the read-back is manifest-scoped.
-        withScaledStateFor(spark, sfDir) {
+        withScaledState(spark, f.bytes) {
           drainToFiles(spark, sessionize(events), "graft_stream_sess") { q =>
             q.processAllAvailable()
-            appendSentinel(spark, raw, dir)
+            f.split(sentinel(spark, sfDir), 1)
             q.processAllAvailable()
           }
         }
@@ -298,8 +369,8 @@ object EventStreams {
     */
   def sessionWindowFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     val drained = graft.Tables.withNanosAsLong(spark) {
-      withEventFeed(spark, sfDir, "graft_stream_swin") { (raw, dir, events) =>
-        val sessions = events
+      withFeed(spark, "graft_stream_swin") { f =>
+        val sessions = f.link(sfDir)
           .withWatermark("ts", "10 minutes")
           .groupBy(col("user_id"),
             session_window(col("ts"), "30 minutes").as("sw"))
@@ -308,10 +379,10 @@ object EventStreams {
           .select(col("user_id"), col("s"), col("e"), col("n_events"))
         // parquet file sink for the corpus-sized session output — the
         // stream_dedup shape (see sessionsFromFiles)
-        withScaledStateFor(spark, sfDir) {
+        withScaledState(spark, f.bytes) {
           drainToFiles(spark, sessions, "graft_stream_swin") { q =>
             q.processAllAvailable()
-            appendSentinel(spark, raw, dir)
+            f.split(sentinel(spark, sfDir), 1)
             q.processAllAvailable()
           }
         }
@@ -334,11 +405,12 @@ object EventStreams {
     */
   def purchaseClicksFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     val drained = graft.Tables.withNanosAsLong(spark) {
-      withEventFeed(spark, sfDir, "graft_stream_join") { (_, _, events) =>
+      withFeed(spark, "graft_stream_join") { f =>
+        val events = f.link(sfDir)
         // parquet file sink: the join output is |purchases| ×
         // matching-clicks — corpus-proportional, the exact driver-copy
         // wall stream_dedup hit at sf10 (guide §5)
-        withScaledStateFor(spark, sfDir) {
+        withScaledState(spark, f.bytes) {
           drainToFiles(spark, purchaseClickJoin(events),
             "graft_stream_join")(_.processAllAvailable())
         }
@@ -369,7 +441,8 @@ object EventStreams {
   def purchaseClickOuterFromFiles(spark: SparkSession,
       sfDir: String): DataFrame = {
     val drained = graft.Tables.withNanosAsLong(spark) {
-      withEventFeed(spark, sfDir, "graft_stream_ojoin") { (raw, dir, events) =>
+      withFeed(spark, "graft_stream_ojoin") { f =>
+        val events = f.link(sfDir)
         val purchases = events.filter(col("event_type") === "purchase"
             || col("user_id") === -1L)
           .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
@@ -388,10 +461,10 @@ object EventStreams {
         // parquet file sink: the outer-join output is corpus-sized
         // (every purchase emits at least one row) — see
         // purchaseClicksFromFiles / sessionsFromFiles
-        withScaledStateFor(spark, sfDir) {
+        withScaledState(spark, f.bytes) {
           drainToFiles(spark, joined, "graft_stream_ojoin") { q =>
             q.processAllAvailable()
-            appendSentinel(spark, raw, dir)
+            f.split(sentinel(spark, sfDir), 1)
             q.processAllAvailable()
           }
         }
@@ -416,16 +489,6 @@ object EventStreams {
     */
   def dedupFromFiles(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.withNanosAsLong(spark) {
-      val path = s"$sfDir/events.parquet"
-      val raw = graft.Tables.parquet(spark, path)
-      val dir = graft.TempDirs.create("graft_stream_dedup")
-      java.nio.file.Files.createSymbolicLink(
-        dir.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
-      java.nio.file.Files.createSymbolicLink(
-        dir.resolve("events_b.parquet"), java.nio.file.Paths.get(path))
-      val events = tsMicros(spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", "1") // force a cross-BATCH duplicate
-        .parquet(dir.toString))
       // PARQUET sink, not memory (stream_restart's shape): the
       // deduped output is corpus-sized, and a memory sink pins one
       // full driver copy of it — measured at the sf10 stream the 10M
@@ -433,14 +496,13 @@ object EventStreams {
       // The file sink streams each batch straight to disk through
       // its manifest; rows are identical, the driver never holds
       // them (guide §5: the driver should do almost no data work).
-      // The feed dir holds only symlinks: the drained frame reads
-      // `out`, so the feed goes once the query has stopped.
-      val drained =
-        try withStateFor(spark, eventBytes(sfDir)) {
+      withFeed(spark, "graft_stream_dedup") { f =>
+        val events = f.link(sfDir, copies = 2)
+        withStateFor(spark, f.bytes) {
           drainToFiles(spark, dedupStream(events),
             "graft_stream_dedup")(_.processAllAvailable())
-        } finally graft.TempDirs.delete(dir.toString)
-      drained.select(col("event_id"),
+        }
+      }.select(col("event_id"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
         col("user_id"), col("event_type"), col("value"))
     }
@@ -466,17 +528,13 @@ object EventStreams {
       .filter(col("event_type").isin("purchase", "click"))
       .select(hour(col("ts")).cast("long").as("h"), col("event_type"),
         col("value").cast(DecimalType(18, 2)).as("v"))
-    val dir = graft.TempDirs.create("graft_stream_msprt_src")
-    ev.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
-      .parquet(dir.toString)
-    val agg = stream.groupBy("h", "event_type")
-      .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
-        sum((col("v") * col("v")).cast(DecimalType(38, 4))).as("ss"))
-    graft.operators.Stats.msprtFromHourly(
-      drainToMemory(spark, agg, "graft_stream_msprt", pathBytes(dir)),
-      "purchase", "click", 0.5)
+    val hourly = withFeed(spark, "graft_stream_msprt_src") { f =>
+      val agg = f.split(ev).groupBy("h", "event_type")
+        .agg(count(lit(1)).as("n"), sum(col("v")).as("s"),
+          sum((col("v") * col("v")).cast(DecimalType(38, 4))).as("ss"))
+      drainToMemory(spark, agg, "graft_stream_msprt", f.bytes)
+    }
+    graft.operators.Stats.msprtFromHourly(hourly, "purchase", "click", 0.5)
   }
 
   /** STREAMING FUNNEL WITH WILSON BANDS (`stream_funnel_ci`) — the
@@ -490,19 +548,16 @@ object EventStreams {
   def funnelCiFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_type"))
-    val dir = graft.TempDirs.create("graft_stream_funnel_src")
-    ev.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
-      .parquet(dir.toString)
-    val flags = stream.groupBy("user_id")
-      .agg(
-        max(when(col("event_type") === "view", 1L).otherwise(0L)).as("v"),
-        max(when(col("event_type") === "click", 1L).otherwise(0L)).as("c"),
-        max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("p"))
     graft.operators.Relational.funnelCiFromFlags(
-      drainToMemory(spark, flags, "graft_stream_funnel", pathBytes(dir)))
+      withFeed(spark, "graft_stream_funnel_src") { f =>
+        val flags = f.split(ev).groupBy("user_id")
+          .agg(
+            max(when(col("event_type") === "view", 1L).otherwise(0L)).as("v"),
+            max(when(col("event_type") === "click", 1L).otherwise(0L)).as("c"),
+            max(when(col("event_type") === "purchase", 1L).otherwise(0L))
+              .as("p"))
+        drainToMemory(spark, flags, "graft_stream_funnel", f.bytes)
+      })
   }
 
   private def nextSinkName(prefix: String): String =
@@ -591,16 +646,6 @@ object EventStreams {
       q
     }
 
-  /** [[withScaledState]] sized from the session's events parquet —
-    * the feed every event-stream key symlinks or re-writes subsets of.
-    */
-  private def withScaledStateFor[T](spark: SparkSession, sfDir: String)
-      (body: => T): T =
-    withScaledState(spark, eventBytes(sfDir))(body)
-
-  private def eventBytes(sfDir: String): Long =
-    pathBytes(java.nio.file.Paths.get(s"$sfDir/events.parquet"))
-
   /** Run a stream whose keyed state grows WITH THE FEED (exact dedup
     * keeps one entry per event id inside the watermark; the near-dup
     * bucket store keeps one per distinct band signature) with its
@@ -642,51 +687,42 @@ object EventStreams {
     withConf(spark, "spark.sql.streaming.stateStore.providerClass",
       s"org.apache.spark.sql.execution.streaming.state.$cls")(body)
 
-  /** Materialize a memory-sink view and drop it immediately, spilling
-    * through a per-run temp parquet: the memory sink already holds one
-    * driver copy of the rows, and a collect + createDataFrame would
-    * pin a SECOND for the life of the returned frame. The rollup and
-    * session sinks are small by construction, but the stream-stream
-    * join sink is |purchases| × matching-clicks — spilling keeps peak
-    * driver memory at the sink's own copy and hands back a scan-backed
-    * DataFrame (freed with the dropped view) for every caller.
-    */
-  private def drainMemorySink(spark: SparkSession, name: String): DataFrame = {
-    val dest = graft.TempDirs.create("graft_sink_drain").resolve("rows").toString
-    val rows = spark.table(name)
-    rows.write.mode("overwrite").parquet(dest)
-    spark.catalog.dropTempView(name)
-    graft.Tables.parquet(spark, dest, Some(rows.schema))
-  }
-
-  /** Run a memory-sink stream body, dropping the per-call view if a
-    * failure prevents the normal drain — a failed run must not pin
-    * its partial result under a name nothing will ever drop.
-    */
-  private def withSink[T](spark: SparkSession, name: String)(body: => T): T =
-    try body
-    catch { case t: Throwable =>
-      try spark.catalog.dropTempView(name)
-      catch { case _: Throwable => () }
-      throw t
-    }
-
   /** Run `stream` over its bounded feed (of `feedBytes`, see
-    * [[withScaledState]]) into a per-call memory sink and drain it
-    * ([[drainMemorySink]]).
+    * [[withScaledState]]) into a per-call memory sink, hand the sink's
+    * rows and the stopped query to `read`, and drop the sink's view
+    * after, also when the run or `read` fails: a failed run must not
+    * pin its partial result under a name nothing will ever drop.
     */
-  private def drainToMemory(spark: SparkSession, stream: Dataset[_],
+  private def readMemorySink[T](spark: SparkSession, stream: Dataset[_],
       prefix: String, feedBytes: Long, mode: String = "complete")
-      : DataFrame = {
+      (read: (DataFrame, StreamingQuery) => T): T = {
     val name = nextSinkName(prefix)
-    withSink(spark, name) {
-      withScaledState(spark, feedBytes) {
+    try {
+      val q = withScaledState(spark, feedBytes) {
         runQuery(spark, stream.writeStream.format("memory").queryName(name)
           .outputMode(mode))(_.processAllAvailable())
       }
-      drainMemorySink(spark, name)
-    }
+      read(spark.table(name), q)
+    } finally spark.catalog.dropTempView(name)
   }
+
+  /** [[readMemorySink]] spilled through a per-run temp parquet: the
+    * memory sink already holds one driver copy of the rows, and a
+    * collect + createDataFrame would pin a SECOND for the life of the
+    * returned frame. The rollup and session sinks are small by
+    * construction, but the stream-stream join sink is |purchases| ×
+    * matching-clicks — spilling keeps peak driver memory at the
+    * sink's own copy and hands back a scan-backed DataFrame (freed
+    * with the dropped view) for every caller.
+    */
+  private def drainToMemory(spark: SparkSession, stream: Dataset[_],
+      prefix: String, feedBytes: Long, mode: String = "complete")
+      : DataFrame =
+    readMemorySink(spark, stream, prefix, feedBytes, mode) { (rows, _) =>
+      val dest = graft.TempDirs.create("graft_sink_drain").resolve("rows").toString
+      rows.write.mode("overwrite").parquet(dest)
+      graft.Tables.parquet(spark, dest, Some(rows.schema))
+    }
 
   /** The streaming path behind the driver's batch hash gate: read the
     * events parquet through the FILE-STREAM source, run the unbounded
@@ -700,9 +736,9 @@ object EventStreams {
     // file splits convert the parquet schema as they are read; the
     // shared flag lock scopes it atomically vs other scoped uses
     graft.Tables.withNanosAsLong(spark) {
-      withEventFeed(spark, sfDir, "graft_stream_src") { (_, _, events) =>
-        drainToMemory(spark, hourlyCountsFull(events), "graft_stream_hourly",
-          eventBytes(sfDir))
+      withFeed(spark, "graft_stream_src") { f =>
+        drainToMemory(spark, hourlyCountsFull(f.link(sfDir)),
+          "graft_stream_hourly", f.bytes)
       }
     }
 
@@ -719,29 +755,13 @@ object EventStreams {
     */
   def thetaFromFiles(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.withNanosAsLong(spark) {
-      val path = s"$sfDir/events.parquet"
-      val raw = graft.Tables.parquet(spark, path)
-      val dir = graft.TempDirs.create("graft_stream_theta_src")
-      // symlink where the filesystem allows it (zero-copy doubling);
-      // fall back to a real copy where symlink creation is
-      // privilege-restricted (e.g. Windows without developer mode)
-      def linkOrCopy(target: java.nio.file.Path): Unit =
-        try java.nio.file.Files.createSymbolicLink(
-          target, java.nio.file.Paths.get(path))
-        catch {
-          case _: UnsupportedOperationException | _: java.io.IOException =>
-            java.nio.file.Files.copy(java.nio.file.Paths.get(path), target)
-        }
-      linkOrCopy(dir.resolve("events_a.parquet"))
-      linkOrCopy(dir.resolve("events_b.parquet"))
-      val stream0 = spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
-        .parquet(dir.toString)
-      val agg = stream0
-        .select(col("event_type"), col("user_id").cast("string").as("uid"))
-        .groupBy("event_type")
-        .agg(graft.functions.ThetaSketch.theta_sketch(col("uid"), 65536).as("sk"))
-      drainToMemory(spark, agg, "graft_stream_theta", eventBytes(sfDir))
+      withFeed(spark, "graft_stream_theta_src") { f =>
+        val agg = f.link(sfDir, copies = 2)
+          .select(col("event_type"), col("user_id").cast("string").as("uid"))
+          .groupBy("event_type")
+          .agg(graft.functions.ThetaSketch.theta_sketch(col("uid"), 65536).as("sk"))
+        drainToMemory(spark, agg, "graft_stream_theta", f.bytes)
+      }
         .select(col("event_type"),
           graft.functions.ThetaSketch.theta_estimate(col("sk"), 65536).as("users"))
     }
@@ -760,18 +780,12 @@ object EventStreams {
   def kllFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("lang"), col("n_chars").cast("double").as("n_chars"))
-    // the file-stream source monitors a directory; split the input
-    // into two real files so the second trigger exercises state carry
-    val dir = graft.TempDirs.create("graft_stream_kll_src")
-    docs.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
-      .parquet(dir.toString)
-    val agg = stream.groupBy("lang")
-      .agg(graft.functions.KllSketch.kll_quantiles(
-        col("n_chars"), 8192, Seq(0.25, 0.5, 0.75)).as("qs"))
-    drainToMemory(spark, agg, "graft_stream_kll", pathBytes(dir))
-      .select(col("lang"),
+    withFeed(spark, "graft_stream_kll_src") { f =>
+      val agg = f.split(docs).groupBy("lang")
+        .agg(graft.functions.KllSketch.kll_quantiles(
+          col("n_chars"), 8192, Seq(0.25, 0.5, 0.75)).as("qs"))
+      drainToMemory(spark, agg, "graft_stream_kll", f.bytes)
+    }.select(col("lang"),
         element_at(col("qs"), 1).as("p25"),
         element_at(col("qs"), 2).as("p50"),
         element_at(col("qs"), 3).as("p75"))
@@ -794,14 +808,11 @@ object EventStreams {
     */
   def cmsFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = graft.Tables.events(spark, sfDir).select(col("event_type"))
-    val dir = graft.TempDirs.create("graft_stream_cms_src")
-    ev.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
-      .parquet(dir.toString)
-    val agg = stream.agg(
-      graft.functions.CountMinSketch.count_min(col("event_type"), 4, 8192).as("sk"))
-    val sk = drainToMemory(spark, agg, "graft_stream_cms", pathBytes(dir))
+    val sk = withFeed(spark, "graft_stream_cms_src") { f =>
+      val agg = f.split(ev).agg(graft.functions.CountMinSketch
+        .count_min(col("event_type"), 4, 8192).as("sk"))
+      drainToMemory(spark, agg, "graft_stream_cms", f.bytes)
+    }
     // the final complete-mode sketch is ONE row; broadcast it over
     // the distinct item set so the wide cell array never shuffles
     ev.distinct().crossJoin(broadcast(sk))
@@ -831,29 +842,27 @@ object EventStreams {
     val probs = (1 until nBuckets).map(_.toDouble / nBuckets)
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("n_chars").cast("double").as("x"))
-    val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
+    // an empty documents table has no max id: every doc is run 2
+    val mx = Option(docs.agg(max(col("doc_id"))).head().get(0))
+      .fold(-1L)(_.asInstanceOf[Long])
     val mid = (mx + 1) / 2 // floor((mx+1)/2): q_drift_psi's run split
     val cuts: Seq[Double] = docs.filter(col("doc_id") < mid)
       .agg(graft.functions.KllSketch.kll_quantiles(col("x"), kllK, probs))
       .head().getSeq[Double](0)
-    val dir = graft.TempDirs.create("graft_stream_drift_src")
-    docs.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
-      .parquet(dir.toString)
     val cutsLit = typedLit(cuts)
-    val agg = stream
-      .select(when(col("doc_id") < mid, 1L).otherwise(2L).as("run"),
-        graft.functions.KllSketch.bucket_below(cutsLit, col("x"))
-          .cast("long").as("bucket"))
-      .groupBy("bucket")
-      .agg(sum(when(col("run") === 1, 1L).otherwise(0L)).as("n1"),
-        sum(when(col("run") === 2, 1L).otherwise(0L)).as("n2"))
+    val counts = withFeed(spark, "graft_stream_drift_src") { f =>
+      val agg = f.split(docs)
+        .select(when(col("doc_id") < mid, 1L).otherwise(2L).as("run"),
+          graft.functions.KllSketch.bucket_below(cutsLit, col("x"))
+            .cast("long").as("bucket"))
+        .groupBy("bucket")
+        .agg(sum(when(col("run") === 1, 1L).otherwise(0L)).as("n1"),
+          sum(when(col("run") === 2, 1L).otherwise(0L)).as("n2"))
+      drainToMemory(spark, agg, "graft_stream_drift", f.bytes)
+    }
     // the drained final counts run the SAME psi projection as the
     // batch operator — one definition, one smoothing constant
-    graft.operators.Pipeline.psiFromCounts(
-      drainToMemory(spark, agg, "graft_stream_drift", pathBytes(dir)),
-      nBuckets)
+    graft.operators.Pipeline.psiFromCounts(counts, nBuckets)
   }
 
   /** INCREMENTAL exact-moment maintenance over a stream: per-type
@@ -882,19 +891,15 @@ object EventStreams {
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_type"),
         col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2)).as("v"))
-    val dir = graft.TempDirs.create("graft_stream_moments_src")
-    ev.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
-      .parquet(dir.toString)
-    val agg = stream.groupBy("event_type")
-      .agg(count(lit(1)).as("n"),
-        sum(col("v")).as("s1"),
-        sum(col("v") * col("v")).as("s2"),
-        min(col("v")).as("mn"),
-        max(col("v")).as("mx"))
-    drainToMemory(spark, agg, "graft_stream_moments", pathBytes(dir))
-      .select(col("event_type"), col("n"),
+    withFeed(spark, "graft_stream_moments_src") { f =>
+      val agg = f.split(ev).groupBy("event_type")
+        .agg(count(lit(1)).as("n"),
+          sum(col("v")).as("s1"),
+          sum(col("v") * col("v")).as("s2"),
+          min(col("v")).as("mn"),
+          max(col("v")).as("mx"))
+      drainToMemory(spark, agg, "graft_stream_moments", f.bytes)
+    }.select(col("event_type"), col("n"),
         round(col("s1").cast("double") / col("n").cast("double"), 6)
           .as("mean"),
         round((col("n").cast("double") * col("s2").cast("double")
@@ -923,15 +928,11 @@ object EventStreams {
         explode(split(col("text"),
           graft.operators.TextMapReduce.WordSplit)).as("word"))
       .filter(col("word") =!= "")
-    val dir = graft.TempDirs.create("graft_stream_topk_src")
-    words.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(words.schema)
-      .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
-      .parquet(dir.toString)
-    val agg = stream.groupBy("lang")
-      .agg(graft.functions.FreqItemsSketch.freq_items(col("word"), 64).as("sk"))
-    drainToMemory(spark, agg, "graft_stream_topk", pathBytes(dir))
-      .select(col("lang"), posexplode(slice(col("sk"), 1, 5)))
+    withFeed(spark, "graft_stream_topk_src") { f =>
+      val agg = f.split(words).groupBy("lang")
+        .agg(graft.functions.FreqItemsSketch.freq_items(col("word"), 64).as("sk"))
+      drainToMemory(spark, agg, "graft_stream_topk", f.bytes)
+    }.select(col("lang"), posexplode(slice(col("sk"), 1, 5)))
       .select(col("lang"), col("col.item").as("word"),
         col("col.cnt").as("cnt"), (col("pos") + 1).cast("long").as("rnk"))
   }
@@ -954,18 +955,14 @@ object EventStreams {
         col("value").cast(DecimalType(18, 2)).as("v"))
     val dim = graft.Tables.customer(spark, sfDir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val dir = graft.TempDirs.create("graft_stream_dim_src")
-    ev.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
-    val joined = stream
-      .join(broadcast(dim), col("user_id") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("v")).as("sv"))
-    drainToMemory(spark, joined, "graft_stream_dim", pathBytes(dir))
-      .select(col("c_mktsegment"), col("event_type"), col("n"),
+    withFeed(spark, "graft_stream_dim_src") { f =>
+      val joined = f.split(ev)
+        .join(broadcast(dim), col("user_id") === col("c_custkey"))
+        .groupBy(col("c_mktsegment"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("v")).as("sv"))
+      drainToMemory(spark, joined, "graft_stream_dim", f.bytes)
+    }.select(col("c_mktsegment"), col("event_type"), col("n"),
         col("sv").cast("double").as("sum_value"))
   }
 
@@ -1011,17 +1008,6 @@ object EventStreams {
       .agg(min(col("owner")).as("near_dup_of"))
   }
 
-  /** The file-fed gate path: documents split into id-ordered halves
-    * (two parquet files with forced modification times, processed
-    * oldest-first one per trigger), so the second batch's docs are
-    * checked against state built by the first — a real cross-batch
-    * incremental dedup, gated bit-for-bit by the batch oracle.
-    */
-  /** Feed-construction helper shared by the multi-batch file streams:
-    * write `df` as a single parquet file named `name` under `feed`
-    * with a forced mtime (the source processes oldest-first, so fixed
-    * mtimes fix batch order).
-    */
   /** WATERMARK LATE-DATA DROP (`stream_late_drop`) — the one
     * watermark semantic no other key gates directly: what happens to
     * data that arrives AFTER the watermark passed it. The feed is the
@@ -1049,72 +1035,56 @@ object EventStreams {
         .filter(to_date(col("ts")) < col("cutoff")).drop("cutoff")
       val fresh = raw.crossJoin(broadcast(cut))
         .filter(to_date(col("ts")) >= col("cutoff")).drop("cutoff")
-      val out = graft.TempDirs.create("graft_stream_late_out")
-      // the returned frame reads `out` only: the feed and checkpoint
-      // go once both runs have stopped
-      val schema = withTempDirs("graft_stream_late_src",
-          "graft_stream_late_ckpt") { case Seq(feed, ckpt) =>
+      val out = graft.TempDirs.create("graft_stream_late_out").toString
+      val schema = withFeed(spark, "graft_stream_late") { f =>
         // the LATER half arrives FIRST — a full run over it commits the
         // advanced watermark into the checkpoint (a trailing no-data
         // micro-batch finalizes its closed windows); only THEN does the
         // earlier half land, entirely beyond the recovered watermark
-        dumpFeedFile(feed, fresh, "a.parquet", 1000000000000L)
-        def counts = spark.readStream.schema(graft.Tables.parquet(spark,
-            feed.resolve("a.parquet").toString).schema)
-          .parquet(feed.toString)
+        val counts = f.dump((fresh, "a.parquet", 1000000000000L))
           .withWatermark("ts", "2 hours")
           .groupBy(window(col("ts"), "1 hour"))
           .agg(count(lit(1)).as("n"))
-        def runOnce(): Unit = withScaledStateFor(spark, sfDir) {
+        // state sized from the corpus events file, not the feed
+        val events = java.nio.file.Paths.get(s"$sfDir/events.parquet")
+        def runOnce(): Unit = withScaledState(spark, pathBytes(events)) {
           runQuery(spark, counts.writeStream
-            .format("parquet").option("path", out.toString)
-            .option("checkpointLocation", ckpt.toString)
+            .format("parquet").option("path", out)
+            .option("checkpointLocation", f.ckpt)
             .outputMode("append"))(_.processAllAvailable())
         }
         runOnce()
-        dumpFeedFile(feed, late, "b.parquet", 1000000060000L)
+        f.dump((late, "b.parquet", 1000000060000L))
         runOnce()
         counts.schema
       }
-      graft.Tables.parquet(spark, out.toString, Some(schema))
+      graft.Tables.parquet(spark, out, Some(schema))
         .select(date_format(col("window.start"),
           "yyyy-MM-dd HH:mm:ss").as("window_start"), col("n"))
     }
 
-  private def dumpFeedFile(feed: java.nio.file.Path, df: DataFrame,
-      name: String, mtimeMs: Long): Unit = {
-    val tmp = feed.resolve(s"${name}_tmp")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = java.nio.file.Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no parquet part under $tmp"))
-    val dest = feed.resolve(name)
-    java.nio.file.Files.move(part, dest)
-    java.nio.file.Files.setLastModifiedTime(dest,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-  }
-
+  /** The file-fed gate path: documents split into id-ordered halves
+    * (two parquet files with forced modification times, processed
+    * oldest-first one per trigger), so the second batch's docs are
+    * checked against state built by the first — a real cross-batch
+    * incremental dedup, gated bit-for-bit by the batch oracle.
+    */
   def nearDupFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     // feed construction only (not the operator): 1-row bounded agg
-    // for the id cutoff between the two simulated ingest runs
-    val cutoff = docs.agg(max(col("doc_id"))).head().getLong(0) / 2 + 1
-    // the drained frame reads the memory sink's spill: the feed goes
-    // once the query has stopped
-    withTempDirs("graft_stream_near_dup") { case Seq(feed) =>
+    // for the id cutoff between the two simulated ingest runs; an
+    // empty documents table has no max id
+    val cutoff = Option(docs.agg(max(col("doc_id"))).head().get(0))
+      .fold(1L)(_.asInstanceOf[Long] / 2 + 1)
+    withFeed(spark, "graft_stream_near_dup") { f =>
       // fixed past mtimes: the source processes oldest-first
-      dumpFeedFile(feed, docs.filter(col("doc_id") < cutoff),
-        "run1.parquet", 1000000000000L)
-      dumpFeedFile(feed, docs.filter(col("doc_id") >= cutoff),
-        "run2.parquet", 1000000060000L)
-      val stream = spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1") // force the cross-batch carry
-        .parquet(feed.toString)
-      val feedBytes = pathBytes(feed)
-      withStateFor(spark, feedBytes) {
+      val stream = f.dump(
+        (docs.filter(col("doc_id") < cutoff), "run1.parquet", 1000000000000L),
+        (docs.filter(col("doc_id") >= cutoff), "run2.parquet", 1000000060000L))
+      withStateFor(spark, f.bytes) {
         drainToMemory(spark, nearDupStream(stream), "graft_stream_near_dup",
-          feedBytes)
+          f.bytes)
       }
     }.select(col("doc_id"), col("near_dup_of"))
   }
@@ -1139,24 +1109,22 @@ object EventStreams {
     // apply the identical batch
     val base = Relational.mergeBase(spark, sfDir)
     val (updates, delins) = Relational.mergeChangeBatches(base)
-    val feed = graft.TempDirs.create("graft_stream_merge_src")
-    // mtime order fixes batch order: updates first, deletes+inserts second
-    dumpFeedFile(feed, updates, "changes1.parquet", 1000000000000L)
-    dumpFeedFile(feed, delins, "changes2.parquet", 1000000060000L)
     val tbl = graft.TempDirs.create("graft_stream_merge_tbl")
     base.write.mode("overwrite").parquet(s"$tbl/v0")
     @volatile var cur = s"$tbl/v0"
-    val stream = spark.readStream.schema(updates.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(feed.toString)
-    runQuery(spark, stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        val merged = Relational.mergeApply(graft.Tables.parquet(spark, cur),
-          batch, "o_orderkey", Seq("o_orderstatus", "o_totalprice"))
-        val next = s"$tbl/v${id + 1}"
-        merged.write.mode("overwrite").parquet(next)
-        cur = next
-      })(_.processAllAvailable())
+    withFeed(spark, "graft_stream_merge_src") { f =>
+      // mtime order fixes batch order: updates first, deletes+inserts second
+      val stream = f.dump((updates, "changes1.parquet", 1000000000000L),
+        (delins, "changes2.parquet", 1000000060000L))
+      runQuery(spark, stream.writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          val merged = Relational.mergeApply(graft.Tables.parquet(spark, cur),
+            batch, "o_orderkey", Seq("o_orderstatus", "o_totalprice"))
+          val next = s"$tbl/v${id + 1}"
+          merged.write.mode("overwrite").parquet(next)
+          cur = next
+        })(_.processAllAvailable())
+    }
     graft.Tables.parquet(spark, cur)
   }
 
@@ -1176,32 +1144,23 @@ object EventStreams {
     */
   def dedupRestartFromFiles(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.withNanosAsLong(spark) {
-      val path = s"$sfDir/events.parquet"
-      val raw = graft.Tables.parquet(spark, path)
-      val out = graft.TempDirs.create("graft_stream_restart_out")
-      // the read-back needs only `out`: the feed and checkpoint go
-      // once both runs have stopped
-      val schema = withTempDirs("graft_stream_restart_src",
-          "graft_stream_restart_ckpt") { case Seq(feed, ckpt) =>
-        def events =
-          tsMicros(spark.readStream.schema(raw.schema).parquet(feed.toString))
-        def runOnce(): Unit = withStateFor(spark, eventBytes(sfDir)) {
-          runQuery(spark, dedupStream(events).writeStream
+      val out = graft.TempDirs.create("graft_stream_restart_out").toString
+      val schema = withFeed(spark, "graft_stream_restart") { f =>
+        val deduped = dedupStream(f.link(sfDir))
+        def runOnce(): Unit = withStateFor(spark, f.bytes) {
+          runQuery(spark, deduped.writeStream
             .format("parquet")
-            .option("path", out.toString)
-            .option("checkpointLocation", ckpt.toString)
+            .option("path", out)
+            .option("checkpointLocation", f.ckpt)
             .outputMode("append"))(_.processAllAvailable())
         }
-        java.nio.file.Files.createSymbolicLink(
-          feed.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
         runOnce()
         // the duplicate copy lands only AFTER the restart boundary
-        java.nio.file.Files.createSymbolicLink(
-          feed.resolve("events_b.parquet"), java.nio.file.Paths.get(path))
+        f.link(sfDir)
         runOnce()
-        dedupStream(events).schema
+        deduped.schema
       }
-      graft.Tables.parquet(spark, out.toString, Some(schema))
+      graft.Tables.parquet(spark, out, Some(schema))
         .select(col("event_id"),
           date_format(col("ts"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("ts"),
           col("user_id"), col("event_type"), col("value"))
@@ -1230,21 +1189,16 @@ object EventStreams {
         sum(col("value").cast(DecimalType(18, 2))).as("sv"))
       .select(col("user_id"), col("event_type"), col("n"),
         col("sv").cast(DecimalType(18, 2)).as("sum_value"))
-    // the tailed output lands in `out`: the source table and the
-    // checkpoint go once both runs have stopped
-    val schema = withTempDirs("graft_stream_tail_tbl",
-        "graft_stream_tail_ckpt") { case Seq(tbl, ckptDir) =>
-      val (dir, ckpt) = (tbl.toString, ckptDir.toString)
+    val schema = withFeed(spark, "graft_stream_tail") { f =>
       def put(df: DataFrame): Unit =
         df.write.format("graft.sources.v2.GraftSinkSource")
-          .option("path", dir).mode("append").save()
-      def tail = spark.readStream.format("graft.sources.v2.GraftSinkSource")
+          .option("path", f.table).mode("append").save()
+      val tail = spark.readStream.format("graft.sources.v2.GraftSinkSource")
         .schema(graft.sources.v2.GraftSink.Schema)
-        .option("path", dir).load()
-      def runOnce(): Unit = {
+        .option("path", f.table).load()
+      def runOnce(): Unit =
         runQuery(spark, tail.writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt))(_.processAllAvailable())
-      }
+          .option("checkpointLocation", f.ckpt))(_.processAllAvailable())
       put(roll.filter(col("user_id") % 2 === 0))
       runOnce()
       // the second generation lands only AFTER the restart boundary
@@ -1276,8 +1230,6 @@ object EventStreams {
     */
   def sinkCdc(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val dir = graft.TempDirs.create("graft_stream_cdc_tbl").toString
-    val ckpt = graft.TempDirs.create("graft_stream_cdc_ckpt").toString
     val out = graft.TempDirs.create("graft_stream_cdc_out").toString
     val ev = graft.Tables.events(spark, sfDir)
     val roll = ev.groupBy("user_id", "event_type")
@@ -1285,26 +1237,28 @@ object EventStreams {
         sum(col("value").cast(DecimalType(18, 2))).as("sv"))
       .select(col("user_id"), col("event_type"), col("n"),
         col("sv").cast(DecimalType(18, 2)).as("sum_value"))
-    def put(df: DataFrame): Unit =
-      df.write.format("graft.sources.v2.GraftSinkSource")
-        .option("path", dir).mode("append").save()
-    def changes = spark.readStream.format("graft.sources.v2.GraftSinkSource")
-      .schema(graft.sources.v2.GraftSink.Schema)
-      .option("path", dir).option("mode", "cdc").load()
-    def runOnce(): Unit = {
-      runQuery(spark, changes.writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt))(_.processAllAvailable())
+    val schema = withFeed(spark, "graft_stream_cdc") { f =>
+      def put(df: DataFrame): Unit =
+        df.write.format("graft.sources.v2.GraftSinkSource")
+          .option("path", f.table).mode("append").save()
+      val changes = spark.readStream.format("graft.sources.v2.GraftSinkSource")
+        .schema(graft.sources.v2.GraftSink.Schema)
+        .option("path", f.table).option("mode", "cdc").load()
+      def runOnce(): Unit =
+        runQuery(spark, changes.writeStream.format("parquet").option("path", out)
+          .option("checkpointLocation", f.ckpt))(_.processAllAvailable())
+      put(roll.filter(col("user_id") % 2 === 0))
+      put(roll.filter(col("user_id") % 2 =!= 0))
+      runOnce() // window 0→2: append partitions
+      graft.sources.v2.GraftSink.deleteWhereMor(spark, f.table,
+        col("user_id") % 7 === 0)
+      runOnce() // window 2→3: delete-vector delta partitions
+      graft.sources.v2.GraftSink.compact(spark, f.table,
+        targetRows = Long.MaxValue)
+      runOnce() // window 3→4: rewrite — insert/delete pairs must cancel
+      changes.schema
     }
-    put(roll.filter(col("user_id") % 2 === 0))
-    put(roll.filter(col("user_id") % 2 =!= 0))
-    runOnce() // window 0→2: append partitions
-    graft.sources.v2.GraftSink.deleteWhereMor(spark, dir,
-      col("user_id") % 7 === 0)
-    runOnce() // window 2→3: delete-vector delta partitions
-    graft.sources.v2.GraftSink.compact(spark, dir,
-      targetRows = Long.MaxValue)
-    runOnce() // window 3→4: rewrite — insert/delete pairs must cancel
-    graft.Tables.parquet(spark, out, Some(changes.schema))
+    graft.Tables.parquet(spark, out, Some(schema))
       .withColumn("sign",
         when(col("action") === "insert", lit(1L)).otherwise(lit(-1L)))
       .groupBy("event_type")
@@ -1332,8 +1286,6 @@ object EventStreams {
     */
   def dedupToGraftSink(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.withNanosAsLong(spark) {
-      val path = s"$sfDir/events.parquet"
-      val raw = graft.Tables.parquet(spark, path)
       val out = graft.TempDirs.create("graft_stream_gsink_out").toString
       // TSV-serializable shape: the event-time formats to a string,
       // doubles round-trip exactly (Double.toString ∘ parseDouble = id)
@@ -1350,33 +1302,27 @@ object EventStreams {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.DoubleType)))
-      // the sink read-back needs only `out`: the feed and checkpoint
-      // go once both runs have stopped
-      withTempDirs("graft_stream_gsink_src",
-          "graft_stream_gsink_ckpt") { case Seq(feed, ckpt) =>
-        def events =
-          tsMicros(spark.readStream.schema(raw.schema).parquet(feed.toString))
-        def runOnce(): Unit = withStateFor(spark, eventBytes(sfDir)) {
-          runQuery(spark, dedupStream(events).writeStream
+      withFeed(spark, "graft_stream_gsink") { f =>
+        val deduped = dedupStream(f.link(sfDir))
+        def runOnce(): Unit = withStateFor(spark, f.bytes) {
+          runQuery(spark, deduped.writeStream
             .foreachBatch { (batch: DataFrame, id: Long) =>
               shape(batch).write.format("graft.sources.v2.GraftSinkSource")
                 .option("path", out).option("txn", s"epoch-$id")
                 .mode("append").save()
             }
-            .option("checkpointLocation", ckpt.toString))(_.processAllAvailable())
+            .option("checkpointLocation", f.ckpt))(_.processAllAvailable())
         }
-        java.nio.file.Files.createSymbolicLink(
-          feed.resolve("events_a.parquet"), java.nio.file.Paths.get(path))
         runOnce()
         // the duplicate copy lands only AFTER the restart boundary
-        java.nio.file.Files.createSymbolicLink(
-          feed.resolve("events_b.parquet"), java.nio.file.Paths.get(path))
+        f.link(sfDir)
         runOnce()
       }
       // leg 3 — duplicate DELIVERY of a whole committed epoch: replay
       // epoch 0's payload (its batch twin) with epoch 0's txn id; the
       // manifest ledger must skip the commit or the hash gate doubles
-      shape(tsMicros(raw)).dropDuplicates("event_id")
+      shape(tsMicros(graft.Tables.parquet(spark, s"$sfDir/events.parquet")))
+        .dropDuplicates("event_id")
         .write.format("graft.sources.v2.GraftSinkSource")
         .option("path", out).option("txn", "epoch-0")
         .mode("append").save()
@@ -1409,52 +1355,48 @@ object EventStreams {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))
-    val feed = graft.TempDirs.create("graft_stream_compact_src").toString
-    val ckpt = graft.TempDirs.create("graft_stream_compact_ckpt").toString
     val out = graft.TempDirs.create("graft_stream_compact_out").toString
-    docs.repartition(feedFiles).write.mode("overwrite").parquet(feed)
-    // the DuckDB oracle replays the maintenance recurrence from the
-    // REGISTRY constants (feedFiles epochs x filesPerEpoch appends vs
-    // the budget) — these checks turn the two assumptions that
-    // recurrence rests on into loud failures instead of silent gate
-    // divergence: (1) the feed write produced exactly one parquet
-    // part per epoch, (2) each epoch has enough rows that the
-    // round-robin repartition leaves no empty partition (an empty
-    // partition writes no file and breaks files-per-epoch)
-    val nFeedParts = {
-      val d = new java.io.File(feed)
-      d.listFiles().count(f => f.getName.endsWith(".parquet"))
-    }
-    require(nFeedParts == feedFiles,
-      s"feed wrote $nFeedParts parts, oracle recurrence assumes $feedFiles")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("n_chars", LongType)))
     val nCompactions = new java.util.concurrent.atomic.AtomicLong(0)
-    runQuery(spark, spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // round-robin into a deterministic per-epoch file count — the
-        // small-file pressure the loop exists to manage
-        val n = batch.count()
-        require(n >= filesPerEpoch,
-          s"epoch $id has $n rows < $filesPerEpoch — an empty " +
-            "round-robin partition would write fewer files than the " +
-            "oracle's recurrence assumes")
-        batch.repartition(filesPerEpoch)
-          .write.format("graft.sources.v2.GraftSinkSource")
-          .option("path", out).option("txn", s"epoch-$id")
-          .mode("append").save()
-        val live = GraftSink.history(spark, out)
-          .orderBy(col("generation").desc).limit(1)
-          .select("n_files").first().getLong(0)
-        if (live > fileBudget) {
-          GraftSink.compact(spark, out, Long.MaxValue, schema)
-          nCompactions.incrementAndGet()
+    withFeed(spark, "graft_stream_compact") { f =>
+      val stream = f.split(docs, feedFiles)
+      // the DuckDB oracle replays the maintenance recurrence from the
+      // REGISTRY constants (feedFiles epochs x filesPerEpoch appends vs
+      // the budget) — these checks turn the two assumptions that
+      // recurrence rests on into loud failures instead of silent gate
+      // divergence: (1) the feed write produced exactly one parquet
+      // part per epoch, (2) each epoch has enough rows that the
+      // round-robin repartition leaves no empty partition (an empty
+      // partition writes no file and breaks files-per-epoch)
+      val nFeedParts =
+        f.dir.toFile.listFiles().count(_.getName.endsWith(".parquet"))
+      require(nFeedParts == feedFiles,
+        s"feed wrote $nFeedParts parts, oracle recurrence assumes $feedFiles")
+      runQuery(spark, stream.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          // round-robin into a deterministic per-epoch file count — the
+          // small-file pressure the loop exists to manage
+          val n = batch.count()
+          require(n >= filesPerEpoch,
+            s"epoch $id has $n rows < $filesPerEpoch — an empty " +
+              "round-robin partition would write fewer files than the " +
+              "oracle's recurrence assumes")
+          batch.repartition(filesPerEpoch)
+            .write.format("graft.sources.v2.GraftSinkSource")
+            .option("path", out).option("txn", s"epoch-$id")
+            .mode("append").save()
+          val live = GraftSink.history(spark, out)
+            .orderBy(col("generation").desc).limit(1)
+            .select("n_files").first().getLong(0)
+          if (live > fileBudget) {
+            GraftSink.compact(spark, out, Long.MaxValue, schema)
+            nCompactions.incrementAndGet()
+          }
+          ()
         }
-        ()
-      }
-      .option("checkpointLocation", ckpt))(_.processAllAvailable())
+        .option("checkpointLocation", f.ckpt))(_.processAllAvailable())
+    }
     val finalFiles = GraftSink.history(spark, out)
       .orderBy(col("generation").desc).limit(1)
       .select("n_files").first().getLong(0)
@@ -1505,23 +1447,20 @@ object EventStreams {
       .write.format("graft.sources.v2.GraftSinkSource")
       .option("path", parent).mode("append").save()
     GraftSink.cloneShallow(parent, branch)
-    // the feed: the upper half in two files (⇒ two epochs under
-    // maxFilesPerTrigger=1), plus an optional planted dirty epoch
-    val feed = graft.TempDirs.create("graft_stream_wap_src").toString
-    val ckpt = graft.TempDirs.create("graft_stream_wap_ckpt").toString
-    half(col("doc_id") > _).repartition(2).write
-      .mode("overwrite").parquet(feed)
-    dirty.foreach(_.select(col("doc_id").cast("long"),
-      col("n_chars").cast("long")).write.mode("append").parquet(feed))
-    runQuery(spark, spark.readStream.schema(sinkSchema)
-      .option("maxFilesPerTrigger", "1").parquet(feed)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.format("graft.sources.v2.GraftSinkSource")
-          .option("path", branch).option("txn", s"epoch-$id")
-          .mode("append").save()
-      }
-      .option("checkpointLocation", ckpt))(_.processAllAvailable())
+    // the feed: the upper half in two files (⇒ two epochs, one file
+    // per trigger), plus an optional planted dirty epoch
+    withFeed(spark, "graft_stream_wap") { f =>
+      val stream = f.split(half(col("doc_id") > _))
+      dirty.foreach(d => f.split(d.select(col("doc_id").cast("long"),
+        col("n_chars").cast("long")), 1))
+      runQuery(spark, stream.writeStream
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          batch.write.format("graft.sources.v2.GraftSinkSource")
+            .option("path", branch).option("txn", s"epoch-$id")
+            .mode("append").save()
+        }
+        .option("checkpointLocation", f.ckpt))(_.processAllAvailable())
+    }
     // the AUDIT, over the staged TABLE (inherited baseline + every
     // streamed epoch): key uniqueness across the WHOLE history and a
     // per-row sanity rule — cross-epoch invariants a batch-local
@@ -1556,16 +1495,13 @@ object EventStreams {
     */
   def curateFromFiles(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = graft.Tables.documents(spark, sfDir)
-    val dir = graft.TempDirs.create("graft_stream_curate_src")
-    docs.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
     // parquet file sink, not memory: the kept documents are
     // corpus-sized (see sessionsFromFiles)
-    drainToFiles(spark, graft.operators.TextAnalysis.curateGateOver(stream),
+    withFeed(spark, "graft_stream_curate_src") { f =>
+      drainToFiles(spark,
+        graft.operators.TextAnalysis.curateGateOver(f.split(docs)),
         "graft_stream_curate")(_.processAllAvailable())
-      .select(col("doc_id"), col("n_words"), col("pred_lang"))
+    }.select(col("doc_id"), col("n_words"), col("pred_lang"))
   }
 
   /** `Dataset.observe` on a STREAMING query — the per-batch
@@ -1583,38 +1519,28 @@ object EventStreams {
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"),
         col("value").cast(DecimalType(18, 2)).as("v"))
-    val dir = graft.TempDirs.create("graft_stream_obs_src")
-    ev.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1") // metrics must span >1 batch
-      .parquet(dir.toString)
-      .observe("graft_stream_obs",
-        count(lit(1)).as("n_rows"),
-        sum(col("v")).as("sum_value"),
-        count(when(col("event_type") === "purchase", lit(1)))
-          .as("n_purchase"))
-    val agg = stream.groupBy("event_type").agg(count(lit(1)).as("n"))
-    val name = nextSinkName("graft_stream_obs")
-    val (nRows, sumV, nPurch) = withSink(spark, name) {
-      val q = withScaledState(spark, pathBytes(dir)) {
-        runQuery(spark, agg.writeStream
-          .format("memory").queryName(name).outputMode("complete"))(
-          _.processAllAvailable())
+    val (nRows, sumV, nPurch) = withFeed(spark, "graft_stream_obs_src") { f =>
+      val agg = f.split(ev)
+        .observe("graft_stream_obs",
+          count(lit(1)).as("n_rows"),
+          sum(col("v")).as("sum_value"),
+          count(when(col("event_type") === "purchase", lit(1)))
+            .as("n_purchase"))
+        .groupBy("event_type").agg(count(lit(1)).as("n"))
+      // the sink rows are never read; per-batch observed metrics are
+      // additive across the feed
+      readMemorySink(spark, agg, "graft_stream_obs", f.bytes) { (_, q) =>
+        q.recentProgress.flatMap(p =>
+            Option(p.observedMetrics.get("graft_stream_obs")))
+          .foldLeft((0L, BigDecimal(0), 0L)) { (acc, row) =>
+            (acc._1 + row.getLong(0),
+              acc._2 + (row.get(1) match {
+                case null => BigDecimal(0) // an empty batch sums to null
+                case d: java.math.BigDecimal => BigDecimal(d)
+              }),
+              acc._3 + row.getLong(2))
+          }
       }
-      // the sink rows are never read — drop the view NOW so the
-      // success path honors the no-pinned-sink invariant too
-      spark.catalog.dropTempView(name)
-      // per-batch observed metrics are additive across the feed
-      q.recentProgress.flatMap(p =>
-          Option(p.observedMetrics.get("graft_stream_obs")))
-        .foldLeft((0L, BigDecimal(0), 0L)) { (acc, row) =>
-          (acc._1 + row.getLong(0),
-            acc._2 + (row.get(1) match {
-              case null => BigDecimal(0) // an empty batch sums to null
-              case d: java.math.BigDecimal => BigDecimal(d)
-            }),
-            acc._3 + row.getLong(2))
-        }
     }
     import spark.implicits._
     Seq((nRows, sumV.toDouble, nPurch))
@@ -1652,22 +1578,18 @@ object EventStreams {
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value")).as[Event]
-    val dir = graft.TempDirs.create("graft_stream_tws_src")
-    ev.toDF().repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
-      .parquet(dir.toString)
-      .as[Event]
-    withRocksDbState(spark) {
-      val alerts = stream.groupByKey(_.user_id)
-        .transformWithState(new PowerAlertProcessor(),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append(),
-          org.apache.spark.sql.Encoders.product[TwsAlert])
-      drainToMemory(spark, alerts.toDF(), "graft_stream_tws",
-        pathBytes(dir), "append")
-        .select(col("user_id"), col("threshold"))
-    }
+    withFeed(spark, "graft_stream_tws_src") { f =>
+      val stream = f.split(ev.toDF()).as[Event]
+      withRocksDbState(spark) {
+        val alerts = stream.groupByKey(_.user_id)
+          .transformWithState(new PowerAlertProcessor(),
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            OutputMode.Append(),
+            org.apache.spark.sql.Encoders.product[TwsAlert])
+        drainToMemory(spark, alerts.toDF(), "graft_stream_tws",
+          f.bytes, "append")
+      }
+    }.select(col("user_id"), col("threshold"))
   }
 
   /** INCREMENTAL k-means codebook maintenance over a stream: the
@@ -1702,22 +1624,19 @@ object EventStreams {
     val cents = Similarity.lloyd(Similarity.unitSample(all), k,
       Similarity.PqLloydIters)
     val d = cents(0).length
-    val feed = all.select(col("v"), col("norm"))
-    val dir = graft.TempDirs.create("graft_stream_kmeans_src")
-    feed.repartition(2).write.mode("overwrite").parquet(dir.toString)
-    val stream = spark.readStream.schema(feed.schema)
-      .option("maxFilesPerTrigger", "1") // force a cross-BATCH state carry
-      .parquet(dir.toString)
-    val agg = stream
-      .select(element_at(centroid_probes(col("v"), col("norm"), cents, 1), 1)
-        .as("cid"), col("v"), col("norm"))
-      .as[(Int, Seq[Double], Double)]
-      .groupByKey(_._1)
-      .agg(graft.functions.VecSumAgg.agg(d).toColumn)
-      .toDF("cid", "buf")
     // k bounded rows of drained state -> refined centroids
-    val rows = drainToMemory(spark, agg, "graft_stream_kmeans",
-        pathBytes(dir)).collect().map { r =>
+    val drained = withFeed(spark, "graft_stream_kmeans_src") { f =>
+      val agg = f.split(all.select(col("v"), col("norm")))
+        .select(element_at(centroid_probes(col("v"), col("norm"), cents, 1), 1)
+          .as("cid"), col("v"), col("norm"))
+        .as[(Int, Seq[Double], Double)]
+        .groupByKey(_._1)
+        .agg(graft.functions.VecSumAgg.agg(d).toColumn)
+        .toDF("cid", "buf")
+      readMemorySink(spark, agg, "graft_stream_kmeans", f.bytes)(
+        (rows, _) => rows.collect())
+    }
+    val rows = drained.map { r =>
       val cid = r.getInt(0)
       val buf = r.getStruct(1)
       val n = buf.getLong(0)
@@ -1792,37 +1711,32 @@ object EventStreams {
         if (r.isNullAt(2)) None
         else Some((r.getDouble(4), r.getDouble(3))))
     }.toMap
-    val feed = graft.TempDirs.create("graft_stream_ewma")
     val withCut = daily.crossJoin(broadcast(cut))
-    // fixed past mtimes: the source processes oldest-first
-    dumpFeedFile(feed,
-      withCut.filter(col("day") < col("cut")).drop("cut"),
-      "run1.parquet", 1000000000000L)
-    dumpFeedFile(feed,
-      withCut.filter(col("day") >= col("cut")).drop("cut"),
-      "run2.parquet", 1000000060000L)
-    // both consumers (the limits collect, the two feed dumps) have
-    // run — the rollup's blocks are dead weight from here on
-    daily.unpersist(blocking = false)
-    val stream = spark.readStream.schema(daily.schema)
-      .option("maxFilesPerTrigger", "1") // force the cross-batch carry
-      .parquet(feed.toString)
-      .as[EwmaIn]
-    withRocksDbState(spark) {
-      val out = stream.groupByKey(_.event_type)
-        .transformWithState(new EwmaProcessor(params),
-          org.apache.spark.sql.streaming.TimeMode.None(),
-          OutputMode.Append(),
-          org.apache.spark.sql.Encoders.product[EwmaOut])
-      drainToMemory(spark, out.toDF(), "graft_stream_ewma",
-        pathBytes(feed), "append")
-        .join(broadcast(lims
-          .select(col("event_type"), col("hi"), col("lo"))), "event_type")
-        .select(col("event_type"), col("day"), col("y"),
-          round(col("ewma"), 6).as("ewma"),
-          round(col("hi"), 6).as("ucl"), round(col("lo"), 6).as("lcl"),
-          col("out_of_control"))
-    }
+    withFeed(spark, "graft_stream_ewma") { f =>
+      // fixed past mtimes: the source processes oldest-first
+      val stream = f.dump(
+        (withCut.filter(col("day") < col("cut")).drop("cut"),
+          "run1.parquet", 1000000000000L),
+        (withCut.filter(col("day") >= col("cut")).drop("cut"),
+          "run2.parquet", 1000000060000L)).as[EwmaIn]
+      // both consumers (the limits collect, the two feed dumps) have
+      // run — the rollup's blocks are dead weight from here on
+      daily.unpersist(blocking = false)
+      withRocksDbState(spark) {
+        val out = stream.groupByKey(_.event_type)
+          .transformWithState(new EwmaProcessor(params),
+            org.apache.spark.sql.streaming.TimeMode.None(),
+            OutputMode.Append(),
+            org.apache.spark.sql.Encoders.product[EwmaOut])
+        drainToMemory(spark, out.toDF(), "graft_stream_ewma", f.bytes,
+          "append")
+      }
+    }.join(broadcast(lims
+        .select(col("event_type"), col("hi"), col("lo"))), "event_type")
+      .select(col("event_type"), col("day"), col("y"),
+        round(col("ewma"), 6).as("ewma"),
+        round(col("hi"), 6).as("ucl"), round(col("lo"), 6).as("lcl"),
+        col("out_of_control"))
   }
 }
 

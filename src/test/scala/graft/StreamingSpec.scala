@@ -776,31 +776,99 @@ class StreamingSpec extends SparkSpec {
     assert(added("graft_stream_dedup_out").size == 3)
     val n = Tables.events(spark, sf).count()
     outs.foreach(o => assert(o.count() == n))
-    // the other bounded-stream keys: feed, checkpoint and source-table
-    // dirs go once the query has stopped; only the dir behind the
-    // returned frame (the file-sink output or the memory-sink spill)
-    // stays
-    val keys = Seq(
-      "stream_restart" -> (Seq("graft_stream_restart_src",
-        "graft_stream_restart_ckpt"), "graft_stream_restart_out"),
-      "stream_graft_sink" -> (Seq("graft_stream_gsink_src",
-        "graft_stream_gsink_ckpt"), "graft_stream_gsink_out"),
-      "stream_late_drop" -> (Seq("graft_stream_late_src",
-        "graft_stream_late_ckpt"), "graft_stream_late_out"),
-      "stream_sink_tail" -> (Seq("graft_stream_tail_tbl",
-        "graft_stream_tail_ckpt"), "graft_stream_tail_out"),
-      "stream_sessionize" -> (Seq("graft_stream_sess",
-        "graft_stream_sess_ckpt"), "graft_stream_sess_out"),
-      "stream_events_hourly" -> (Seq("graft_stream_src"), "graft_sink_drain"),
-      "stream_near_dup" -> (Seq("graft_stream_near_dup"), "graft_sink_drain"))
-    keys.foreach { case (key, (gone, kept)) =>
-      val ps = gone :+ kept
-      val before = ps.map(p => p -> dirs(p)).toMap
+    // every stream key: the only graft_* dirs a call leaves are the
+    // ones its returned frame reads (a file sink's output, a memory
+    // sink's spill, a result table); its feed, checkpoint and source
+    // table go once its query has stopped. (The diff sees every JVM
+    // that writes this tmpdir: run no other graft JVM beside it.)
+    def graftDirs(): Set[String] = {
+      val s = java.nio.file.Files.list(tmp)
+      try s.iterator().asScala
+        .filter(java.nio.file.Files.isDirectory(_))
+        .map(_.getFileName.toString).filter(_.startsWith("graft_")).toSet
+      finally s.close()
+    }
+    val drain = Seq("graft_sink_drain")
+    val reads: Map[String, Seq[String]] = Map(
+      "stream_cms" -> drain,
+      "stream_curate" -> Seq("graft_stream_curate_out"),
+      "stream_dedup" -> Seq("graft_stream_dedup_out"),
+      "stream_dim_join" -> drain,
+      "stream_drift" -> drain,
+      "stream_events_hourly" -> drain,
+      "stream_ewma" -> drain,
+      "stream_funnel_ci" -> drain,
+      "stream_graft_sink" -> Seq("graft_stream_gsink_out"),
+      "stream_kll" -> drain,
+      "stream_kmeans" -> Nil, // collected to driver rows
+      "stream_late_drop" -> Seq("graft_stream_late_out"),
+      "stream_merge" -> Seq("graft_stream_merge_tbl"),
+      "stream_moments" -> drain,
+      "stream_msprt" -> drain,
+      "stream_near_dup" -> drain,
+      "stream_observe" -> Nil, // summed from the query's progress
+      "stream_outer_join" -> Seq("graft_stream_ojoin_out"),
+      "stream_purchase_click" -> Seq("graft_stream_join_out"),
+      "stream_restart" -> Seq("graft_stream_restart_out"),
+      "stream_session_window" -> Seq("graft_stream_swin_out"),
+      "stream_sessionize" -> Seq("graft_stream_sess_out"),
+      "stream_sink_cdc" -> Seq("graft_stream_cdc_out"),
+      "stream_sink_compact" -> Seq("graft_stream_compact_out"),
+      "stream_sink_tail" -> Seq("graft_stream_tail_out"),
+      // the parent table, and the branch its published head points into
+      "stream_sink_wap" -> Seq("graft_stream_wap_b", "graft_stream_wap_p"),
+      "stream_theta" -> drain,
+      "stream_topk" -> drain,
+      "stream_tws" -> drain)
+    val keys = SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSeq
+    assert(keys.sorted == reads.keys.toSeq.sorted,
+      "a stream key without its listed dirs")
+    keys.sorted.foreach { key =>
+      val before = graftDirs()
       val out = SparkEntry.queries(key)(spark, sf)
-      val added = ps.map(p => p -> (dirs(p) -- before(p))).toMap
-      gone.foreach(p => assert(added(p).isEmpty, s"$key left $p dirs: $added"))
-      assert(added(kept).size == 1, s"$key: $added")
+      val added = (graftDirs() -- before).toSeq
+        .map(_.replaceAll("[0-9]+$", "")).sorted
+      assert(added == reads(key).sorted,
+        s"$key left ${added.diff(reads(key))}, " +
+          s"wants ${reads(key)}")
       assert(out.count() > 0, s"$key: its returned frame reads no rows")
+    }
+  }
+
+  test("the split-feed memory-sink stream keys run on a corpus with no " +
+      "events and no documents, keeping their sf0.001 output schemas") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+    val conf = spark.sparkContext.hadoopConfiguration
+    // sf0.001's tables; events and documents keep their footer schema
+    // (nanos timestamps included) and hold no row group
+    val dir = TempDirs.create("graft_stream_empty_corpus")
+    val files = Files.list(Paths.get(sf))
+    try files.iterator().asScala.foreach { p =>
+      val to = dir.resolve(p.getFileName)
+      if (Set("events.parquet", "documents.parquet")(p.getFileName.toString)) {
+        val in = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(p.toString), conf))
+        val schema = try in.getFooter.getFileMetaData.getSchema
+          finally in.close()
+        val w = new ParquetFileWriter(
+          HadoopOutputFile.fromPath(new Path(to.toString), conf), schema,
+          ParquetFileWriter.Mode.CREATE, 0L, 0)
+        w.start()
+        w.end(java.util.Collections.emptyMap[String, String]())
+      } else Files.createSymbolicLink(to, p)
+    } finally files.close()
+    assert(Tables.events(spark, dir.toString).count() == 0)
+    assert(Tables.documents(spark, dir.toString).count() == 0)
+    Seq("stream_theta", "stream_kll", "stream_cms", "stream_moments",
+      "stream_topk", "stream_dim_join", "stream_msprt", "stream_funnel_ci",
+      "stream_drift", "stream_near_dup").foreach { key =>
+      val want = SparkEntry.queries(key)(spark, sf).schema
+      val got = SparkEntry.queries(key)(spark, dir.toString)
+      assert(got.schema == want, s"$key: ${got.schema} vs $want")
+      got.count()
     }
   }
 
