@@ -35,7 +35,7 @@ import graft.{Tables, TempDirs}
 object Artifacts {
 
   /** Registry-wide entry bound. One corpus's full `graft.Verify` run
-    * creates 25 distinct (kind, params) entries; 64 holds that twice
+    * creates 26 distinct (kind, params) entries; 64 holds that twice
     * over, so no call can evict an artifact its own returned plan
     * reads.
     */

@@ -331,6 +331,10 @@ object Dedup {
     * every few rounds so the plan stays bounded however many rounds
     * run. Exits LOUDLY on non-convergence: a silently-capped iteration
     * would surface only as an unexplained wrong cluster_id downstream.
+    *
+    * The cutoff is graft's one driver graph budget: the HITS
+    * trajectory ([[HitsTrajectory]]) shares it, iterating a distinct
+    * edge graph of at most this many edges on the driver.
     */
   val DriverEdgeCutoff: Long = 1L << 20
 

@@ -2756,8 +2756,9 @@ object Relational {
     * fraction of total mass; default 1e-6 — one ppm of mass still
     * moving, the point where further rounds change no ranking; the
     * exact round-9 lattice fixed point sits a few rounds further and
-    * eps=0 reaches it) with a round cap. One bounded 1-row driver
-    * read per round prices the stop test. `q_hits` stays the
+    * eps=0 reaches it) with a round cap. The stop test is a driver
+    * loop on the on-driver trajectory, and one bounded 1-row driver
+    * read per round on the distributed one. `q_hits` stays the
     * DuckDB-gated twin (its oracle is the 2-round unroll); this key
     * is rows-gated with the fixed-point certificate spec-pinned.
     */
@@ -2768,146 +2769,20 @@ object Relational {
       lit(rounds.toLong).as("n_rounds"), lit(converged).as("converged"))
   }
 
-  /** Node budget under which a HITS score/degree vector broadcasts
-    * (~4M nodes ≈ a few hundred MB built — the guide's comfortable
-    * broadcast range). The per-round joins read score frames through
-    * `localCheckpoint`, whose LogicalRDD reports UNKNOWN size stats,
-    * so the planner sort-merge-joins 550k edges against a 20k-row
-    * score vector every half-step; re-attaching the size decision
-    * from the degree vectors' observed row counts restores the
-    * broadcast the stats loss hid. Past the budget the sort-merge
-    * shape stands — a web-scale score vector cannot ship to every
-    * executor.
+  /** `maxRounds` rounds of the corpus's [[HitsTrajectory]] artifact,
+    * or fewer when `eps` is set and the L1 test fires first.
     */
-  private val HitsBroadcastNodeBudget = 4L * 1000 * 1000
-
-  /** The HITS TRAJECTORY, an [[Artifacts]] value per corpus that
-    * owns every frame it reads: the distinct (customer, part) edge
-    * graph, both degree vectors and each round's score vectors, all
-    * freed by `close()` when the registry evicts it. `q_hits`, the
-    * convergence-mode twin, and the certificate spec's fixed unrolls
-    * all iterate the IDENTICAL graph (at 100 TB a production HITS
-    * persists this edge list and every run reloads it), and the
-    * (a, h) score vectors are a deterministic function of the edge
-    * graph alone (eps only decides where a caller STOPS reading), so
-    * `q_hits` (2 rounds), `q_hits_converged` (rounds until the L1
-    * test fires) and the certificate spec's fixed unrolls all read
-    * prefixes of ONE fixed-point iteration. Before this artifact each
-    * caller re-ran the edge join 2×rounds times from round 1 — a
-    * production HITS maintains one score table and every consumer
-    * reads it.
-    *
-    * Round economy inside the trajectory: one half-step is ONE
-    * materialized job — the edge join + decimal side-sums
-    * checkpoint, with the L1-normalization total collected AS AN
-    * OBSERVED METRIC of that same job (`observe`: the CollectMetrics
-    * accumulator rides the checkpoint pass — zero extra jobs, zero
-    * extra scans, a 1-row driver value at ANY graph scale). This
-    * replaces r18's global window (which funneled the ENTIRE
-    * node-sized aggregate through one window task every half-step:
-    * bounded under the 4M budget, single-task at web scale) and the
-    * pre-r18 crossJoin(broadcast(tot)) (whose broadcast build thread
-    * re-ran the whole edge join). The decimal sum is exact in any
-    * order, and BigDecimal.doubleValue is the same correctly-rounded
-    * conversion Cast(decimal→double) performs, so the rounded
-    * division is bit-identical to the forms the oracle replays. The
-    * normalized projections stay lazy: every consumer re-runs one
-    * cheap narrow projection over its round's checkpoint.
-    */
-  private[graft] final class HitsTrajectory(spark: SparkSession,
-      sfDir: String) extends AutoCloseable {
-    private val d289 = DecimalType(28, 9)
-    private val edges = Tables.lineitem(spark, sfDir)
-      .join(Tables.orders(spark, sfDir),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("u"), col("l_partkey").as("p"))
-      .distinct()
-      .localCheckpoint()
-
-    /** Per-node degree vector on side `key`, checkpointed once, with
-      * its row count (= the side's distinct nodes) observed on the
-      * same job.
-      */
-    private def degrees(key: String): (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation()
-      val deg = edges.groupBy(col(key).as("node"))
-        .agg(count(lit(1)).as("deg"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      (deg, obs.get("n").asInstanceOf[Long])
-    }
-    private[graft] val (uDeg, nCust) = degrees("u")
-    private[graft] val (pDeg, nPart) = degrees("p")
-    // the degree builds' observed counts price the join strategy for
-    // every round (the scaledPlanesPerBand convention: derive the
-    // scale decision from the data, once)
-    private val nNodes = nCust + nPart
-    private[graft] def sized(df: DataFrame): DataFrame =
-      if (nNodes <= HitsBroadcastNodeBudget) broadcast(df) else df
-
-    private def halfStep(scores: DataFrame, keyIn: String,
-        keyOut: String): DataFrame = {
-      val obs = org.apache.spark.sql.Observation()
-      val raw = edges
-        .join(sized(scores.withColumnRenamed("node", keyIn)), keyIn)
-        .groupBy(col(keyOut).as("node"))
-        .agg(sum(col("s").cast(d289)).as("raw"))
-        .observe(obs, sum(col("raw")).as("t"))
-        .localCheckpoint()
-      // an empty edge graph observes a null total over zero rows:
-      // any divisor then yields the same empty vector
-      val t = Option(obs.get("t").asInstanceOf[java.math.BigDecimal])
-        .fold(0.0)(_.doubleValue)
-      raw.select(col("node"),
-        round(col("raw").cast("double") / lit(t), 9).as("s"))
-    }
-
-    // hs(k) = hub vector entering round k+1 (hs(0) = all-ones init);
-    // as(k-1) = authority vector after round k; l1s(k) = L1 step
-    // between as of rounds k-1 and k (defined from round 2), computed
-    // on first read — a fixed-round caller never pays for it
-    private val hs = scala.collection.mutable.ArrayBuffer[DataFrame](
-      uDeg.select(col("node"), lit(1.0).as("s")))
-    private val as = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    private val l1s = scala.collection.mutable.Map[Int, Double]()
-
-    /** Extend the trajectory to `rounds` full rounds: two jobs (one
-      * per half-step) per extension round.
-      */
-    def ensure(rounds: Int): Unit = synchronized {
-      while (as.length < rounds) {
-        val a2 = halfStep(hs.last, "u", "p")
-        hs += halfStep(a2, "p", "u")
-        as += a2
-      }
-    }
-    def a(round: Int): DataFrame = synchronized(as(round - 1))
-    def h(round: Int): DataFrame = synchronized(hs(round))
-    /** L1 step into `round` (≥ 2, already ensured). ONE bounded 1-row
-      * collect on first access: both vectors are cheap
-      * projections over their retained checkpoints, so the L1 agg
-      * re-runs no edge join. Both vectors live on the same node set
-      * (every part with a sale), so the left join's null rows — none
-      * in practice — contribute exactly what an inner-join sum did:
-      * nothing (null abs-diff is skipped by sum).
-      */
-    def l1(round: Int): Double = synchronized(l1s.getOrElseUpdate(round,
-      as(round - 1)
-        .join(sized(as(round - 2).select(col("node"), col("s").as("prev"))),
-          Seq("node"), "left")
-        .agg(coalesce(sum(abs(col("s") - col("prev"))), lit(0.0)))
-        .first().getDouble(0)))
-    /** Evict hook: free the edge graph, every checkpointed round and
-      * both degree vectors.
-      */
-    def close(): Unit = synchronized((as ++ hs ++ Seq(edges, uDeg, pDeg))
-      .foreach(MemoCache.freeLocalCheckpoint))
-  }
-
   private[graft] def hitsRun(spark: SparkSession, sfDir: String,
-      maxRounds: Int, eps: Option[Double]): (DataFrame, Int, Boolean) = {
-    val traj = Artifacts.value(spark, sfDir, "hits_trajectory")(
-      new HitsTrajectory(spark, sfDir))
+      maxRounds: Int, eps: Option[Double]): (DataFrame, Int, Boolean) =
+    hitsOver(Artifacts.value(spark, sfDir, "hits_trajectory")(
+      HitsTrajectory(spark, sfDir)), maxRounds, eps)
+
+  /** The (frame, rounds run, converged) of `traj`: `maxRounds` rounds
+    * when `eps` is None; otherwise the test fires after round k ≥ 2 on
+    * the L1 step between a_{k-1} and a_k, and stops there.
+    */
+  private[graft] def hitsOver(traj: HitsTrajectory, maxRounds: Int,
+      eps: Option[Double]): (DataFrame, Int, Boolean) = {
     var rounds = 0
     var converged = false
     eps match {
@@ -2915,23 +2790,13 @@ object Relational {
         traj.ensure(maxRounds)
         rounds = maxRounds
       case Some(e) =>
-        // identical stop semantics to the inline loop: the test fires
-        // after round k ≥ 2 on the L1 step between a_{k-1} and a_k
         while (rounds < maxRounds && !converged) {
           rounds += 1
           traj.ensure(rounds)
           if (rounds >= 2 && traj.l1(rounds) <= e) converged = true
         }
     }
-    val a = traj.a(rounds)
-    val h = traj.h(rounds)
-    (a.join(traj.sized(traj.pDeg), "node")
-      .select(lit("part").as("kind"), col("node").as("node_id"),
-        col("s").as("score"), col("deg"))
-      .unionByName(h.join(traj.sized(traj.uDeg), "node")
-        .select(lit("cust").as("kind"), col("node").as("node_id"),
-          col("s").as("score"), col("deg"))),
-      rounds, converged)
+    (traj.frame(rounds), rounds, converged)
   }
 
   /** PER-USER BEHAVIORAL ENTROPY (`q_user_entropy`) — the Shannon

@@ -109,6 +109,22 @@ object Formats {
         max(col("ts_s")).as("last_ts"))
   }
 
+  /** The analyzed catalog table over the orders of the corpus at
+    * `sfDir`: an [[Artifacts.dir]] store, so a corpus rewritten at the
+    * same path gets a fresh copy. The table is named after its store
+    * dir, so no two corpora, nor two generations of one, share a
+    * catalog entry.
+    */
+  private[graft] def catalogOrders(spark: SparkSession, sfDir: String): String = {
+    def table(dir: String): String =
+      s"${java.nio.file.Paths.get(dir).getFileName}_orders"
+    table(Artifacts.dir(spark, sfDir, "cat_orders") { dir =>
+      graft.Tables.orders(spark, sfDir).write.mode(SaveMode.Overwrite)
+        .option("path", s"$dir/${table(dir)}").saveAsTable(table(dir))
+      spark.sql(s"ANALYZE TABLE ${table(dir)} COMPUTE STATISTICS")
+    })
+  }
+
   /** CATALOG + ANALYZE + CBO statistics — the surface that feeds
     * Spark's cost-based optimizer: orders persists as an EXTERNAL
     * catalog table (explicit temp-dir location — never a cwd-relative
@@ -120,26 +136,10 @@ object Formats {
     * 100-executor shuffle. The spec pins stats presence + exactness;
     * the rollup itself stays oracle-gated.
     */
-  /** Per-sfDir catalog table name: one session serving two scale
-    * factors must not resolve the other's catalog entry. Shared with
-    * FormatsSpec so the derivation cannot silently diverge.
-    */
-  private[graft] def catalogTableName(sfDir: String): String =
-    "graft_orders_cat_" + java.security.MessageDigest
-      .getInstance("MD5").digest(sfDir.getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-
   def catalogStatsRollup(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.DecimalType
-    val tbl = catalogTableName(sfDir)
-    if (!spark.catalog.tableExists(tbl)) {
-      val loc = graft.TempDirs.create("graft_cat_orders").toString
-      graft.Tables.orders(spark, sfDir).write
-        .mode(SaveMode.Overwrite).option("path", loc).saveAsTable(tbl)
-      spark.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS")
-    }
-    spark.table(tbl)
+    spark.table(catalogOrders(spark, sfDir))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"),
         sum(col("o_totalprice").cast(DecimalType(18, 2))).cast("double")

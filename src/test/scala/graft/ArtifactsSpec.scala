@@ -28,14 +28,6 @@ class ArtifactsSpec extends SparkSpec {
     d.toString
   }
 
-  /** A fresh corpus dir of symlinks to the sf tables. */
-  private def linkedSf(): String = {
-    val d = TempDirs.create("graft_artifacts_link")
-    files(sf).foreach(f =>
-      Files.createSymbolicLink(d.resolve(f.getFileName), f))
-    d.toString
-  }
-
   /** Rewrite `table` of the corpus at `dir` in place, from `rows`. */
   private def rewrite(dir: String, table: String, rows: DataFrame): Unit = {
     val path = s"$dir/$table.parquet"
@@ -153,5 +145,32 @@ class ArtifactsSpec extends SparkSpec {
     val got = SparkEntry.queries("q_hits_converged")(spark, a)
     val fresh = SparkEntry.queries("q_hits_converged")(spark, linkedSf())
     assert(sameRows(got, fresh))
+  }
+
+  test("a returned HITS frame still answers after its trajectory is " +
+      "evicted") {
+    val out = SparkEntry.queries("q_hits")(spark, linkedSf())
+    (0 until Artifacts.Capacity).foreach(i =>
+      Artifacts.value(spark, s"/evict/hits$i", "evict_fill")(Seq(i)))
+    assert(Artifacts.count("hits_trajectory") == 0,
+      "the flood left a HITS trajectory in the registry")
+    assert(sameRows(out, SparkEntry.queries("q_hits")(spark, linkedSf())))
+  }
+
+  test("the catalog-stats rollup follows a rewrite of orders at the " +
+      "same path") {
+    val dir = copyOfSf()
+    def want(): DataFrame = Tables.orders(spark, dir)
+      .groupBy("o_orderpriority")
+      .agg(count(lit(1)).as("n"),
+        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
+          .as("total"))
+    assert(sameRows(sources.Formats.catalogStatsRollup(spark, dir), want()))
+    val before = Tables.orders(spark, dir).count()
+    rewrite(dir, "orders",
+      Tables.orders(spark, sf).filter(col("o_orderkey") % 2 === 0))
+    assert(Tables.orders(spark, dir).count() < before)
+    assert(sameRows(sources.Formats.catalogStatsRollup(spark, dir), want()),
+      "the rollup served the pre-rewrite catalog copy of orders")
   }
 }

@@ -125,9 +125,9 @@ class FormatsSpec extends SparkSpec {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
     // the catalog entry carries the ANALYZE row count, and plans over
     // the table surface it in Statistics (what CBO reads)
-    // recompute the per-sfDir name (not listTables().head): a second
-    // scale factor's table in the shared session must not be picked up
-    val tbl = graft.sources.Formats.catalogTableName(sf)
+    // the live table of sf's store (not listTables().head): another
+    // corpus's table in the shared session must not be picked up
+    val tbl = graft.sources.Formats.catalogOrders(spark, sf)
     // rowCount surfaces in plan Statistics only under CBO — the
     // consumer the ANALYZE stats exist for; scope and restore
     val prev = spark.conf.getOption("spark.sql.cbo.enabled")

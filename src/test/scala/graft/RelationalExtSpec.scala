@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.Relational
+import graft.operators.{HitsTrajectory, Relational}
 
 class RelationalExtSpec extends SparkSpec {
 
@@ -914,17 +914,92 @@ class RelationalExtSpec extends SparkSpec {
     assert(n <= 3, s"warm q_hits ran $n jobs")
   }
 
-  test("HITS on an empty edge graph returns an empty frame") {
-    // the sf0.001 schemas with no lineitem row: no (customer, part) edge
+  /** The sf0.001 schemas with no lineitem row: no (customer, part)
+    * edge.
+    */
+  private def emptyGraphCorpus(): String = {
     val dir = TempDirs.create("graft_hits_empty")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/orders.parquet"),
       dir.resolve("orders.parquet"))
     spark.read.parquet(s"$sf/lineitem.parquet").limit(0)
       .write.parquet(dir.resolve("lineitem.parquet").toString)
+    dir.toString
+  }
+
+  /** Five orders: customer 1 buys parts 101, 102 and a null part;
+    * customer 2 buys 101 and a null part; a null customer buys 102
+    * and 103 (so 103 is reached by no scored hub); customer 4 buys
+    * only a null part; customer 3's order has no line.
+    */
+  private def nullKeysCorpus(): String = {
+    import spark.implicits._
+    val dir = TempDirs.create("graft_hits_nulls").toString
+    Seq((10L, Some(1L)), (20L, Some(2L)), (30L, None), (40L, Some(3L)),
+        (50L, Some(4L)))
+      .toDF("o_orderkey", "o_custkey")
+      .write.parquet(s"$dir/orders.parquet")
+    Seq((10L, Some(101L)), (10L, Some(102L)), (10L, None), (20L, Some(101L)),
+        (20L, None), (30L, Some(102L)), (30L, Some(103L)), (50L, None))
+      .toDF("l_orderkey", "l_partkey")
+      .write.parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  test("HITS on an empty edge graph returns an empty frame") {
+    val dir = emptyGraphCorpus()
     for (key <- Seq("q_hits", "q_hits_converged")) {
-      val out = SparkEntry.queries(key)(spark, dir.toString)
+      val out = SparkEntry.queries(key)(spark, dir)
       assert(out.count() == 0, key)
     }
+  }
+
+  test("HITS: the on-driver and distributed trajectories give bit-" +
+      "identical frames for rounds 1..12 and the same converged stop, " +
+      "on sf0.001, a graph with null keys, and an empty graph") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.LogicalRDD
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3)))
+      .sorted.toSeq
+    for (dir <- Seq(sf, nullKeysCorpus(), emptyGraphCorpus())) {
+      val local = HitsTrajectory(spark, dir)
+      val dist = HitsTrajectory(spark, dir, driverCutoff = -1L)
+      try {
+        for (n <- 1 to 12) {
+          val (l, d) = (Relational.hitsOver(local, n, None)._1,
+            Relational.hitsOver(dist, n, None)._1)
+          if (n == 1) {
+            val (ll, dl) = (l.queryExecution.analyzed.collectLeaves(),
+              d.queryExecution.analyzed.collectLeaves())
+            assert(ll.nonEmpty && ll.forall(_.isInstanceOf[LocalRelation]),
+              s"$dir: not the on-driver path: $ll")
+            assert(dl.nonEmpty && dl.forall(_.isInstanceOf[LogicalRDD]),
+              s"$dir: not the distributed path: $dl")
+          }
+          assert(bits(l) == bits(d), s"$dir round $n")
+        }
+        val (lc, dc) = (Relational.hitsOver(local, 12, Some(1e-6)),
+          Relational.hitsOver(dist, 12, Some(1e-6)))
+        assert((lc._2, lc._3) == ((dc._2, dc._3)), dir)
+        assert(bits(lc._1) == bits(dc._1), dir)
+      } finally { local.close(); dist.close() }
+    }
+  }
+
+  test("HITS on the driver: a cold q_hits_converged runs no more jobs " +
+      "than a cold q_hits, and a warm q_hits runs at most 1 job") {
+    def call(key: String, dir: String): Unit =
+      SparkEntry.queries(key)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
+    val cold = jobsOf(call("q_hits", linkedSf()))
+    val coldConverged = jobsOf(call("q_hits_converged", linkedSf()))
+    assert(coldConverged <= cold,
+      s"cold q_hits_converged ran $coldConverged jobs, cold q_hits $cold")
+    val dir = linkedSf()
+    call("q_hits", dir)
+    val warm = jobsOf(call("q_hits", dir))
+    assert(warm <= 1, s"warm q_hits ran $warm jobs")
   }
 
   test("HITS: a planted bipartite graph replays the two normalized " +

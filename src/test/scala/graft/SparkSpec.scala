@@ -14,6 +14,18 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A fresh corpus dir of symlinks to the sf tables: the same data
+    * under a path no artifact is keyed by yet.
+    */
+  def linkedSf(): String = {
+    val d = TempDirs.create("graft_artifacts_link")
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(sf))
+    try s.iterator().asScala.foreach(f =>
+      java.nio.file.Files.createSymbolicLink(d.resolve(f.getFileName), f))
+    finally s.close()
+    d.toString
+  }
+
   /** Spark jobs `body` starts on this thread, counted by a listener
     * under a private job group. A trailing marker job in its own
     * group proves the listener bus delivered every earlier job start
