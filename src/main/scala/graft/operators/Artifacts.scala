@@ -1,13 +1,17 @@
 package graft.operators
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.{Tables, TempDirs}
 
 /** The one registry of train-once session artifacts: the near-dup
-  * pair list, the HITS trajectory, the BPE encoding, the ANN index
-  * stores, the LM count tables, the layout copies of `Formats`. One
-  * session builds each once and every later key serves from it.
+  * pair list and cluster assignments, the basket pair counts and the
+  * item-to-item neighbour lists, the HITS trajectory, the BPE
+  * encoding, the ANN index stores, the LM count tables, the layout
+  * copies of `Formats`. One session builds each once and every later
+  * key serves from it.
   *
   * An entry's key is (session, corpus dir, corpus fingerprint, kind,
   * params). The fingerprint is [[Tables.fingerprint]], the recursive
@@ -21,7 +25,8 @@ import graft.{Tables, TempDirs}
   *     `clearCache` between bench runs cannot wipe it); release
   *     frees the checkpoint blocks ([[MemoCache.freeLocalCheckpoint]]);
   *   - [[dir]]: the registry creates a [[TempDirs]] store the build
-  *     writes into; release deletes it;
+  *     writes into; release drops the catalog tables whose data lies
+  *     in it, then deletes it;
   *   - [[value]]: a driver value (fold betas, a vocabulary) or a value
   *     that owns its storage; release is `close()` for an
   *     `AutoCloseable`, nothing otherwise.
@@ -35,7 +40,7 @@ import graft.{Tables, TempDirs}
 object Artifacts {
 
   /** Registry-wide entry bound. One corpus's full `graft.Verify` run
-    * creates 26 distinct (kind, params) entries; 64 holds that twice
+    * creates 29 distinct (kind, params) entries; 64 holds that twice
     * over, so no call can evict an artifact its own returned plan
     * reads.
     */
@@ -44,15 +49,33 @@ object Artifacts {
   private final case class Key(spark: SparkSession, sfDir: String,
       files: Seq[(String, Long, Long)], kind: String, params: Seq[Any])
 
-  /** A registry-owned [[TempDirs]] store. */
-  private final case class Store(path: String)
+  /** A registry-owned [[TempDirs]] store of `spark`'s build. */
+  private final case class Store(spark: SparkSession, path: String)
 
   private val entries = new MemoCache[Key, AnyRef](Capacity, _.spark)({
     case df: Dataset[_] => MemoCache.freeLocalCheckpoint(df)
-    case Store(path) => TempDirs.delete(path)
+    case Store(spark, path) => dropTablesIn(spark, path); TempDirs.delete(path)
     case c: AutoCloseable => c.close()
     case _ => ()
   })
+
+  /** Drop the catalog tables whose data lies in the store at `path`
+    * (the `Formats` catalog and bucketed layouts register some): with
+    * the dir gone such a table would read 0 rows or fail.
+    */
+  private def dropTablesIn(spark: SparkSession, path: String): Unit =
+    if (!spark.sparkContext.isStopped) {
+      val root = Paths.get(path).toAbsolutePath
+      val catalog = spark.sessionState.catalog
+      val external = catalog.externalCatalog
+      for (db <- external.listDatabases();
+           t <- external.getTablesByName(db, external.listTables(db))
+           if t.storage.locationUri.exists(u =>
+             u.getScheme == "file" && Paths.get(u).startsWith(root))) {
+        catalog.refreshTable(t.identifier)
+        catalog.dropTable(t.identifier, ignoreIfNotExists = true, purge = false)
+      }
+    }
 
   private def lookup(spark: SparkSession, sfDir: String, kind: String,
       params: Seq[Any])(build: => AnyRef): AnyRef = {
@@ -97,7 +120,7 @@ object Artifacts {
       val d = TempDirs.create(s"graft_$kind").toString
       try build(d)
       catch { case t: Throwable => TempDirs.delete(d); throw t }
-      Store(d)
+      Store(spark, d)
     }.asInstanceOf[Store].path
 
   /** The `kind` value of the corpus at `sfDir`, built once per key;

@@ -223,12 +223,12 @@ object Dedup {
     // one df aggregation feeds both the rare keying and the hot
     // arrays; persisted so the second consumer doesn't redo the
     // full shingle shuffle (one slim (s, df) row per distinct
-    // shingle). Like docShingles, the cache is deliberately left to
-    // Spark's cache manager: repeated calls build the IDENTICAL plan,
-    // which maps onto the same cache entry — one entry per corpus,
-    // not per call.
-    val dfs = sh.groupBy("s").agg(count(lit(1)).as("df"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // shingle). No action runs before the return, so the cache is
+    // scratch: it serves the consuming action (the dedup_pair_stats
+    // checkpoint, or a caller's action on an `*Over` plan) and is
+    // freed when that completes.
+    val dfs = Scratch.persistDeferred(
+      sh.groupBy("s").agg(count(lit(1)).as("df")))
     val keyed = sh.join(dfs.filter(col("df") <= maxDf).select("s"), "s")
     val rareCommon = keyed.as("a").join(keyed.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -259,17 +259,20 @@ object Dedup {
     * map to themselves). This is what a curation pipeline actually
     * consumes: "keep one doc per cluster".
     *
-    * Iterative min-label propagation, driver-coordinated like any
-    * Spark graph algorithm: converges in graph-diameter rounds (dedup
-    * clusters are shallow — near-dup graphs are cliques-ish), each
-    * round one shuffle keyed on doc_id.
+    * The components come from [[componentsOver]] (driver union-find,
+    * or min-label propagation above `DriverEdgeCutoff` edges). The
+    * assignment is an [[Artifacts]] frame per (corpus, threshold,
+    * maxIters): built once per corpus, so every consumer
+    * (`q_dup_token_waste`, the quality, text and pipeline keys) scans
+    * one checkpoint instead of re-running the components.
     */
   def clusters(spark: SparkSession, sfDir: String,
       threshold: Double = 0.5, maxIters: Int = 20): DataFrame =
-    componentsOver(
-      Tables.documents(spark, sfDir).select(col("doc_id")),
-      ngramJaccard(spark, sfDir, threshold).select(col("doc_a"), col("doc_b")),
-      maxIters)
+    Artifacts.frame(spark, sfDir, "dedup_clusters", threshold, maxIters)(
+      componentsOver(
+        Tables.documents(spark, sfDir).select(col("doc_id")),
+        ngramJaccard(spark, sfDir, threshold).select(col("doc_a"), col("doc_b")),
+        maxIters))
 
   /** DUPLICATION TOKEN WASTE (`q_dup_token_waste`) — the compute bill
     * duplication actually costs: every non-canonical member of a
@@ -302,14 +305,16 @@ object Dedup {
 
   /** Same clustering over MinHash-LSH verified pairs — the 100 TB
     * path: candidate edges come from the banded signature join, never
-    * an all-pairs shingle self-join.
+    * an all-pairs shingle self-join. Built once per corpus, like
+    * [[clusters]].
     */
   def clustersLsh(spark: SparkSession, sfDir: String,
       threshold: Double = 0.5, maxIters: Int = 20): DataFrame =
-    componentsOver(
-      Tables.documents(spark, sfDir).select(col("doc_id")),
-      minhashLsh(spark, sfDir, threshold).select(col("doc_a"), col("doc_b")),
-      maxIters)
+    Artifacts.frame(spark, sfDir, "dedup_clusters_lsh", threshold, maxIters)(
+      componentsOver(
+        Tables.documents(spark, sfDir).select(col("doc_id")),
+        minhashLsh(spark, sfDir, threshold).select(col("doc_a"), col("doc_b")),
+        maxIters))
 
   /** Min-label connected components over an arbitrary edge set —
     * adaptive between two strategies, like any production CC:

@@ -1150,34 +1150,39 @@ object Relational {
     * pairs), frequencies broadcast-join back, and the per-item rank
     * runs on bounded `TopKPerKey` heaps — no part-keyed window sort
     * anywhere. Output is O(#parts × topK).
+    *
+    * The neighbour lists are themselves an [[Artifacts]] frame per
+    * (corpus, topK): built once per corpus from the shared basket
+    * artifacts, then every call is one scan of that checkpoint.
     */
   def itemSimilarity(spark: SparkSession, sfDir: String,
-      topK: Int = 3): DataFrame = {
-    // both artifacts come from the shared basket artifacts (see
-    // marketBasket): the incidence is never self-joined, the pair
-    // counts are computed once per session
-    val freq = orderParts(spark, sfDir)
-      .select(explode(col("ps")).as("l_partkey"))
-      .groupBy(col("l_partkey"))
-      .agg(count(lit(1)).as("n_part"))
-    val pairs = basketPairCounts(spark, sfDir)
-    val sym = pairs.select(col("pa"), col("pb"), col("n_ab"))
-      .unionAll(pairs.select(col("pb").as("pa"), col("pa").as("pb"),
-        col("n_ab")))
-    val scored = sym
-      .join(freq.select(col("l_partkey").as("pa"), col("n_part").as("n_a")),
-        "pa")
-      .join(freq.select(col("l_partkey").as("pb"), col("n_part").as("n_b")),
-        "pb")
-      .select(col("pa").as("part_a"), col("pb").as("part_b"), col("n_ab"),
-        (col("n_ab").cast("double") /
-          sqrt(col("n_a").cast("double") * col("n_b").cast("double")))
-          .as("c"))
-    graft.plans.TopKPerKey(scored, Seq("part_a"),
-        Seq(("c", true), ("part_b", false)), topK)
-      .select(col("part_a"), col("part_b"), col("n_ab"),
-        round(col("c"), 6).as("cosine"), col("rnk"))
-  }
+      topK: Int = 3): DataFrame =
+    Artifacts.frame(spark, sfDir, "item_similarity", topK) {
+      // both inputs come from the shared basket artifacts (see
+      // marketBasket): the incidence is never self-joined, the pair
+      // counts are computed once per session
+      val freq = orderParts(spark, sfDir)
+        .select(explode(col("ps")).as("l_partkey"))
+        .groupBy(col("l_partkey"))
+        .agg(count(lit(1)).as("n_part"))
+      val pairs = basketPairCounts(spark, sfDir)
+      val sym = pairs.select(col("pa"), col("pb"), col("n_ab"))
+        .unionAll(pairs.select(col("pb").as("pa"), col("pa").as("pb"),
+          col("n_ab")))
+      val scored = sym
+        .join(freq.select(col("l_partkey").as("pa"), col("n_part").as("n_a")),
+          "pa")
+        .join(freq.select(col("l_partkey").as("pb"), col("n_part").as("n_b")),
+          "pb")
+        .select(col("pa").as("part_a"), col("pb").as("part_b"), col("n_ab"),
+          (col("n_ab").cast("double") /
+            sqrt(col("n_a").cast("double") * col("n_b").cast("double")))
+            .as("c"))
+      graft.plans.TopKPerKey(scored, Seq("part_a"),
+          Seq(("c", true), ("part_b", false)), topK)
+        .select(col("part_a"), col("part_b"), col("n_ab"),
+          round(col("c"), 6).as("cosine"), col("rnk"))
+    }
 
   /** Mutual information between market segment and order priority —
     * the feature-relevance screen (does this categorical column carry

@@ -5,9 +5,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIndex, Artifacts, Dedup, TextAnalysis}
+import graft.operators.{AnnIndex, Artifacts, Dedup, Relational, TextAnalysis}
 
 /** The train-once artifact registry (operators/Artifacts.scala):
   * a corpus rewritten at the same path rebuilds what it serves, an
@@ -51,6 +52,32 @@ class ArtifactsSpec extends SparkSpec {
   private def sameRows(a: DataFrame, b: DataFrame): Boolean =
     a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
+  /** `q_item_similarity` from lineitem alone, with no artifact: the
+    * order-incidence self-join, cosine n_ab / √(n_a·n_b), and the
+    * top 3 per part by (cosine desc, part_b) from a window.
+    */
+  private def itemSimilarityFresh(lineitem: DataFrame): DataFrame = {
+    val inc = lineitem.filter(col("l_partkey").isNotNull)
+      .select("l_orderkey", "l_partkey").distinct()
+    val n = inc.groupBy("l_partkey").agg(count(lit(1)).as("n"))
+    inc.as("a").join(inc.as("b"), col("a.l_orderkey") === col("b.l_orderkey")
+        && col("a.l_partkey") =!= col("b.l_partkey"))
+      .groupBy(col("a.l_partkey").as("part_a"), col("b.l_partkey").as("part_b"))
+      .agg(count(lit(1)).as("n_ab"))
+      .join(n.select(col("l_partkey").as("part_a"), col("n").as("n_a")), "part_a")
+      .join(n.select(col("l_partkey").as("part_b"), col("n").as("n_b")), "part_b")
+      .withColumn("c", col("n_ab").cast("double") /
+        sqrt(col("n_a").cast("double") * col("n_b").cast("double")))
+      .withColumn("rnk", row_number().over(Window.partitionBy("part_a")
+        .orderBy(col("c").desc, col("part_b"))).cast("long"))
+      .filter(col("rnk") <= 3)
+      .select(col("part_a"), col("part_b"), col("n_ab"),
+        round(col("c"), 6).as("cosine"), col("rnk"))
+  }
+
+  private def tableNames(): Set[String] =
+    spark.catalog.listTables().collect().map(_.name).toSet
+
   test("a corpus rewritten at the same path rebuilds its frame " +
       "artifact: the dedup pairs see the planted copy") {
     val dir = copyOfSf()
@@ -65,6 +92,62 @@ class ArtifactsSpec extends SparkSpec {
       .isEmpty, "the planted copy's pair is missing: stale artifact")
     assert(sameRows(after, Dedup.ngramJaccardOver(
       Dedup.shinglesOf(Tables.documents(spark, dir)), 0.5)))
+  }
+
+  test("a corpus rewritten at the same path rebuilds its cluster " +
+      "assignment: dedup_clusters puts the planted copy in its " +
+      "original's cluster") {
+    val dir = copyOfSf()
+    def clusterOf(id: Long): Long = Dedup.clusters(spark, dir)
+      .filter(col("doc_id") === id).head().getAs[Long]("cluster_id")
+    val original = Tables.documents(spark, sf)
+      .orderBy(col("n_chars").desc, col("doc_id")).head()
+      .getAs[Long]("doc_id")
+    val first = clusterOf(original)
+    val planted = docsWithPlantedCopy()
+    val newId = planted.agg(max("doc_id")).head().getLong(0)
+    rewrite(dir, "documents", planted)
+    assert(clusterOf(newId) == first,
+      "the planted copy is not in its original's cluster: stale artifact")
+    val docs = Tables.documents(spark, dir)
+    assert(sameRows(Dedup.clusters(spark, dir), Dedup.componentsOver(
+      docs.select("doc_id"), Dedup.ngramJaccardOver(Dedup.shinglesOf(docs),
+        0.5).select("doc_a", "doc_b"), 20)))
+  }
+
+  test("a corpus rewritten at the same path rebuilds its neighbour " +
+      "lists: q_item_similarity matches a fresh build row for row") {
+    val dir = copyOfSf()
+    val before = Relational.itemSimilarity(spark, dir)
+    assert(sameRows(before, itemSimilarityFresh(Tables.lineitem(spark, dir))))
+    val stale = before.collect().toSet
+    rewrite(dir, "lineitem",
+      Tables.lineitem(spark, sf).filter(col("l_orderkey") % 2 === 0))
+    val after = Relational.itemSimilarity(spark, dir)
+    assert(after.collect().toSet != stale, "served the pre-rewrite lists")
+    assert(sameRows(after, itemSimilarityFresh(Tables.lineitem(spark, dir))))
+  }
+
+  test("released catalog-backed stores drop their tables: a rewritten " +
+      "cat_orders and an evicted bucketed layout") {
+    val before = tableNames()
+    val dir = copyOfSf()
+    sources.Formats.catalogStatsRollup(spark, dir).collect()
+    rewrite(dir, "orders",
+      Tables.orders(spark, sf).filter(col("o_orderkey") % 2 === 0))
+    sources.Formats.catalogStatsRollup(spark, dir).collect()
+    val live = sources.Formats.catalogOrders(spark, dir)
+    assert(tableNames() -- before == Set(live),
+      s"tables left by the rewritten store: ${tableNames() -- before}")
+    assert(spark.table(live).count() == Tables.orders(spark, dir).count())
+    val withCat = tableNames()
+    sources.Formats.bucketedOrdersLineitemJoin(spark, linkedSf()).collect()
+    val bucketed = tableNames() -- withCat
+    assert(bucketed.size == 2, s"two bucketed tables expected: $bucketed")
+    (0 until Artifacts.Capacity).foreach(i =>
+      Artifacts.value(spark, s"/evict/catalog$i", "evict_fill")(Seq(i)))
+    assert((tableNames() & (bucketed + live)).isEmpty,
+      s"evicted stores left tables: ${tableNames() & (bucketed + live)}")
   }
 
   test("a corpus rewritten at the same path rebuilds its dir " +

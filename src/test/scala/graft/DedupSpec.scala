@@ -143,12 +143,37 @@ class DedupSpec extends SparkSpec {
       "driver and distributed components disagree")
   }
 
-  test("a warm dedup_clusters call runs at most 4 Spark jobs") {
+  test("a warm dedup_clusters call runs at most 1 Spark job") {
     def call(): Unit = SparkEntry.queries("dedup_clusters")(spark, sf)
       .write.format("noop").mode("overwrite").save()
-    call() // builds the memoized pair artifact
+    call() // builds the memoized cluster assignment
     val n = jobsOf(call())
-    assert(n <= 4, s"warm dedup_clusters ran $n jobs")
+    assert(n <= 1, s"warm dedup_clusters ran $n jobs")
+  }
+
+  test("dedup_clusters frees the pair stats' (s, df) cache once its " +
+      "build has run") {
+    import graft.operators.Scratch
+    val dir = linkedSf()
+    SparkEntry.queries("dedup_clusters")(spark, dir)
+      .write.format("noop").mode("overwrite").save()
+    Scratch.release(spark)
+    // the df aggregation `pairStats` builds over the corpus shingles
+    val dfs = Dedup.shinglesOf(Tables.documents(spark, dir))
+      .select(col("doc_id"), explode(col("sh")).as("s"))
+      .groupBy("s").agg(count(lit(1)).as("df"))
+    // storageLevel is the cache manager's lookup of the plan
+    assert(dfs.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the (s, df) frame is still cached")
+  }
+
+  test("dedup_clusters over zero-row documents returns an empty frame " +
+      "with the sf0.001 schema") {
+    val want = SparkEntry.queries("dedup_clusters")(spark, sf).schema
+    val got = SparkEntry.queries("dedup_clusters")(spark,
+      emptiedSf("documents.parquet"))
+    assert(got.schema == want, s"${got.schema} vs $want")
+    assert(got.count() == 0)
   }
 
   test("both CC paths collapse a diameter-99 chain to one cluster") {

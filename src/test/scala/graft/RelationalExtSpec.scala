@@ -945,6 +945,23 @@ class RelationalExtSpec extends SparkSpec {
     dir
   }
 
+  test("a warm q_item_similarity call runs at most 1 Spark job") {
+    def call(): Unit = SparkEntry.queries("q_item_similarity")(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    call() // builds the basket artifacts and the neighbour lists
+    val n = jobsOf(call())
+    assert(n <= 1, s"warm q_item_similarity ran $n jobs")
+  }
+
+  test("q_item_similarity over an empty lineitem returns an empty frame " +
+      "with the sf0.001 schema") {
+    val want = SparkEntry.queries("q_item_similarity")(spark, sf).schema
+    val got = SparkEntry.queries("q_item_similarity")(spark,
+      emptyGraphCorpus())
+    assert(got.schema == want, s"${got.schema} vs $want")
+    assert(got.count() == 0)
+  }
+
   test("HITS on an empty edge graph returns an empty frame") {
     val dir = emptyGraphCorpus()
     for (key <- Seq("q_hits", "q_hits_converged")) {

@@ -26,6 +26,35 @@ trait SparkSpec extends AnyFunSuite {
     d.toString
   }
 
+  /** A fresh corpus dir of the sf tables in which each of `emptied`
+    * (file names, e.g. "documents.parquet") keeps its footer schema,
+    * nanos timestamps included, and holds no row group; the other
+    * tables are symlinks.
+    */
+  def emptiedSf(emptied: String*): String = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
+    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = TempDirs.create("graft_emptied_corpus")
+    val files = java.nio.file.Files.list(java.nio.file.Paths.get(sf))
+    try files.iterator().asScala.foreach { p =>
+      val to = dir.resolve(p.getFileName)
+      if (emptied.contains(p.getFileName.toString)) {
+        val in = ParquetFileReader.open(
+          HadoopInputFile.fromPath(new Path(p.toString), conf))
+        val schema = try in.getFooter.getFileMetaData.getSchema
+          finally in.close()
+        val w = new ParquetFileWriter(
+          HadoopOutputFile.fromPath(new Path(to.toString), conf), schema,
+          ParquetFileWriter.Mode.CREATE, 0L, 0)
+        w.start()
+        w.end(java.util.Collections.emptyMap[String, String]())
+      } else java.nio.file.Files.createSymbolicLink(to, p)
+    } finally files.close()
+    dir.toString
+  }
+
   /** Spark jobs `body` starts on this thread, counted by a listener
     * under a private job group. A trailing marker job in its own
     * group proves the listener bus delivered every earlier job start

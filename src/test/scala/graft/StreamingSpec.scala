@@ -837,36 +837,14 @@ class StreamingSpec extends SparkSpec {
 
   test("the split-feed memory-sink stream keys run on a corpus with no " +
       "events and no documents, keeping their sf0.001 output schemas") {
-    import java.nio.file.{Files, Paths}
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter}
-    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-    val conf = spark.sparkContext.hadoopConfiguration
-    // sf0.001's tables; events and documents keep their footer schema
-    // (nanos timestamps included) and hold no row group
-    val dir = TempDirs.create("graft_stream_empty_corpus")
-    val files = Files.list(Paths.get(sf))
-    try files.iterator().asScala.foreach { p =>
-      val to = dir.resolve(p.getFileName)
-      if (Set("events.parquet", "documents.parquet")(p.getFileName.toString)) {
-        val in = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(p.toString), conf))
-        val schema = try in.getFooter.getFileMetaData.getSchema
-          finally in.close()
-        val w = new ParquetFileWriter(
-          HadoopOutputFile.fromPath(new Path(to.toString), conf), schema,
-          ParquetFileWriter.Mode.CREATE, 0L, 0)
-        w.start()
-        w.end(java.util.Collections.emptyMap[String, String]())
-      } else Files.createSymbolicLink(to, p)
-    } finally files.close()
-    assert(Tables.events(spark, dir.toString).count() == 0)
-    assert(Tables.documents(spark, dir.toString).count() == 0)
+    val dir = emptiedSf("events.parquet", "documents.parquet")
+    assert(Tables.events(spark, dir).count() == 0)
+    assert(Tables.documents(spark, dir).count() == 0)
     Seq("stream_theta", "stream_kll", "stream_cms", "stream_moments",
       "stream_topk", "stream_dim_join", "stream_msprt", "stream_funnel_ci",
       "stream_drift", "stream_near_dup").foreach { key =>
       val want = SparkEntry.queries(key)(spark, sf).schema
-      val got = SparkEntry.queries(key)(spark, dir.toString)
+      val got = SparkEntry.queries(key)(spark, dir)
       assert(got.schema == want, s"$key: ${got.schema} vs $want")
       got.count()
     }
